@@ -125,6 +125,35 @@ object Bench {
     } else System.getProperty("java.io.tmpdir")
   })
 
+  /** `s` as a canonical path (the raw string if it cannot resolve). */
+  private[graft] def canonSf(s: String): String =
+    // IOException only (round-16 VERDICT nitpick): a fatal VM error
+    // here must propagate, not be silently mapped to the raw string
+    try new java.io.File(s).getCanonicalPath
+    catch { case _: java.io.IOException => s }
+
+  /** The file a run writes its full-precision line to. Only a full run
+    * at the canonical artifact's own scale factor writes
+    * BENCH_FULL.json. A diverted artifact is keyed by the CANONICAL
+    * path, not just the basename — two different dirs sharing a
+    * basename must not collide on one suffixed file (round-15 ADVICE
+    * #2). A SUBSET run (named-query args, the iteration aid) diverts
+    * too, keyed the same way: it would otherwise overwrite the
+    * canonical artifact with a map holding only the selected queries
+    * (caught round 18 — a 3-query subset draw left BENCH_FULL.json
+    * with 3 queries), and subset runs at two scale factors must not
+    * share one file either.
+    */
+  private[graft] def artifactName(sfDir: String, subset: Boolean,
+      sameSf: Boolean): String =
+    if (sameSf && !subset) "BENCH_FULL.json"
+    else {
+      val c = canonSf(sfDir)
+      val tag = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(c))
+      val kind = if (subset) "subset_" else ""
+      s"BENCH_FULL_$kind${new java.io.File(c).getName}_$tag.json"
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -218,11 +247,6 @@ object Bench {
     // differently (relative vs absolute, trailing slash) must not read
     // as a different sf — that would silently stop updating the
     // canonical artifact forever.
-    def canonSf(s: String): String =
-      // IOException only (round-16 VERDICT nitpick): a fatal VM error
-      // here must propagate, not be silently mapped to the raw string
-      try new java.io.File(s).getCanonicalPath
-      catch { case _: java.io.IOException => s }
     val (priorQ: Map[String, Double], sameSf: Boolean) = try {
       val p = java.nio.file.Paths.get("BENCH_FULL.json")
       if (!java.nio.file.Files.exists(p)) (Map.empty[String, Double], true)
@@ -255,22 +279,7 @@ object Bench {
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${
         jmap(results)},"min_with_prior":${jmap(minMerged)},"min_total":$minTotal,"sf":"$sfDir"}"""
-    // Diverted artifact keyed by the CANONICAL path, not just the
-    // basename — two different dirs sharing a basename must not
-    // collide on one suffixed file (round-15 ADVICE #2). A SUBSET run
-    // (named-query args, the iteration aid) diverts too: it would
-    // otherwise overwrite the canonical artifact with a map holding
-    // only the selected queries, silently destroying every other
-    // query's min-window entry (caught round 18 — a 3-query subset
-    // draw left BENCH_FULL.json with 3 queries).
-    val artifact =
-      if (sameSf && args.isEmpty) "BENCH_FULL.json"
-      else if (args.nonEmpty) "BENCH_FULL_subset.json"
-      else {
-        val c = canonSf(sfDir)
-        val tag = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(c))
-        s"BENCH_FULL_${new java.io.File(c).getName}_$tag.json"
-      }
+    val artifact = artifactName(sfDir, subset = args.nonEmpty, sameSf = sameSf)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), full)
     println(full)
     // Compact form last: `q131_audio_energy` -> `q131`; shrink decimal

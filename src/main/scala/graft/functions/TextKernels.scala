@@ -834,10 +834,15 @@ object TextKernels {
     * nbits interpreted CodegenFallback folds PER ROW, each
     * materializing a sequence array (the single hottest path in q136
     * — guide §4); contract: |sv[i]| <= ~1e6·dims keeps every
-    * accumulator far from Long overflow, like [[dotLong]].
+    * accumulator far from Long overflow, like [[dotLong]]. A null
+    * element makes every per-bit fold NULL (each bit sums every
+    * element), and `NULL > 0` takes the ELSE branch, so the fold's code
+    * is 0 — the kernel returns 0 too.
     */
   def srpCode(sv: ArrayData, nbits: Int): Long = {
     val n = sv.numElements()
+    var k = 0
+    while (k < n) { if (sv.isNullAt(k)) return 0L; k += 1 }
     var code = 0L
     var b = 0
     while (b < nbits) {
@@ -865,21 +870,44 @@ object TextKernels {
     * inner dots accumulate in index order, `array_max` over a
     * non-empty list is a plain max. The SQL form is a triple-nested
     * CodegenFallback evaluating 512 interpreted multiplies and
-    * allocating ~9 arrays PER PAIR (guide §4). Contract: both arrays
-    * hold >= 64 elements (the 64-dim embedding pin) at the 1e-6
-    * quantized scale, so no product chain approaches Long overflow.
+    * allocating ~9 arrays PER PAIR (guide §4). Values at the 1e-6
+    * quantized scale keep every product chain far from Long overflow.
+    *
+    * Returns NULL (a null box) when either array has fewer than 64
+    * elements: the fold indexes up to element 63, and a kernel SQL can
+    * reach must not read past its input. Null elements follow the
+    * fold: a null in query sub-vector i makes every dot of row i NULL,
+    * so its `array_max` and the total are NULL; a null in doc
+    * sub-vector j makes only the dots against j NULL, which
+    * `array_max` skips — the total is NULL only when every doc
+    * sub-vector holds a null.
     */
-  def maxsimLong(qq: ArrayData, dq: ArrayData): Long = {
+  def maxsimLong(qq: ArrayData, dq: ArrayData): java.lang.Long = {
+    if (qq.numElements() < 64 || dq.numElements() < 64) return null
+    var k = 0
+    while (k < 64) { if (qq.isNullAt(k)) return null; k += 1 }
+    // bit j set: doc sub-vector j is null-free
+    var docs = 0
+    var j = 0
+    while (j < 8) {
+      var t = 0
+      while (t < 8 && !dq.isNullAt(j * 8 + t)) t += 1
+      if (t == 8) docs |= 1 << j
+      j += 1
+    }
+    if (docs == 0) return null
     var total = 0L
     var i = 0
     while (i < 8) {
       var best = Long.MinValue
-      var j = 0
+      j = 0
       while (j < 8) {
-        var s = 0L
-        var t = 0
-        while (t < 8) { s += qq.getLong(i * 8 + t) * dq.getLong(j * 8 + t); t += 1 }
-        if (s > best) best = s
+        if ((docs & (1 << j)) != 0) {
+          var s = 0L
+          var t = 0
+          while (t < 8) { s += qq.getLong(i * 8 + t) * dq.getLong(j * 8 + t); t += 1 }
+          if (s > best) best = s
+        }
         j += 1
       }
       total += best

@@ -442,17 +442,24 @@ case class SrpCodeExpr(child: Expression, nbits: Int)
   * — the codegen twin of the triple-nested
   * `aggregate(... array_max(transform(... aggregate(...))))` HOF fold
   * (512 interpreted multiplies and ~9 array allocations per pair).
+  * NULL when either array holds fewer than 64 elements, and where the
+  * fold is NULL on null elements.
   */
 case class MaxSimExpr(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
   override def prettyName: String = "maxsim_i64"
   override protected def nullSafeEval(l: Any, r: Any): Any =
     TextKernels.maxsimLong(
       l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextKernels.maxsimLong($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val r = ctx.freshName("maxsim")
+      s"""java.lang.Long $r = graft.functions.TextKernels.maxsimLong($a, $b);
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }""".stripMargin
+    })
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

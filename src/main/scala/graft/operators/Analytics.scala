@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Staging, Tables}
+import graft.{Scope, Staging, Tables}
 
 /** Serving-side analytics, layout and graph shapes that complete the
   * window / join / layout surface (reference §2.7 window extension
@@ -230,7 +230,7 @@ object Analytics {
     * scalar (like the paged source's total probe), not a per-row
     * driver loop.
     */
-  val q104_pagerank: Q = (spark, dir) => {
+  val q104_pagerank: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val Total = 1000000000000L
     // The derived graph is persisted: each iteration references it, and
@@ -240,13 +240,13 @@ object Analytics {
     // fromScratch = true IS the semantics here: q104 is the
     // full-recompute baseline q113's incremental path is measured
     // against — same [[BipartiteGraph]] formula, opposite flag.
-    val (cs, deg) = BipartiteGraph.graph(spark, dir, fromScratch = true)
+    val (cs, deg) = BipartiteGraph.derived(sc, spark, dir)
     // no fanOut here: the pair cache comes out of the distinct's own
     // 32-partition shuffle (persisted plans keep their width), so the
     // edge side is already wide — fanOut is for the staged-parquet
     // readers whose scan yields O(1) splits
     val edges = BipartiteGraph.edgesOf(cs)
-    val edgesDeg = edges.join(deg, "src").persist()
+    val edgesDeg = sc.persist(edges.join(deg, "src"))
     // planning-time scalar off the persisted per-node table (one row
     // per src — no extra distinct over the edge-sized side)
     val n = deg.count()
@@ -260,16 +260,8 @@ object Analytics {
         .groupBy($"dst").agg(sum($"contrib").as("cs"))
         .select($"dst".as("node"), (lit(base) + expr("(85 * cs) DIV 100")).as("rank"))
     }
-    // drop-on-return (the round-9 unified cache policy): materialize
-    // the node-sized result, then release the query-local caches so no
-    // dead block set outlives the query — an embedding application
-    // gets predictable memory, and bench sessions see no cross-query
-    // cache interference
-    val out = ranked.localCheckpoint().orderBy($"node")
-    edgesDeg.unpersist(blocking = false)
-    cs.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    out
+    // seal the node-sized result; the graph caches die with the scope
+    sc.seal(ranked).orderBy($"node")
   }
 
   /** Incremental PageRank: a NEW batch of orders (the q85
@@ -297,7 +289,7 @@ object Analytics {
     * recompute bit-for-bit (also pinned Spark-vs-Spark in
     * AnalyticsSpec).
     */
-  val q113_incremental_pagerank: Q = (spark, dir) => {
+  val q113_incremental_pagerank: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val Total = 1000000000000L
     // the single derivation site, over the base/delta order split
@@ -312,22 +304,23 @@ object Analytics {
     val baseDir = Staging.stage(s"q113_base_graph#$dir",
       Tables.fingerprint(dir, "lineitem") + "|" +
         Tables.fingerprint(dir, "orders")) { d =>
-        val bp = pairs($"o_orderkey" % 10 =!= 0).persist()
-        bp.write.parquet(s"$d/pairs")
-        BipartiteGraph.degreesOf(bp).write.parquet(s"$d/degree")
-        bp.unpersist(blocking = false)
+        Scope { st =>
+          val bp = st.persist(pairs($"o_orderkey" % 10 =!= 0))
+          bp.write.parquet(s"$d/pairs")
+          BipartiteGraph.degreesOf(bp).write.parquet(s"$d/degree")
+        }
       }
     val basePairs = spark.read.parquet(s"$baseDir/pairs")
     val baseDeg = spark.read.parquet(s"$baseDir/degree")
     // delta-sized: only genuinely new customer-supplier relationships
-    val newPairs = pairs($"o_orderkey" % 10 === 0)
-      .join(basePairs, Seq("c", "s"), "left_anti").persist()
+    val newPairs = sc.persist(pairs($"o_orderkey" % 10 === 0)
+      .join(basePairs, Seq("c", "s"), "left_anti"))
     val deltaDeg = BipartiteGraph.degreesOf(newPairs)
-    val mergedDeg = baseDeg.union(deltaDeg)
-      .groupBy($"src").agg(sum($"degree").as("degree")).persist()
+    val mergedDeg = sc.persist(baseDeg.union(deltaDeg)
+      .groupBy($"src").agg(sum($"degree").as("degree")))
     val mergedCs = basePairs.union(newPairs)
     val edges = BipartiteGraph.edgesOf(mergedCs)
-    val edgesDeg = edges.join(mergedDeg, "src").persist()
+    val edgesDeg = sc.persist(edges.join(mergedDeg, "src"))
     val n = mergedDeg.count()
     require(n > 0, s"q113: empty merged customer-supplier graph under $dir")
     val base = Total * 15 / 100 / n
@@ -339,8 +332,7 @@ object Analytics {
         .groupBy($"dst").agg(sum($"contrib").as("cs"))
         .select($"dst".as("node"), (lit(base) + expr("(85 * cs) DIV 100")).as("rank"))
     }
-    Relational.dropAfter(ranked, newPairs, mergedDeg, edgesDeg)
-      .orderBy($"node")
+    sc.seal(ranked).orderBy($"node")
   }
 
   /** Schema-evolution append: union two generations of the customer
@@ -462,7 +454,7 @@ object Analytics {
     * + anti-join left side) — at scale that stage's input is
     * persisted, which also keeps its observation single-fire.
     */
-  private[graft] def curationStages(spark: SparkSession, dir: String,
+  private[graft] def curationStages(sc: Scope, spark: SparkSession, dir: String,
       tap: (String, DataFrame) => DataFrame = (_, d) => d): Seq[(String, DataFrame)] = {
     import spark.implicits._
     val rawDocs = Tables.load(spark, dir, "documents")
@@ -470,7 +462,7 @@ object Analytics {
       size(regexp_extract_all(lower($"text"), lit(pat), lit(0)))
     val docs = tap("input", rawDocs)
     val split17 = tap("holdout_split", docs.where($"doc_id" % 17 =!= 0))
-    val lang = tap("lang_en", split17
+    val lang = tap("lang_en", sc.persist(split17
       .withColumn("c_en", markers("\\b(the|and|of|is|to)\\b"))
       .withColumn("c_de", markers("\\b(der|die|das|und|ist)\\b"))
       .withColumn("c_fr", markers("\\b(le|la|les|et|est)\\b"))
@@ -479,16 +471,16 @@ object Analytics {
         $"c_en" >= $"c_es" && $"c_en" > 0)
       // persisted: five downstream funnel prefixes re-derive this
       // stage (and its four regex scans) without a cache
-      .select(rawDocs.columns.map(col): _*).persist())
+      .select(rawDocs.columns.map(col): _*)))
     val qual = tap("quality",
       lang.where(TextOps.qualityLadder($"text") >= 3)
         .select(rawDocs.columns.map(col): _*))
     // persisted: the decontamination stage consumes it twice (gram
     // stream + anti-join left) and the funnel counts once more
-    val deduped = tap("dedup", qual
+    val deduped = tap("dedup", sc.persist(qual
       .withColumn("rn", row_number().over(
         Window.partitionBy(md5($"text")).orderBy($"doc_id")))
-      .where($"rn" === 1).select(rawDocs.columns.map(col): _*).persist())
+      .where($"rn" === 1).select(rawDocs.columns.map(col): _*)))
     def grams(d: DataFrame) = d
       .select($"doc_id", split(trim($"text"), "\\s+").as("w"))
       .where(size($"w") >= 5)
@@ -506,15 +498,15 @@ object Analytics {
       "quality" -> qual, "dedup" -> deduped, "decontaminated" -> clean)
   }
 
-  val q109_curation_pipeline: Q = (spark, dir) => {
+  val q109_curation_pipeline: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val stages = curationStages(spark, dir)
+    val stages = curationStages(sc, spark, dir)
     val out = stages.zipWithIndex.map { case ((name, d), i) =>
       d.agg(count(lit(1)).as("n_docs"))
         .select(lit(i + 1).cast("int").as("stage_no"),
           lit(name).as("stage"), $"n_docs")
     }.reduce(_ union _).orderBy($"stage_no")
-    Relational.dropAfter(out, stages.map(_._2): _*)
+    sc.seal(out)
   }
 
   /** Pearson correlation per group (quantity vs extended price) from
@@ -1032,17 +1024,16 @@ object Analytics {
     * corpus size. The distinct-value grouping handles ties exactly
     * (every tie pair contributes exactly 1 to 2U).
     */
-  val q179_mann_whitney: Q = (spark, dir) => {
+  val q179_mann_whitney: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    // localCheckpoint: pv feeds the band-total collect AND the banded
+    // checkpointed: pv feeds the band-total collect AND the banded
     // cumulative scan — without it the events aggregate runs twice
-    val pv = Tables.load(spark, dir, "events")
+    val pv = sc.ckpt(Tables.load(spark, dir, "events")
       .select($"value", ($"user_id" % 2 === 0).as("isA"),
         expr("CAST(value AS BIGINT) DIV 16").as("bucket"))
       .groupBy($"bucket", $"value")
       .agg(sum(when($"isA", 1L).otherwise(0L)).as("ca"),
-        sum(when($"isA", 0L).otherwise(1L)).as("cb"))
-      .localCheckpoint()
+        sum(when($"isA", 0L).otherwise(1L)).as("cb")))
     var accB = 0L
     var accA = 0L
     val bases = pv.groupBy($"bucket")
@@ -1088,13 +1079,12 @@ object Analytics {
     * (no half self-join), checkpointed so the corpus is scanned once
     * (the q167 stance), totals broadcast from a 1-row aggregate.
     */
-  val q171_chi_square: Q = (spark, dir) => {
+  val q171_chi_square: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val cells = Tables.load(spark, dir, "events")
+    val cells = sc.ckpt(Tables.load(spark, dir, "events")
       .groupBy($"event_type")
       .agg(sum(when($"user_id" % 2 === 0, 1L).otherwise(0L)).as("oa"),
-        sum(when($"user_id" % 2 === 0, 0L).otherwise(1L)).as("ob"))
-      .localCheckpoint()
+        sum(when($"user_id" % 2 === 0, 0L).otherwise(1L)).as("ob")))
     val tot = cells.agg(sum($"oa").as("ca"), sum($"ob").as("cb"),
       sum($"oa" + $"ob").as("n"))
     def contrib(o: String, c: String) =
@@ -1260,11 +1250,10 @@ object Analytics {
     * rank window runs post-LIMIT on 10 rows. The base table is
     * scanned once; nothing downstream exceeds key cardinality.
     */
-  val q157_skew_profile: Q = (spark, dir) => {
+  val q157_skew_profile: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val counts = Tables.load(spark, dir, "lineitem")
-      .groupBy($"l_suppkey").agg(count(lit(1)).as("cnt"))
-      .persist()
+    val counts = sc.persist(Tables.load(spark, dir, "lineitem")
+      .groupBy($"l_suppkey").agg(count(lit(1)).as("cnt")))
     val stats = counts.agg(
       count(lit(1)).as("n_keys"), sum($"cnt").as("n_rows"),
       max($"cnt").as("max_cnt"), sum($"cnt" * $"cnt").as("sum_sq"))
@@ -1277,7 +1266,7 @@ object Analytics {
       .select($"rank", $"l_suppkey".as("key"), $"cnt",
         $"n_keys", $"n_rows", $"max_cnt", $"sum_sq")
       .orderBy($"rank")
-    Relational.dropAfter(out, counts)
+    sc.seal(out)
   }
 
   /** Unordered co-occurrence pairs of `s` values sharing a `c` key,
@@ -1304,10 +1293,10 @@ object Analytics {
   /** q133's stage streams — the ONE derivation site, exposed
     * `private[graft]` so StageProbe times each stage of the actual
     * query lineage (the q139 attribution discipline) instead of a
-    * drifting copy. Returned frames are lazy; `e`/`o` carry the
-    * query-local persists the full query uses (the caller unpersists).
+    * drifting copy. Returned frames are lazy; `e`/`o` are the
+    * query-local persists the full query uses, registered in `sc`.
     */
-  private[graft] def knnTriangleStages(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def knnTriangleStages(sc: Scope, spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
         DataFrame, DataFrame) = {
     import spark.implicits._
@@ -1321,7 +1310,7 @@ object Analytics {
     // few-MB parquet scan yields O(1) splits, but every consumer
     // below (degree agg, chunk join) starts with a shuffle, so
     // parallelism recovers at session width immediately.
-    val cs = BipartiteGraph.graph(spark, dir, fromScratch = false)._1
+    val cs = BipartiteGraph.staged(spark, dir)._1
       .select(expr("c DIV 2").as("c"), expr("(s - 1) DIV 2").as("s"))
     // Co-occurrence pairs via the ADAPTIVE CHUNKED self-join (the q67
     // interval-join device): each customer's rows are hashed into
@@ -1346,21 +1335,21 @@ object Analytics {
         Window.partitionBy($"u").orderBy($"w".desc, $"nbr")))
       .where($"rn" <= 8).select($"u", $"nbr")
     // mutual edge: both directed picks exist -> canonical pair seen twice
-    val e = topk.select(least($"u", $"nbr").as("a"), greatest($"u", $"nbr").as("b"))
+    val e = sc.persist(topk
+      .select(least($"u", $"nbr").as("a"), greatest($"u", $"nbr").as("b"))
       .groupBy($"a", $"b").agg(count(lit(1)).as("cnt"))
-      .where($"cnt" === 2).select($"a", $"b").persist()
+      .where($"cnt" === 2).select($"a", $"b"))
     val deg = e.select($"a".as("n")).union(e.select($"b".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("d"))
     // total (degree, id) order packed into one BIGINT rank
-    val o = e.join(deg.select($"n".as("a"), $"d".as("da")), "a")
+    val o = sc.persist(e.join(deg.select($"n".as("a"), $"d".as("da")), "a")
       .join(deg.select($"n".as("b"), $"d".as("db")), "b")
       .selectExpr(
         "CASE WHEN da * 1000000000 + a < db * 1000000000 + b THEN a ELSE b END AS lo",
         "CASE WHEN da * 1000000000 + a < db * 1000000000 + b THEN b ELSE a END AS hi",
         """CASE WHEN da * 1000000000 + a < db * 1000000000 + b
           |     THEN db * 1000000000 + b ELSE da * 1000000000 + a END AS rhi"""
-          .stripMargin)
-      .persist()
+          .stripMargin))
     val wedge = o.as("x").join(o.as("y"),
         $"x.lo" === $"y.lo" && $"x.rhi" < $"y.rhi")
       .select($"x.hi".as("v"), $"y.hi".as("w"))
@@ -1368,9 +1357,9 @@ object Analytics {
     (pw, topk, e, o, deg, wedge, tri)
   }
 
-  val q133_knn_triangles: Q = (spark, dir) => {
+  val q133_knn_triangles: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val (_, _, e, o, deg, wedge, _) = knnTriangleStages(spark, dir)
+    val (_, _, e, o, deg, wedge, _) = knnTriangleStages(sc, spark, dir)
     // one pass over the wedge stream counts wedges AND closures: the
     // triangle test is a LEFT join against the (unique-keyed) edge
     // set, so count(*) = wedges and count(matched) = triangles —
@@ -1379,14 +1368,10 @@ object Analytics {
     // through the wedge stage; this folds the second pass away)
     val wt = wedge.join(o, $"v" === $"lo" && $"w" === $"hi", "left_outer")
       .agg(count(lit(1)).as("n_wedges"), count($"lo").as("n_triangles"))
-    val out = deg.agg(count(lit(1)).as("n_nodes")).crossJoin(
+    sc.seal(deg.agg(count(lit(1)).as("n_nodes")).crossJoin(
         e.agg(count(lit(1)).as("n_edges")))
       .crossJoin(wt)
-      .select($"n_nodes", $"n_edges", $"n_wedges", $"n_triangles")
-      .localCheckpoint() // 1 row — drop the query-local caches below
-    e.unpersist(blocking = false)
-    o.unpersist(blocking = false)
-    out
+      .select($"n_nodes", $"n_edges", $"n_wedges", $"n_triangles"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** Corpus-curation operators: the staging, hygiene and serving-prep
   * stages that sit around the filters ([[TextOps]], [[Training]]) in a
@@ -531,17 +531,16 @@ object Curation {
     * q194 precedent).
     */
   val q196_winnow_split_leakage: Q = (spark, dir) =>
-    winnowSplitLeakage(spark, dir, seal = true)
+    Scope(winnowSplitLeakage(spark, dir, _))
 
-  /** `seal = false`: lazy plan (no checkpoints) for the spec's shape pin. */
+  /** Under [[Scope.Lazy]]: the plain plan for the spec's shape pin. */
   private[graft] def winnowSplitLeakage(spark: SparkSession, dir: String,
-      seal: Boolean): DataFrame = {
+      sc: Scope): DataFrame = {
     import spark.implicits._
-    val selLazy = Dedup.winnowSel(Tables.load(spark, dir, "documents"))
-      .withColumn("split", splitOf($"source"))
-    // checkpointed when executing: feeds the fp fold AND the doc join-back
-    val sel = if (seal) selLazy.localCheckpoint() else selLazy
-    val pairsLazy = sel.select($"fp", $"split").distinct()
+    // checkpointed: feeds the fp fold AND the doc join-back
+    val sel = sc.ckpt(Dedup.winnowSel(Tables.load(spark, dir, "documents"))
+      .withColumn("split", splitOf($"source")))
+    val pairs = sc.ckpt(sel.select($"fp", $"split").distinct()
       .groupBy($"fp").agg(collect_set($"split").as("splits"))
       .where(size($"splits") >= 2)
       .select($"fp", explode(expr(
@@ -549,8 +548,7 @@ object Curation {
           "transform(slice(splits, i + 2, size(splits)), " +
           "y -> named_struct('lo', least(x, y), 'hi', greatest(x, y)))))"))
         .as("p"))
-      .select($"fp", $"p.lo".as("split_lo"), $"p.hi".as("split_hi"))
-    val pairs = if (seal) pairsLazy.localCheckpoint() else pairsLazy
+      .select($"fp", $"p.lo".as("split_lo"), $"p.hi".as("split_hi")))
     val census = pairs.groupBy($"split_lo", $"split_hi")
       .agg(count(lit(1)).as("n_fps")) // one row per fp per pair
     val docs = pairs.join(sel.select($"fp", $"doc_id", $"split"), "fp")
@@ -560,7 +558,7 @@ object Curation {
         countDistinct(when($"split" === $"split_hi", $"doc_id")).as("n_docs_hi"))
     val out = census.join(docs, Seq("split_lo", "split_hi"))
       .orderBy($"split_lo", $"split_hi")
-    if (seal) Relational.dropAfter(out, sel, pairs) else out
+    sc.seal(out)
   }
 
   val q122_group_split: Q = (spark, dir) => {
@@ -729,21 +727,21 @@ object Curation {
     * sensitive domain, not the data), and every join below the base
     * aggregates is broadcast. At 100 TB: same two exchanges.
     */
-  val q188_t_closeness: Q = (spark, dir) => {
+  val q188_t_closeness: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val ocnt = Tables.load(spark, dir, "orders")
       .groupBy($"o_custkey".as("c_custkey")).agg(count(lit(1)).as("s_ord_c"))
-    val base = Tables.load(spark, dir, "customer")
+    // feeds the ordered AND categorical cell tables
+    val base = sc.ckpt(Tables.load(spark, dir, "customer")
       .select($"c_custkey", $"c_nationkey".as("nation"),
         floor($"c_acctbal" / 5000).as("bal_band"),
         $"c_mktsegment".as("segment"))
       .join(ocnt, Seq("c_custkey"), "left")
       .select($"nation", $"bal_band", $"segment",
-        coalesce($"s_ord_c", lit(0L)).as("s_ord"))
-      .localCheckpoint() // feeds the ordered AND categorical cell tables
-    val cells = base.groupBy($"nation", $"bal_band", $"s_ord")
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds grp + global dist + the grid join
+        coalesce($"s_ord_c", lit(0L)).as("s_ord")))
+    // feeds grp + global dist + the grid join
+    val cells = sc.ckpt(base.groupBy($"nation", $"bal_band", $"s_ord")
+      .agg(count(lit(1)).as("c")))
     val grp = cells.groupBy($"nation", $"bal_band").agg(sum($"c").as("ng"))
     val gd = cells.groupBy($"s_ord").agg(sum($"c").as("gc"))
     // unpartitioned window is BOUNDED: gd has one row per s_ord value
@@ -782,8 +780,9 @@ object Curation {
       .withColumn("t_close",
         $"t_ord_x1e6" <= 150000 && $"t_cat_x1e6" <= 200000)
       .orderBy($"nation", $"bal_band")
-    // seal the QI-domain-sized rows; release the base and cell ckpts
-    Relational.dropAfter(out, base, cells)
+    // seal the QI-domain-sized rows; the base and cell ckpts die
+    // with the scope
+    sc.seal(out)
   }
 
   /** q189: proportional quota allocation by largest remainder (the
@@ -849,11 +848,11 @@ object Curation {
     * the term sum — is domain-bounded (sources × langs), broadcast
     * joins only. At 100 TB: same single exchange.
     */
-  val q184_mutual_info: Q = (spark, dir) => {
+  val q184_mutual_info: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val cells = Tables.load(spark, dir, "documents")
-      .groupBy($"source", $"lang").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds margins + totals + the term sum
+    // feeds margins + totals + the term sum
+    val cells = sc.ckpt(Tables.load(spark, dir, "documents")
+      .groupBy($"source", $"lang").agg(count(lit(1)).as("c")))
     val cs = cells.groupBy($"source").agg(sum($"c").as("cs"))
     val cl = cells.groupBy($"lang").agg(sum($"c").as("cl"))
     val tot = cells.agg(sum($"c").as("n"),
@@ -883,8 +882,9 @@ object Curation {
         round(expr(s"IF(n_langs = 1, NULL, (CAST(mi_sum AS DOUBLE) / n)" +
           s" / (CAST(${lnq("n")} AS DOUBLE) - CAST(hl_sum AS DOUBLE) / n))"), 6)
           .as("uncertainty"))
-    // seal the 1-row result, release the (source × lang) cell ckpt
-    Relational.dropAfter(out, cells)
+    // seal the 1-row result; the (source × lang) cell ckpt dies with
+    // the scope
+    sc.seal(out)
   }
 
   /** Dataset card (Gebru et al. 2021 "Datasheets for Datasets"): the
@@ -988,26 +988,27 @@ object Curation {
     * is a measured row, not an argument.
     */
   private[graft] def curateCardDiff(spark: SparkSession, dir: String,
-      exact: Boolean): DataFrame = {
+      exact: Boolean): DataFrame = Scope { sc =>
     import spark.implicits._
-    val stages = Analytics.curationStages(spark, dir)
+    val stages = Analytics.curationStages(sc, spark, dir)
     val clean = stages.last._2
     // cardOf consumes its input via THREE aggregation paths plus a
     // window — over the raw parquet that is three cheap rescans, but
     // over the curated lineage each path would re-run the funnel tail
     // and the gopher dominance rule (StageProbe: 4.1 s vs 0.6 s for
-    // the same card over raw docs). Materialize once; released below.
-    val curated = clean.join(
+    // the same card over raw docs). Materialize once.
+    val curated = sc.ckpt(clean.join(
       TextOps.gopherRules(clean).where($"keep" === 1).select($"doc_id"),
-      Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+      Seq("doc_id"), "left_semi"))
     val before = cardOf(Tables.load(spark, dir, "documents"), exact)
     val after = cardOf(curated, exact)
       .select($"source", $"n_docs".as("n_docs_after"),
         $"n_tokens".as("n_tokens_after"), $"dup_docs".as("dup_docs_after"),
         $"gini_x1000".as("gini_after"), $"p50_chars".as("p50_after"),
         $"p90_chars".as("p90_after"))
-    val out = before.join(after, Seq("source"), "left")
+    // seal: the funnel's persisted stages and the curated checkpoint
+    // are dead once the 14-column diff is materialized
+    sc.seal(before.join(after, Seq("source"), "left")
       .withColumn("n_docs_after", coalesce($"n_docs_after", lit(0L)))
       .withColumn("n_tokens_after", coalesce($"n_tokens_after", lit(0L)))
       .withColumn("dup_docs_after", coalesce($"dup_docs_after", lit(0L)))
@@ -1016,13 +1017,7 @@ object Curation {
         $"n_tokens", $"n_tokens_after", $"dup_docs", $"dup_docs_after",
         $"gini_x1000", $"gini_after",
         $"p50_chars", $"p50_after", $"p90_chars", $"p90_after")
-      .orderBy($"source")
-      .localCheckpoint()
-    // drop-on-return: the funnel's persisted stages and the curated
-    // checkpoint are dead once the 14-column diff is materialized
-    stages.foreach(_._2.unpersist(blocking = false))
-    graft.operators.Relational.releaseCkpt(curated)
-    out
+      .orderBy($"source"))
   }
 
   /** 2-D skyline (Pareto frontier, Börzsönyi et al. ICDE'01) over the

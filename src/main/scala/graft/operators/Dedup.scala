@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.GraftFunctions._
 
 /** Deduplication operators for training-data pipelines, each built for
@@ -150,15 +150,14 @@ object Dedup {
     * where source-only blocking is O(corpus^2) and this stays
     * O(sum of block^2).
     */
-  val q31_dedup_ngram: Q = (spark, dir) => {
+  val q31_dedup_ngram: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     // persisted: both join sides derive from docs, and the gram_set
     // evaluation (hash + sort per doc) would otherwise run twice in
     // the one DAG (the q104/q67 shared-subtree lesson)
-    val docs = Tables.load(spark, dir, "documents")
+    val docs = sc.persist(Tables.load(spark, dir, "documents")
       .select($"doc_id", gram_set($"text", 3).as("grams"), $"source",
-        $"n_chars", floor(log2(greatest($"n_chars", lit(1)))).as("bkt"))
-      .persist()
+        $"n_chars", floor(log2(greatest($"n_chars", lit(1)))).as("bkt")))
     val a = docs.select($"doc_id".as("id_a"), $"grams".as("grams_a"),
       $"source", $"n_chars".as("len_a"), $"bkt".as("bkt_a"))
     val b = docs.select($"doc_id".as("id_b"), $"grams".as("grams_b"),
@@ -183,8 +182,7 @@ object Dedup {
     // (ids + three ints, the gram arrays are projected away), the
     // kernel evaluates exactly ONCE per candidate (no filter below
     // the projection), and the sort samples the materialized rows.
-    // Released on return like every query-local cache.
-    val verified = a.join(b, Seq("source", "bkt_a"))
+    val verified = sc.ckpt(a.join(b, Seq("source", "bkt_a"))
       .where(($"bkt_a" === $"bkt_b" && $"id_a" < $"id_b") ||
         $"bkt_a" === $"bkt_b" + 1)
       .where(greatest($"len_a", $"len_b") <= least($"len_a", $"len_b") * 2)
@@ -194,14 +192,12 @@ object Dedup {
           $"grams_a", $"grams_b",
           expr("CAST(GREATEST((3 * (size(grams_a) + size(grams_b)) + 12) DIV 13, 1) AS INT)"))
           .as("inter"),
-        size($"grams_a").as("na"), size($"grams_b").as("nb"))
-      .localCheckpoint()
-    val out = verified
+        size($"grams_a").as("na"), size($"grams_b").as("nb")))
+    sc.seal(verified
       .where($"inter" >= 0)
       .select($"doc_a", $"doc_b",
         ($"inter".cast("double") / ($"na" + $"nb" - $"inter")).as("jac"))
-      .orderBy($"doc_a", $"doc_b")
-    Relational.dropAfter(out, docs, verified)
+      .orderBy($"doc_a", $"doc_b"))
   }
 
   /** q139: exact set-similarity self-join (token-set Jaccard >= 0.9)
@@ -235,24 +231,22 @@ object Dedup {
     * shuffles) and finishes map-side.
     */
   /** q139's streams — `toks` the persisted token explode, `ranked`
-    * the checkpointed vocab rank table (returned so the caller can
-    * release its blocks on seal — round-9 ADVICE #5), `dt` the
+    * the checkpointed vocab rank table (both registered in `sc`), `dt` the
     * per-doc token-rank pairs, `prefix` each doc's rare-first prefix
     * rows (doc_id, trank, t, rn). Exposed `private[graft]` so
     * ScaleAudit can profile the candidate join-key (trank) bucket
     * occupancy over the SAME derivation the query joins on, instead
     * of a drifting copy.
     */
-  private[graft] def setsimStreams(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def setsimStreams(sc: Scope, spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.LongType
-    val toks = Tables.load(spark, dir, "documents")
+    val toks = sc.persist(Tables.load(spark, dir, "documents")
       .select($"doc_id", explode(array_distinct(
-        expr("filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)"))).as("tok"))
-      .persist()
+        expr("filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)"))).as("tok")))
     // Global rare-first order WITHOUT a single-partition window: the
     // (df, tok) range-sort stays distributed and `zipWithIndex`
     // assigns the global ordinal per partition (the q140/F12 device).
@@ -269,9 +263,9 @@ object Dedup {
     // whole token stream on a string key; checkpointing the
     // vocab-sized table gives AQE its real size and the join
     // broadcasts (measured 16.4 s -> 7.6 s for the query at sf0.1)
-    val ranked = spark.createDataFrame(
+    val ranked = sc.ckpt(spark.createDataFrame(
       sortedV.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) },
-      vSchema).localCheckpoint()
+      vSchema))
     val dt = toks.join(ranked, "tok").select($"doc_id", $"trank")
     val sizes = dt.groupBy($"doc_id").agg(count(lit(1)).as("t"))
     val wDoc = Window.partitionBy($"doc_id").orderBy($"trank")
@@ -282,15 +276,15 @@ object Dedup {
     (toks, ranked, dt, prefix)
   }
 
-  val q139_setsim_join: Q = (spark, dir) => setsimJoin(spark, dir, seal = true)
+  val q139_setsim_join: Q = (spark, dir) => Scope(setsimJoin(spark, dir, _))
 
-  /** `seal = false` returns the lazy plan (pre checkpoint-then-drop)
-    * so PlanInvariantsSpec can pin the join shape.
+  /** Under [[Scope.Lazy]] this returns the plain plan, so
+    * PlanInvariantsSpec can pin the join shape.
     */
   private[graft] def setsimJoin(spark: org.apache.spark.sql.SparkSession,
-      dir: String, seal: Boolean): DataFrame = {
+      dir: String, sc: Scope): DataFrame = {
     import spark.implicits._
-    val (toks, ranked, dt, prefix) = setsimStreams(spark, dir)
+    val (_, _, dt, prefix) = setsimStreams(sc, spark, dir)
     // PPJoin position filter: at a pair's EARLIEST common token the
     // remaining overlap is at most 1 + min(t_a - rn_a, t_b - rn_b)
     // (everything common sits at or after that token in both rare-
@@ -327,13 +321,12 @@ object Dedup {
     // prefix lineage ran once per side and the chunking LOST ground
     // (measured 6.0 -> 8.1 s before this cache; 6.0 -> 5.5 s with it,
     // the residual wall being the genuine 3.3M-row candidate distinct
-    // + verify volume). Released on seal.
+    // + verify volume).
     val wTok = org.apache.spark.sql.expressions.Window.partitionBy($"trank")
-    val px = prefix
+    val px = sc.persist(prefix
       .withColumn("d", count(lit(1)).over(wTok))
       .withColumn("nc", expr("CAST((d + 255) DIV 256 AS INT)"))
-      .withColumn("ch", pmod(hash($"doc_id"), $"nc"))
-      .persist()
+      .withColumn("ch", pmod(hash($"doc_id"), $"nc")))
     val aSide = px.select($"trank", $"doc_id".as("da"), $"t".as("ta"),
       $"rn".as("ra"), $"ch".as("ca"), explode(expr("sequence(ch, nc - 1)")).as("cb"))
     val bSide = px.select($"trank", $"doc_id".as("db"), $"t".as("tb"),
@@ -359,25 +352,21 @@ object Dedup {
       .withColumn("inter", graft.functions.GraftFunctions.sorted_inter_atleast(
         $"ta", $"tb", expr("CAST((9 * (na + nb) + 18) DIV 19 AS INT)")))
       .select($"doc_a", $"doc_b", $"inter", $"na", $"nb")
-    def finish(v: DataFrame): DataFrame = v
+    // Round-17 (optimization): materialize the verify pass before
+    // the presentation sort — the global orderBy's range partitioner
+    // SAMPLES its child by executing it, so the candidate
+    // distinct + verify kernel ran twice per query (the q31
+    // finding; StageProbe measured the resample as ~60% of q31's
+    // wall). One small row per candidate (arrays projected away),
+    // kernel evaluated exactly once (no filter below the
+    // projection); the lazy scope keeps the full plan so the spec's
+    // join-shape pin still sees the candidate join.
+    sc.seal(sc.ckpt(scored)
       .where($"inter" >= 0)
       .select($"doc_a", $"doc_b", $"inter",
         ($"na" + $"nb" - $"inter").as("uni"),
         expr("(CAST(inter AS BIGINT) * 1000) DIV (na + nb - inter)").as("jac_x1000"))
-      .orderBy($"doc_a", $"doc_b")
-    if (seal) {
-      // Round-17 (optimization): materialize the verify pass before
-      // the presentation sort — the global orderBy's range partitioner
-      // SAMPLES its child by executing it, so the candidate
-      // distinct + verify kernel ran twice per query (the q31
-      // finding; StageProbe measured the resample as ~60% of q31's
-      // wall). One small row per candidate (arrays projected away),
-      // kernel evaluated exactly once (no filter below the
-      // projection); the lazy seal=false twin keeps the full plan so
-      // the spec's join-shape pin still sees the candidate join.
-      val verified = scored.localCheckpoint()
-      Relational.dropAfter(finish(verified), toks, ranked, px, verified)
-    } else finish(scored)
+      .orderBy($"doc_a", $"doc_b"))
   }
 
   /** q140: sorted-neighborhood dedup (Hernandez & Stolfo, SIGMOD'95)
@@ -482,21 +471,20 @@ object Dedup {
     * partitioned, so at 100 TB you run q59 (IVF-cell-blocked, linear
     * in sum-of-cell^2) and audit its recall against this on samples.
     */
-  val q58_dedup_embedding: Q = (spark, dir) => {
+  val q58_dedup_embedding: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val emb = Tables.load(spark, dir, "embeddings")
     val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("emb_b"))
     // materialized before the presentation sort (the q31/q139
     // range-sampling finding): the all-pairs cosine pass is the
     // query's whole cost and the orderBy's sampling job re-ran it
-    val scored = emb.select($"vec_id".as("vec_a"), $"embedding".as("emb_a"))
+    val scored = sc.ckpt(emb.select($"vec_id".as("vec_a"), $"embedding".as("emb_a"))
       .crossJoin(broadcast(b))
       .where($"vec_a" < $"vec_b")
       .withColumn("cos", cosine_sim($"emb_a", $"emb_b"))
       .where($"cos" >= 0.45)
-      .select($"vec_a", $"vec_b", $"cos")
-      .localCheckpoint()
-    Relational.dropAfter(scored.orderBy($"vec_a", $"vec_b"), scored)
+      .select($"vec_a", $"vec_b", $"cos"))
+    sc.seal(scored.orderBy($"vec_a", $"vec_b"))
   }
 
   /** Embedding-cosine near-duplicate pairs at scale (SemDeDup shape):
@@ -616,12 +604,12 @@ object Dedup {
     * is Σ probe_cnt·post_cnt per gram, over PROBED grams only) on the
     * same derivation the query joins, not a drifting copy.
     */
-  private[graft] def containmentStreams(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def containmentStreams(sc: Scope, spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val (tn, td) = (7, 10) // tau = 0.7
-    val sh = Tables.load(spark, dir, "documents")
+    val sh = sc.persist(Tables.load(spark, dir, "documents")
       .select($"doc_id",
         expr("filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)").as("ws"))
       .where(size($"ws") >= 3)
@@ -631,8 +619,7 @@ object Dedup {
         // everywhere else, so the order is free to choose here
         """sort_array(array_distinct(transform(sequence(0, size(ws) - 3),
           |  i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))))""".stripMargin
-          .replace("\n", " ")).as("grams"))
-      .persist()
+          .replace("\n", " ")).as("grams")))
     val dg = sh.select($"doc_id", explode($"grams").as("g"))
     val dfs = dg.groupBy($"g").agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy($"doc_id").orderBy($"df", $"g")
@@ -648,14 +635,14 @@ object Dedup {
   }
 
   val q144_containment_join: Q = (spark, dir) =>
-    containmentJoin(spark, dir, seal = true)
+    Scope(containmentJoin(spark, dir, _))
 
-  /** `seal = false`: lazy plan for the spec's shape pin. */
+  /** Under [[Scope.Lazy]]: the plain plan for the spec's shape pin. */
   private[graft] def containmentJoin(spark: org.apache.spark.sql.SparkSession,
-      dir: String, seal: Boolean): DataFrame = {
+      dir: String, sc: Scope): DataFrame = {
     import spark.implicits._
     val (tn, td) = (7, 10) // tau = 0.7
-    val (sh, probeA, fullB) = containmentStreams(spark, dir)
+    val (sh, probeA, fullB) = containmentStreams(sc, spark, dir)
     val cands = probeA.join(fullB, "g")
       .where($"doc_a" =!= $"doc_b" &&
         $"tb" * td >= $"ta" * tn &&
@@ -672,18 +659,14 @@ object Dedup {
         graft.functions.GraftFunctions.sorted_inter_atleast($"ga", $"gb",
           expr(s"CAST(($tn * size(ga) + ${td - 1}) DIV $td AS INT)")).as("inter"),
         size($"ga").as("ta"))
-    def finish(v: DataFrame): DataFrame = v
+    // materialize the verify pass before the presentation sort (the
+    // q31/q139 range-sampling finding) — kernel once per candidate,
+    // sort samples the checkpointed rows; the lazy scope keeps the plan
+    sc.seal(sc.ckpt(scored)
       .where($"inter" >= 0)
       .withColumn("cont_x1000",
         expr("(CAST(inter AS BIGINT) * 1000) DIV ta"))
-      .orderBy($"doc_a", $"doc_b")
-    if (seal) {
-      // materialize the verify pass before the presentation sort (the
-      // q31/q139 range-sampling finding) — kernel once per candidate,
-      // sort samples the checkpointed rows; lazy twin keeps the plan
-      val verified = scored.localCheckpoint()
-      Relational.dropAfter(finish(verified), sh, verified)
-    } else finish(scored)
+      .orderBy($"doc_a", $"doc_b"))
   }
 
   /** q185: duplicated-segment scrub — exact substring dedup at fixed
@@ -714,9 +697,9 @@ object Dedup {
     * All-integer output; one DIV at the end (same denominator both
     * engines).
     */
-  val q185_segment_scrub: Q = (spark, dir) => {
+  val q185_segment_scrub: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val occ = Tables.load(spark, dir, "documents")
+    val occ = sc.ckpt(Tables.load(spark, dir, "documents")
       .select($"doc_id", $"source",
         expr("filter(split(lower(trim(text)), '\\\\s+'), w -> length(w) > 0)")
           .as("ws"))
@@ -727,8 +710,7 @@ object Dedup {
         expr("concat_ws(' ', slice(ws, i * 10 + 1, 10))").as("seg"),
         expr("CAST(size(slice(ws, i * 10 + 1, 10)) AS BIGINT)").as("w"))
       .groupBy($"seg", $"doc_id", $"source")
-      .agg(count(lit(1)).as("occ"), sum($"w").as("wsum"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("occ"), sum($"w").as("wsum")))
     val dfq = occ.groupBy($"seg").agg(count(lit(1)).as("df"))
     occ.join(dfq, "seg")
       .groupBy($"source")
@@ -776,11 +758,9 @@ object Dedup {
     * (AQE-splittable boilerplate keys, never a window), then doc- and
     * source-grain folds. All-integer output.
     */
-  val q191_cross_segment_scrub: Q = (spark, dir) => {
-    val occ = crossSegOcc(Tables.load(spark, dir, "documents"))
-      .localCheckpoint() // feeds df AND the join-back fold
-    val out = crossSegReadout(occ)
-    Relational.dropAfter(out, occ)
+  val q191_cross_segment_scrub: Q = (spark, dir) => Scope { sc =>
+    // checkpointed: feeds df AND the join-back fold
+    sc.seal(crossSegReadout(sc.ckpt(crossSegOcc(Tables.load(spark, dir, "documents")))))
   }
 
   /** q191's per-(segment, doc) occurrence table over both grids — ONE
@@ -876,22 +856,22 @@ object Dedup {
     *    join back is fingerprint-keyed (AQE-splittable boilerplate
     *    keys), then doc- and source-grain folds. All-integer output.
     */
-  val q192_winnow_scrub: Q = (spark, dir) => winnowScrub(spark, dir, seal = true)
+  val q192_winnow_scrub: Q = (spark, dir) => Scope(winnowScrub(spark, dir, _))
 
-  /** `seal = false`: lazy plan (no checkpoint) for the spec's shape pin. */
+  /** Under [[Scope.Lazy]]: the plain plan for the spec's shape pin. */
   private[graft] def winnowScrub(spark: org.apache.spark.sql.SparkSession,
-      dir: String, seal: Boolean): DataFrame =
-    winnowReadout(winnowSel(Tables.load(spark, dir, "documents")), seal)
+      dir: String, sc: Scope): DataFrame =
+    winnowReadout(winnowSel(Tables.load(spark, dir, "documents")), sc)
 
   /** q192's readout over a selected-rows table: df re-aggregated from
     * it (rows per-(fp, doc) distinct), fingerprint-keyed equi-join
     * back, doc- and source-grain folds. All-integer output. Shared by
     * the batch query and the streaming twin's spec pins.
     */
-  private[graft] def winnowReadout(selLazy: DataFrame, seal: Boolean): DataFrame = {
+  private[graft] def winnowReadout(selLazy: DataFrame, sc: Scope): DataFrame = {
     import selLazy.sparkSession.implicits._
-    // checkpointed when executing: feeds df AND the join-back fold
-    val sel = if (seal) selLazy.localCheckpoint() else selLazy
+    // checkpointed: feeds df AND the join-back fold
+    val sel = sc.ckpt(selLazy)
     val dfq = sel.groupBy($"fp").agg(count(lit(1)).as("df"))
     val docs = sel.join(dfq, "fp")
       .groupBy($"doc_id", $"source")
@@ -905,7 +885,7 @@ object Dedup {
         sum($"flag").as("dup_docs"),
         expr("CAST(sum(dup_fps) * 1000 DIV sum(fps) AS BIGINT)").as("dup_x1000"))
       .orderBy($"source")
-    if (seal) Relational.dropAfter(out, sel) else out
+    sc.seal(out)
   }
 
   /** q192's word-level winnowing selection — the distinct selected
@@ -971,11 +951,12 @@ object Dedup {
     * exact truth: every doc q197 finds sharing a >= 15-word run with
     * >= 2 other docs must be flagged by q192's winnowing scrub.
     */
-  val q197_exact_dup_runs: Q = (spark, dir) => {
+  val q197_exact_dup_runs: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val k = 15
-    val grams = Tables.load(spark, dir, "documents")
+    // checkpointed: feeds df AND the join-back
+    val grams = sc.ckpt(Tables.load(spark, dir, "documents")
       .select($"doc_id", $"source",
         expr("filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
           .as("ws"))
@@ -983,8 +964,7 @@ object Dedup {
         s"if(size(ws) >= $k, transform(sequence(1, size(ws) - ${k - 1})," +
           s" i -> named_struct('i', i, 'g', concat_ws(' ', slice(ws, i, $k))))," +
           " array())")).as("p"))
-      .select($"doc_id", $"source", $"nw", $"p.i".as("i"), $"p.g".as("g"))
-      .localCheckpoint() // feeds df AND the join-back
+      .select($"doc_id", $"source", $"nw", $"p.i".as("i"), $"p.g".as("g")))
     val dup = grams.groupBy($"g")
       .agg(countDistinct($"doc_id").as("df")).where($"df" >= 2)
     val pos = grams.join(dup, "g").select($"doc_id", $"source", $"nw", $"i")
@@ -1009,7 +989,7 @@ object Dedup {
         expr("CAST(sum(covered) * 1000 DIV sum(nw) AS BIGINT)")
           .as("covered_x1000"))
       .orderBy($"source")
-    Relational.dropAfter(out, grams)
+    sc.seal(out)
   }
 
   /** q164: winnowing fingerprint overlap join (Schleimer-Wilkerson-Aiken
@@ -1150,19 +1130,16 @@ object Dedup {
     * signal here, and the per-fp cost is already domain-bounded.
     */
   val q193_source_contamination: Q = (spark, dir) =>
-    sourceContamination(spark, dir, seal = true)
+    Scope(sourceContamination(spark, dir, _))
 
-  /** `seal = false`: lazy plan (no persist/checkpoint) for the spec's
-    * shape pin.
-    */
+  /** Under [[Scope.Lazy]]: the plain plan for the spec's shape pin. */
   private[graft] def sourceContamination(spark: org.apache.spark.sql.SparkSession,
-      dir: String, seal: Boolean): DataFrame = {
+      dir: String, sc: Scope): DataFrame = {
     import spark.implicits._
     val d = Tables.load(spark, dir, "documents")
-    val sfpLazy = winnowFp(d)
+    val sfp = sc.persist(winnowFp(d)
       .join(d.select($"doc_id", $"source"), "doc_id")
-      .select($"source", $"h").distinct()
-    val sfp = if (seal) sfpLazy.persist() else sfpLazy
+      .select($"source", $"h").distinct())
     val sizes = sfp.groupBy($"source").agg(count(lit(1)).as("n"))
     val pairs = sfp.groupBy($"h").agg(sort_array(collect_set($"source")).as("ss"))
       .where(size($"ss") >= 2)
@@ -1172,20 +1149,14 @@ object Dedup {
           |    struct(a AS sa, b AS sb))))""".stripMargin)).as("p"))
       .groupBy($"p.sa".as("sa"), $"p.sb".as("sb"))
       .agg(count(lit(1)).as("shared"))
-    val out = pairs
+    // |sources|² rows — seal, then the fp stream dies with the scope
+    sc.seal(pairs
       .join(broadcast(sizes.toDF("sa", "na")), "sa")
       .join(broadcast(sizes.toDF("sb", "nb")), "sb")
       .select($"sa", $"sb", $"shared", $"na", $"nb",
         expr("CAST(shared * 1000 DIV LEAST(na, nb) AS BIGINT)")
           .as("contain_x1000"))
-      .orderBy($"sa", $"sb")
-    if (!seal) out
-    else {
-      // |sources|² rows — seal, then release the fp stream
-      val sealed0 = out.localCheckpoint()
-      sfp.unpersist(blocking = false)
-      sealed0
-    }
+      .orderBy($"sa", $"sb"))
   }
 
   /** Shared CTE prefix computing every doc's winnowed fingerprint set

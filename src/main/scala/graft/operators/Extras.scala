@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** Additional operator coverage rounding out SURVEY §2: human-readable
   * size formatting (F13), regex predicates (P6), distinct aggregation,
@@ -377,10 +377,11 @@ object Extras {
     */
   /** The keyed sides of the chunked interval self-join — exposed so
     * ScaleSpec can prove the per-key-group bound on a synthetic hot
-    * hour with a small chunkRows. See [[q67_interval_join]].
+    * hour with a small chunkRows. See [[q67_interval_join]]. Both
+    * sides read one segment table persisted in `sc`.
     */
-  private[graft] def intervalJoinSides(spark: SparkSession, dir: String,
-      bucketUs: Long, chunkRows: Long): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def intervalJoinSides(sc: Scope, spark: SparkSession, dir: String,
+      bucketUs: Long, chunkRows: Long): (DataFrame, DataFrame) = {
     import spark.implicits._
     val binned = sessionFrame(spark, dir)
       .select($"user_id", $"session_id", $"start_us", $"end_us",
@@ -400,10 +401,9 @@ object Extras {
     // the whole sessionFrame (window + agg) executes twice in the one
     // DAG (the q104 lesson; CacheManager keys on the canonicalized
     // plan, so repeat invocations share the entry)
-    val seg = binned.join(broadcast(chunkCounts), Seq("bucket"), "left")
+    val seg = sc.persist(binned.join(broadcast(chunkCounts), Seq("bucket"), "left")
       .withColumn("nc", coalesce($"nc", lit(1)))
-      .withColumn("chunk", pmod(hash($"user_id", $"session_id"), $"nc"))
-      .persist()
+      .withColumn("chunk", pmod(hash($"user_id", $"session_id"), $"nc")))
     val a = seg
       .select($"user_id".as("user_a"), $"session_id".as("session_a"),
         $"start_us".as("start_a"), $"end_us".as("end_a"), $"bucket",
@@ -412,17 +412,18 @@ object Extras {
       .select($"user_id".as("user_b"), $"session_id".as("session_b"),
         $"start_us".as("start_b"), $"end_us".as("end_b"), $"bucket",
         explode(sequence(lit(0), $"chunk")).as("ca"), $"chunk".as("cb"))
-    (a, b, seg)
+    (a, b)
   }
 
   /** Joins [[intervalJoinSides]] on the compound key, refines with the
     * exact overlap predicate, dedups to one emission per pair, and
-    * canonicalizes output columns to user-ascending.
+    * canonicalizes output columns to user-ascending. Sealed in `sc`
+    * (the plain plan under [[Scope.Lazy]]).
     */
   private[graft] def intervalJoinOn(spark: SparkSession, dir: String,
-      bucketUs: Long, chunkRows: Long, seal: Boolean = true): DataFrame = {
+      bucketUs: Long, chunkRows: Long, sc: Scope): DataFrame = {
     import spark.implicits._
-    val (a, b, seg) = intervalJoinSides(spark, dir, bucketUs, chunkRows)
+    val (a, b) = intervalJoinSides(sc, spark, dir, bucketUs, chunkRows)
     val out = a.join(b, Seq("bucket", "ca", "cb"))
       .where(($"ca" < $"cb" || $"user_a" < $"user_b") &&
         $"user_a" =!= $"user_b" &&
@@ -441,12 +442,12 @@ object Extras {
       .select($"p.u1".as("user_a"), $"p.s1".as("session_a"),
         $"p.u2".as("user_b"), $"p.s2".as("session_b"), $"overlap_us")
       .orderBy($"user_a", $"session_a", $"user_b", $"session_b")
-    if (seal) Relational.dropAfter(out, seg) else out
+    sc.seal(out)
   }
 
   val q67_interval_join: Q = (spark, dir) =>
     // per-task refine bound = 1024² comparisons
-    intervalJoinOn(spark, dir, bucketUs = 3600L * 1000000L, chunkRows = 1024L)
+    Scope(intervalJoinOn(spark, dir, bucketUs = 3600L * 1000000L, chunkRows = 1024L, _))
 
   /** Exact interpolated percentiles per group (Spark `percentile` and
     * DuckDB `quantile_cont` implement the same linear-interpolation

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** Graph-traversal shapes over the derived customer–supplier graph
   * (the q104/q113 bipartite node encoding: customers at `2k`,
@@ -23,13 +23,13 @@ import graft.Tables
   * degree table its endpoint counts, the edge list its symmetric
   * union. Three consumers, one formula:
   *
-  *  - `graph(fromScratch = true)` — q104's full recompute: derives
+  *  - `derived` — q104's full recompute: derives
   *    inline, paying the lineitem×orders join + distinct every time.
   *    That cost IS the point: q104 is the baseline q113's
   *    incremental path is measured against, so the baseline/derived
-  *    relationship is structural (same formula, different flag), not
+  *    relationship is structural (same formula, different source), not
   *    copy-discipline across three hand-maintained copies.
-  *  - `graph(fromScratch = false)` — the fingerprint-staged parquet
+  *  - `staged` — the fingerprint-staged parquet
   *    artifact ([[graft.Staging]], the q99/q113 economics) that every
   *    traversal query (q134 BFS, q145 PPR, q156 LP) starts from: a
   *    steady-state pipeline holds the pair index next to the data
@@ -92,39 +92,35 @@ object BipartiteGraph {
       key: String = "src"): DataFrame =
     edges.repartition(spark.sessionState.conf.numShufflePartitions, col(key))
 
-  /** (pairs, degree): derived inline (`fromScratch = true`, the q104
-    * baseline; both persisted — the caches are the full-recompute
-    * economics q104 documents) or read from the fingerprint-staged
-    * artifact (`fromScratch = false`, every traversal query).
+  /** (pairs, degree) derived inline, both persisted in `sc` — the q104
+    * baseline; the caches are the full-recompute economics q104
+    * documents.
     */
-  def graph(spark: SparkSession, dir: String,
-      fromScratch: Boolean): (DataFrame, DataFrame) =
-    if (fromScratch) {
-      val cs = pairs(spark, dir).persist()
-      (cs, degreesOf(cs).persist())
-    } else {
-      val fp = Tables.fingerprint(dir, "lineitem") + "|" +
-        Tables.fingerprint(dir, "orders")
-      val d = graft.Staging.stage(s"graph_full#$dir", fp) { d =>
-        val cs = pairs(spark, dir).persist()
+  def derived(sc: Scope, spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val cs = sc.persist(pairs(spark, dir))
+    (cs, sc.persist(degreesOf(cs)))
+  }
+
+  /** (pairs, degree) read from the fingerprint-staged artifact — every
+    * traversal query.
+    */
+  def staged(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val fp = Tables.fingerprint(dir, "lineitem") + "|" +
+      Tables.fingerprint(dir, "orders")
+    val d = graft.Staging.stage(s"graph_full#$dir", fp) { d =>
+      Scope { sc =>
+        val cs = sc.persist(pairs(spark, dir))
         cs.write.parquet(s"$d/pairs")
         degreesOf(cs).write.parquet(s"$d/degree")
-        cs.unpersist(blocking = false)
       }
-      (spark.read.parquet(s"$d/pairs"), spark.read.parquet(s"$d/degree"))
     }
+    (spark.read.parquet(s"$d/pairs"), spark.read.parquet(s"$d/degree"))
+  }
 }
 
 object GraphOps {
   import Relational.Q
-
-  /** Every traversal query (q134 BFS, q145 PPR, q156 LP) reads the
-    * fingerprint-staged graph; q104 deliberately derives from scratch
-    * — see [[BipartiteGraph.graph]], the single derivation site.
-    */
-  private def stagedGraph(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    BipartiteGraph.graph(spark, dir, fromScratch = false)
 
   /** q134: multi-source BFS hop histogram, 4 relaxation rounds.
     *
@@ -153,13 +149,13 @@ object GraphOps {
     * rounds are provable no-ops).
     */
   private[graft] def bfsHops(spark: org.apache.spark.sql.SparkSession,
-      dir: String, earlyExit: Boolean): org.apache.spark.sql.DataFrame = {
+      dir: String, earlyExit: Boolean): org.apache.spark.sql.DataFrame = Scope { sc =>
     import spark.implicits._
-    val (cs, deg) = stagedGraph(spark, dir)
+    val (cs, deg) = BipartiteGraph.staged(spark, dir)
     // no fanOut: BFS rounds are frontier-join + distinct over a
     // shrinking frontier — task-scheduling overhead outweighs map
     // parallelism at any scale where the frontier fits a broadcast
-    val edges = BipartiteGraph.edgesOf(cs).persist()
+    val edges = sc.persist(BipartiteGraph.edgesOf(cs))
     val nodes = deg.select($"src".as("node"))
     val seeds = nodes.where($"node" <= 20 && $"node" % 2 === 0)
     // ONE init job: the observe() metric rides the seed checkpoint's
@@ -167,8 +163,8 @@ object GraphOps {
     // own (the round-17 shape paid a limit(1) probe plus a separate
     // eager checkpoint job)
     val initObs = org.apache.spark.sql.Observation()
-    val init = seeds.select($"node", lit(0).as("hop"))
-      .observe(initObs, count(lit(1)).as("n")).localCheckpoint()
+    val init = sc.ckpt(seeds.select($"node", lit(0).as("hop"))
+      .observe(initObs, count(lit(1)).as("n")))
     require(initObs.get("n").asInstanceOf[Long] > 0,
       s"q134: no seed nodes under $dir")
     // frontier BFS: each round joins edges against only the nodes
@@ -196,27 +192,22 @@ object GraphOps {
       // persist (lazy), not localCheckpoint: the labels checkpoint
       // below materializes it in the same job, and the next round's
       // edge join reads it from cache — no extra eager job per round
-      val newFrontier = reached.join(labels, Seq("node"), "left_anti")
-        .select($"node", lit(h).as("hop"))
-        .persist()
+      val newFrontier = sc.persist(reached.join(labels, Seq("node"), "left_anti")
+        .select($"node", lit(h).as("hop")))
       val obs = org.apache.spark.sql.Observation()
-      val next = labels.union(newFrontier)
-        .observe(obs, count(when($"hop" === h, lit(1))).as("nf"))
-        .localCheckpoint()
+      val next = sc.ckpt(labels.union(newFrontier)
+        .observe(obs, count(when($"hop" === h, lit(1))).as("nf")))
       frontierEmpty = obs.get("nf").asInstanceOf[Long] == 0L
       // the eager checkpoint above just materialized newFrontier AND
-      // re-stored the previous label set — the prior round's frontier
-      // cache and labels checkpoint are both dead now (RDD-level
-      // release for the checkpoint: Dataset.unpersist never sees it)
-      Relational.releaseCkpt(labels)
+      // re-stored the previous label set — the prior round's labels
+      // checkpoint and frontier cache are both dead now
+      sc.release(labels, frontier)
       labels = next
-      if (frontier ne init) frontier.unpersist(blocking = false)
       frontier = newFrontier
     }
     // everything downstream reads only the checkpointed labels (and a
     // fresh deg scan) — the edge cache and final frontier are dead
-    if (frontier ne init) frontier.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
+    sc.release(frontier, edges)
     val hist = labels.groupBy($"hop")
       .agg(count(lit(1)).as("n_nodes"), sum($"node").as("sum_node"))
     val unreached = nodes.join(labels, Seq("node"), "left_anti")
@@ -228,7 +219,7 @@ object GraphOps {
       .orderBy($"hops")
     // seal: the hop histogram is tiny; the node-sized labels
     // checkpoint must not be what the caller inherits
-    Relational.dropAfter(out, labels)
+    sc.seal(out)
   }
 
   /** q145: personalized PageRank (PPR) — the seeded variant of q104:
@@ -250,15 +241,14 @@ object GraphOps {
     * node-keyed union-aggregate) preserves that sparsity; no
     * full-node-set scan anywhere after seed selection.
     */
-  val q145_ppr: Q = (spark, dir) => {
+  val q145_ppr: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val Total = 1000000000000L
-    val (cs, deg) = stagedGraph(spark, dir)
+    val (cs, deg) = BipartiteGraph.staged(spark, dir)
     val edges = BipartiteGraph.fanOut(spark, BipartiteGraph.edgesOf(cs))
-    val edgesDeg = edges.join(deg, "src").persist()
-    val seeds = deg.select($"src".as("node"))
-      .where($"node" % 2 === 0 && expr("(node DIV 2) % 10 = 0"))
-      .persist()
+    val edgesDeg = sc.persist(edges.join(deg, "src"))
+    val seeds = sc.persist(deg.select($"src".as("node"))
+      .where($"node" % 2 === 0 && expr("(node DIV 2) % 10 = 0")))
     val nS = seeds.count()
     require(nS > 0, s"q145: no seed customers under $dir")
     val sbase = Total * 15 / 100 / nS
@@ -272,14 +262,9 @@ object GraphOps {
         .unionByName(seeds.select($"node", lit(sbase).as("v")))
         .groupBy($"node").agg(sum($"v").as("rank"))
     }
-    // materialize the final sparse rank vector (node-count rows, tiny
-    // relative to the edge list) so the query-local caches can be
-    // dropped before returning — otherwise every bench query after
-    // this one competes with a dead edgesDeg block set for memory
-    val out = ranked.localCheckpoint().orderBy($"node")
-    edgesDeg.unpersist(blocking = false)
-    seeds.unpersist(blocking = false)
-    out
+    // seal the final sparse rank vector (node-count rows, tiny
+    // relative to the edge list) so the edge caches die with the scope
+    sc.seal(ranked).orderBy($"node")
   }
 
   /** q163: LOCAL PPR by synchronous forward-push (Andersen, Chung &
@@ -342,7 +327,7 @@ object GraphOps {
 
   private[graft] def pprForwardPush(spark: org.apache.spark.sql.SparkSession,
       dir: String, earlyExit: Boolean): org.apache.spark.sql.DataFrame = {
-    val (cs, deg) = stagedGraph(spark, dir)
+    val (cs, deg) = BipartiteGraph.staged(spark, dir)
     // strict: in the BATCH path an empty seed set can only mean the
     // staged graph is damaged — fail loudly rather than bench an
     // empty snapshot (round-11 ADVICE follow-through; the streaming
@@ -373,23 +358,20 @@ object GraphOps {
       cs: org.apache.spark.sql.DataFrame, deg: org.apache.spark.sql.DataFrame,
       earlyExit: Boolean, strictSeeds: Boolean = false,
       maxRounds: Int = 6,
-      nSOverride: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+      nSOverride: Option[Long] = None): org.apache.spark.sql.DataFrame = Scope { sc =>
     import spark.implicits._
     val Total = PprTotal
     val Eps = PprEps // push while res > degree x 1e6, i.e. 1e-6 of the walk mass
     // the pushing node's degree rides ON the frontier row (node-sized),
     // so the big edge list needs no degree join at all — round 8
     // persisted edges⋈deg and paid that join's materialization
-    val edges = BipartiteGraph
-      .fanOut(spark, BipartiteGraph.edgesOf(cs)).persist()
+    val edges = sc.persist(BipartiteGraph
+      .fanOut(spark, BipartiteGraph.edgesOf(cs)))
     val degN = deg.select($"src".as("node"), $"degree")
-    val seeds = deg.select($"src".as("node"))
-      .where(BipartiteGraph.isPprSeed($"node"))
-      .persist()
+    val seeds = sc.persist(deg.select($"src".as("node"))
+      .where(BipartiteGraph.isPprSeed($"node")))
     val nS = nSOverride.getOrElse(seeds.count())
     if (nS == 0) {
-      seeds.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
       // Batch q163 passes strictSeeds = true: there an empty seed set
       // means staged-graph data damage, and a silently-fast empty
       // bench line would mask it — fail the query.
@@ -407,74 +389,63 @@ object GraphOps {
       System.err.println(
         "WARN graft.GraphOps.forwardPush: empty seed set - returning an " +
           "empty PPR snapshot (legitimate only for an early streaming batch)")
-      return spark.range(0)
+      spark.range(0)
         .select($"id".as("node"), $"id".as("est"), $"id".as("res"))
-    }
-    // r0 is a cheap projection over the seeds cache — no materialization
-    // of its own; round 1's checkpoint job builds both
-    var r = seeds.select($"node", lit(Total / nS).as("res"))
-    // per-round checkpoints released after the output seals — a local
-    // checkpoint is a persist; without this the 6 rd frames per call
-    // outlive the query (round-9 ADVICE #5)
-    val ckpts = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    val contribs = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    var round = 0
-    var fixedPoint = false
-    while (round < maxRounds && !fixedPoint) {
-      round += 1
-      // node-sized; checkpointed ONCE so the push/hold split, the
-      // estimate contribution, and the spread join all read the same
-      // cached rows instead of re-running the degree join per consumer.
-      // ONE action per round: the observe() metric rides the eager
-      // checkpoint's own materialization job, so the push-count probe
-      // costs no job of its own — the round-17 shape paid a second
-      // driver-synchronous job per round for a separate isEmpty probe
-      // over the just-checkpointed frame (guide §1.2: with node-sized
-      // rounds, the loop's JOB STRUCTURE is the cost; JobCount measured
-      // 45 jobs for the 6-round push, half of them probes).
-      val obs = org.apache.spark.sql.Observation()
-      val rd = r.join(degN, "node")
-        .withColumn("pushes", $"res" > $"degree" * Eps)
-        .observe(obs, count(when($"pushes", lit(1))).as("npush"))
-        .localCheckpoint()
-      ckpts += rd
-      val nPush = obs.get("npush").asInstanceOf[Long]
-      val push = rd.where($"pushes").select($"node", $"res", $"degree")
-      if (earlyExit && nPush == 0L) fixedPoint = true
-      else {
-        contribs += push.select($"node", expr("(15 * res) DIV 100").as("est"))
-        val hold = rd.where(!$"pushes").select($"node", $"res")
-        val spread = edges
-          .join(push.withColumnRenamed("node", "src"), "src")
-          .select($"dst".as("node"),
-            expr("(85 * res) DIV (100 * degree)").as("res"))
-        // LAZY: the next round's rd checkpoint (or the final fold)
-        // materializes this aggregate — checkpointing r here too would
-        // pay a second eager job per round for a lineage the rd
-        // checkpoint already flattens
-        r = hold.unionByName(spread)
-          .groupBy($"node").agg(sum($"res").as("res"))
+    } else {
+      // r0 is a cheap projection over the seeds cache — no materialization
+      // of its own; round 1's checkpoint job builds both
+      var r = seeds.select($"node", lit(Total / nS).as("res"))
+      // the per-round rd checkpoints are read by the estimate fold, so
+      // they live until the output seals and the scope closes
+      val contribs = scala.collection.mutable.ArrayBuffer
+        .empty[org.apache.spark.sql.DataFrame]
+      var round = 0
+      var fixedPoint = false
+      while (round < maxRounds && !fixedPoint) {
+        round += 1
+        // node-sized; checkpointed ONCE so the push/hold split, the
+        // estimate contribution, and the spread join all read the same
+        // cached rows instead of re-running the degree join per consumer.
+        // ONE action per round: the observe() metric rides the eager
+        // checkpoint's own materialization job, so the push-count probe
+        // costs no job of its own — the round-17 shape paid a second
+        // driver-synchronous job per round for a separate isEmpty probe
+        // over the just-checkpointed frame (guide §1.2: with node-sized
+        // rounds, the loop's JOB STRUCTURE is the cost; JobCount measured
+        // 45 jobs for the 6-round push, half of them probes).
+        val obs = org.apache.spark.sql.Observation()
+        val rd = sc.ckpt(r.join(degN, "node")
+          .withColumn("pushes", $"res" > $"degree" * Eps)
+          .observe(obs, count(when($"pushes", lit(1))).as("npush")))
+        val nPush = obs.get("npush").asInstanceOf[Long]
+        val push = rd.where($"pushes").select($"node", $"res", $"degree")
+        if (earlyExit && nPush == 0L) fixedPoint = true
+        else {
+          contribs += push.select($"node", expr("(15 * res) DIV 100").as("est"))
+          val hold = rd.where(!$"pushes").select($"node", $"res")
+          val spread = edges
+            .join(push.withColumnRenamed("node", "src"), "src")
+            .select($"dst".as("node"),
+              expr("(85 * res) DIV (100 * degree)").as("res"))
+          // LAZY: the next round's rd checkpoint (or the final fold)
+          // materializes this aggregate — checkpointing r here too would
+          // pay a second eager job per round for a lineage the rd
+          // checkpoint already flattens
+          r = hold.unionByName(spread)
+            .groupBy($"node").agg(sum($"res").as("res"))
+        }
       }
+      val pF =
+        if (contribs.isEmpty)
+          spark.range(0).select($"id".as("node"), $"id".as("est"))
+        else contribs.reduce(_ unionByName _)
+          .groupBy($"node").agg(sum($"est").as("est"))
+      sc.seal(pF.select($"node", $"est", lit(0L).as("res"))
+        .unionByName(r.select($"node", lit(0L).as("est"), $"res"))
+        .groupBy($"node")
+        .agg(sum($"est").as("est"), sum($"res").as("res")))
+        .orderBy($"node")
     }
-    val pF =
-      if (contribs.isEmpty)
-        spark.range(0).select($"id".as("node"), $"id".as("est"))
-      else contribs.reduce(_ unionByName _)
-        .groupBy($"node").agg(sum($"est").as("est"))
-    val out = pF.select($"node", $"est", lit(0L).as("res"))
-      .unionByName(r.select($"node", lit(0L).as("est"), $"res"))
-      .groupBy($"node")
-      .agg(sum($"est").as("est"), sum($"res").as("res"))
-      .localCheckpoint()
-      .orderBy($"node")
-    edges.unpersist(blocking = false)
-    seeds.unpersist(blocking = false)
-    // RDD-level release: these are localCheckpoints, which
-    // Dataset.unpersist silently ignores (round-10 hygiene finding)
-    Relational.releaseCkpt(ckpts.toSeq: _*)
-    out
   }
 
   /** q156: synchronous label propagation community detection
@@ -497,13 +468,12 @@ object GraphOps {
     labelPropagation(spark, dir, earlyExit = true)
 
   private[graft] def labelPropagation(spark: org.apache.spark.sql.SparkSession,
-      dir: String, earlyExit: Boolean): org.apache.spark.sql.DataFrame = {
+      dir: String, earlyExit: Boolean): org.apache.spark.sql.DataFrame = Scope { sc =>
     import spark.implicits._
-    val (cs, deg) = stagedGraph(spark, dir)
-    val edges = BipartiteGraph
-      .fanOut(spark, BipartiteGraph.edgesOf(cs)).persist()
-    val init = deg.select($"src".as("node"), $"src".as("lbl"))
-      .localCheckpoint()
+    val (cs, deg) = BipartiteGraph.staged(spark, dir)
+    val edges = sc.persist(BipartiteGraph
+      .fanOut(spark, BipartiteGraph.edgesOf(cs)))
+    val init = sc.ckpt(deg.select($"src".as("node"), $"src".as("lbl")))
     // labels are a deterministic function of the previous round's
     // labels, so an UNCHANGED label table is a fixed point and every
     // remaining round is a no-op — exit there (pinned equal to the
@@ -521,7 +491,7 @@ object GraphOps {
     while (round < 4 && !fixedPoint) {
       round += 1
       val obs = org.apache.spark.sql.Observation()
-      val nextJ = edges
+      val nextJ = sc.ckpt(edges
         .join(labels.withColumnRenamed("node", "src")
           .withColumnRenamed("lbl", "slbl"), "src")
         .groupBy($"dst", $"slbl").agg(count(lit(1)).as("c"))
@@ -531,8 +501,7 @@ object GraphOps {
         .join(labels.withColumnRenamed("lbl", "prev"), Seq("node"), "full")
         .observe(obs, count(when(
           $"lbl".isNull || $"prev".isNull || $"lbl" =!= $"prev",
-          lit(1))).as("nchanged"))
-        .localCheckpoint()
+          lit(1))).as("nchanged")))
       // the adopted labels are exactly the full join's non-null `lbl`
       // rows (max_by over non-null neighbor labels is never null, so
       // no adopted row is lost; prev-only rows are the vanished ones)
@@ -540,19 +509,18 @@ object GraphOps {
       fixedPoint = earlyExit && round < 4 &&
         obs.get("nchanged").asInstanceOf[Long] == 0L
       // the checkpoint above was the last reader of the previous
-      // round's checkpoint — RDD-level release (Dataset.unpersist
-      // ignores it)
-      Relational.releaseCkpt(labels)
+      // round's checkpoint (`labels` reads it)
+      sc.release(labels)
       labels = next
     }
     // the per-round eager checkpoints mean the final labels no longer
     // reference the edge cache — drop it before returning
-    edges.unpersist(blocking = false)
+    sc.release(edges)
     val out = labels.groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("n_members"), sum($"node").as("sum_node"))
       .orderBy($"community")
     // seal: community histogram is tiny vs the node-sized label table
-    Relational.dropAfter(out, labels)
+    sc.seal(out)
   }
 
   private val lpOracle: String = {
@@ -676,13 +644,13 @@ object GraphOps {
     * 1-row total — the same shape as one PageRank iteration, and the
     * staged-parquet graph is shared with every other traversal query.
     */
-  val q168_hits: Q = (spark, dir) => {
+  val q168_hits: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val S = 1000000000L
     // the pair index is referenced 4x (2 rounds x 2 sides) as a cheap
     // staged-parquet scan; at cluster scale persist it fanned-out —
     // at bench scale the re-scan is cheaper than a 32-wide cache
-    val (cs, _) = stagedGraph(spark, dir)
+    val (cs, _) = BipartiteGraph.staged(spark, dir)
     // Each half-step's raw sums are cached and their L1 total is
     // collected in the SAME job that materializes the cache; the total
     // then enters the normalization as a LITERAL — identical DECIMAL
@@ -695,11 +663,8 @@ object GraphOps {
     // the tiny aggregate checkpoints at 1 post-AQE partition and the
     // next half-step's join serializes on that scan, while the cache
     // keeps the aggregate's full width).
-    val caches = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.DataFrame]
     def l1norm(rawDf: org.apache.spark.sql.DataFrame, key: String) = {
-      val raw = rawDf.persist()
-      caches += raw
+      val raw = sc.persist(rawDf)
       val totRow = raw.agg(sum($"raw")).head()
       // empty input ⇒ null sum ⇒ zero rows to normalize: the literal's
       // value is never evaluated, any placeholder avoids the ANSI
@@ -723,8 +688,9 @@ object GraphOps {
     val out = hub.select(lit("hub").as("side"), $"node", $"score")
       .union(auth.select(lit("auth").as("side"), $"node", $"score"))
       .orderBy($"side", $"node")
-    // seal the (2 x nodes)-row result, drop the per-step raw caches
-    Relational.dropAfter(out, caches.toSeq: _*)
+    // seal the (2 x nodes)-row result; the per-step raw caches die
+    // with the scope
+    sc.seal(out)
   }
 
   /** q174: k-core peeling (Seidman 1983; the standard graph-curation
@@ -745,10 +711,10 @@ object GraphOps {
   val q174_kcore: Q = (spark, dir) => kcore(spark, dir, earlyExit = true)
 
   private[graft] def kcore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, earlyExit: Boolean): org.apache.spark.sql.DataFrame = {
+      dir: String, earlyExit: Boolean): org.apache.spark.sql.DataFrame = Scope { sc =>
     import spark.implicits._
     val rounds = 4
-    val (cs, _) = stagedGraph(spark, dir)
+    val (cs, _) = BipartiteGraph.staged(spark, dir)
     // k = half the mean customer degree (floor-of-floor, mirrored by
     // the oracle's subquery): a FIXED k either prunes nothing or
     // everything as the scale factor moves the degree distribution —
@@ -777,8 +743,8 @@ object GraphOps {
       // shape paid three (checkpoint, edge count, node distinct-count)
       // — and the second reads cached rows only.
       val obs = org.apache.spark.sql.Observation()
-      val next = edges.join(keepC, "c").join(keepS, "s")
-        .observe(obs, count(lit(1)).as("ne")).localCheckpoint()
+      val next = sc.ckpt(edges.join(keepC, "c").join(keepS, "s")
+        .observe(obs, count(lit(1)).as("ne")))
       val prev = edges
       edges = next
       val ne = obs.get("ne").asInstanceOf[Long]
@@ -787,7 +753,7 @@ object GraphOps {
       // previous round's edge checkpoint is dead once the new one is
       // materialized (round 1: `edges` is a lazy staged-parquet scan,
       // so the release is a no-op there)
-      Relational.releaseCkpt(prev)
+      sc.release(prev)
       out += ((r, nn, ne))
       if (earlyExit && ne == prevNe) {
         // fixed point: replicate the settled counts for the rest
@@ -797,8 +763,7 @@ object GraphOps {
       r += 1
     }
     // the result is driver-side rows — the last edge checkpoint has no
-    // remaining consumer
-    Relational.releaseCkpt(edges)
+    // remaining consumer and dies with the scope
     out.result().toDF("round", "n_nodes", "n_edges").orderBy($"round")
   }
 
@@ -814,7 +779,7 @@ object GraphOps {
     */
   val q175_assortativity: Q = (spark, dir) => {
     import spark.implicits._
-    val (cs, deg) = stagedGraph(spark, dir)
+    val (cs, deg) = BipartiteGraph.staged(spark, dir)
     val edges = cs.select($"c".as("src"), $"s".as("dst"))
       .union(cs.select($"s".as("src"), $"c".as("dst")))
     val m = edges

@@ -23,70 +23,6 @@ import graft.functions.GraftFunctions._
 object Relational {
   type Q = (SparkSession, String) => DataFrame
 
-  /** The round-9 unified cache policy, drop-on-return: eagerly
-    * materialize a query's (small) output, then release its
-    * query-local caches so no dead block set outlives the query —
-    * embedding applications get predictable memory and bench sessions
-    * see no cross-query cache interference. The checkpoint must come
-    * FIRST: the lazy output still references the caches.
-    *
-    * `caches` must include EVERY block-holding intermediate —
-    * explicit persist()s AND localCheckpoint()ed frames (a local
-    * checkpoint is a persist with truncated lineage; its blocks
-    * linger identically). Iterative operators that cache per round
-    * (forwardPush, BFS, the CC kernels) release those inline instead,
-    * since the frames go out of scope mid-loop.
-    *
-    * Deployment caveat — `localCheckpoint` is NOT fault-tolerant: it
-    * truncates lineage, so the sealed blocks are the only copy of the
-    * data and losing an executor that holds them fails the query
-    * instead of recomputing (the "lineage has been truncated" warning
-    * in the logs is this). In this single-JVM harness that is the
-    * right trade — there is no executor to lose, and the seal is what
-    * lets a query release its heavyweight caches on return. On a
-    * cluster with preemptible or flaky executors, a seal held across
-    * a long downstream consumer converts one straggler loss into a
-    * job failure: deployments in that regime should set
-    * `spark.graft.reliableCheckpoint=true` (below), which routes the
-    * seal through reliable `checkpoint()` against
-    * `SparkContext.setCheckpointDir` — executor-loss-safe at the cost
-    * of one distributed write per seal.
-    */
-  private[graft] def dropAfter(out: DataFrame,
-      caches: DataFrame*): DataFrame = {
-    // cluster switch (off by default; requires
-    // SparkContext.setCheckpointDir): executor-loss-safe seal for
-    // deployments where losing a localCheckpoint block mid-consumer
-    // is a real failure mode — see the scaladoc caveat
-    val reliable = out.sparkSession.conf
-      .get("spark.graft.reliableCheckpoint", "false").toBoolean
-    val sealedOut = if (reliable) out.checkpoint() else out.localCheckpoint()
-    caches.foreach(_.unpersist(blocking = false))
-    releaseCkpt(caches: _*)
-    sealedOut
-  }
-
-  /** RDD-level release for `localCheckpoint`ed frames.
-    * `Dataset.unpersist` consults only the SQL cache manager, which
-    * never tracks a local checkpoint (its blocks are an RDD-level
-    * persist under a `LogicalRDD` leaf) — so on a checkpointed frame
-    * it is a SILENT NO-OP, and every "release" that called it leaked
-    * the blocks for the life of the JVM (the round-10 hygiene
-    * finding). This walks the frame's plan and unpersists the backing
-    * RDDs directly.
-    * On a plain `persist()`ed frame it finds no `LogicalRDD` and does
-    * nothing, so `dropAfter` can route every cache kind through it.
-    * Only call it on frames the query itself materialized: releasing
-    * a checkpoint someone else still references makes their
-    * truncated-lineage data unrecoverable.
-    */
-  private[graft] def releaseCkpt(dfs: DataFrame*): Unit =
-    dfs.foreach(_.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    })
-
   /** Decimal-exact sum emitted as double: deterministic across engines
     * regardless of aggregation order (double sums are not associative;
     * decimal sums are exact).

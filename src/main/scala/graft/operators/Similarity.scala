@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.GraftFunctions._
 
 /** Similarity search over the `embeddings` table (Array[Float], dim 64).
@@ -266,11 +266,10 @@ object Similarity {
     */
   private[graft] def pqCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
     pqCache.computeIfAbsent(
-      s"$dir#${Tables.fingerprint(dir, "embeddings")}", _ => {
+      s"$dir#${Tables.fingerprint(dir, "embeddings")}", _ => Scope { sc =>
         import spark.implicits._
-        val emb = Tables.load(spark, dir, "embeddings")
-          .select($"vec_id", l2norm($"embedding").as("nv"))
-          .persist()
+        val emb = sc.persist(Tables.load(spark, dir, "embeddings")
+          .select($"vec_id", l2norm($"embedding").as("nv")))
         val seeds = emb
           .select($"vec_id", $"nv",
             graft.functions.GraftFunctions
@@ -281,11 +280,10 @@ object Similarity {
         var books = Array.tabulate(PqM)(m =>
           seeds.map(_.slice(m * PqSub, (m + 1) * PqSub)))
         (1 to 4).foreach { _ =>
-          val assigned = emb.select($"nv" +:
+          val assigned = sc.persist(emb.select($"nv" +:
             (0 until PqM).map(m => nearest_cell(
               slice($"nv", m * PqSub + 1, PqSub),
-              books(m).flatten, PqK).as(s"c$m")): _*)
-            .persist()
+              books(m).flatten, PqK).as(s"c$m")): _*))
           books = Array.tabulate(PqM) { m =>
             val means = (0 until PqSub).map(d =>
               avg($"nv".getItem(m * PqSub + d)).as(s"m$d"))
@@ -296,9 +294,8 @@ object Similarity {
               .toMap
             Array.tabulate(PqK)(c => refined.getOrElse(c, books(m)(c)))
           }
-          assigned.unpersist()
+          sc.release(assigned)
         }
-        emb.unpersist()
         books
       })
 
@@ -489,25 +486,23 @@ object Similarity {
       .select(col("q")).collect()
       .map(_.getSeq[Long](0).toArray)
 
-  val q132_kmeans: Q = (spark, dir) => {
+  val q132_kmeans: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val k = 4
-    val v = quantized(spark, dir).persist()
+    val v = sc.persist(quantized(spark, dir))
     val seeds = kmSeeds(v, k)
     require(seeds.length == k, s"q132: corpus under $dir has < $k vectors")
     def scored(cents: Array[Array[Long]]): DataFrame = kmScored(v, cents)
     def update(cents: Array[Array[Long]]): Array[Array[Long]] = kmUpdate(v, cents, k)
     val c2 = update(update(seeds))
     val norm1 = c2.map(_.map(math.abs).sum)
-    val out = scored(c2)
+    // k rows — sealed so v's cache can drop
+    sc.seal(scored(c2)
       .groupBy($"cluster")
       .agg(count(lit(1)).as("n"), sum($"dist").as("inertia"))
       .withColumn("c_norm1",
         element_at(array(norm1.map(lit(_)): _*), $"cluster" + 1))
-      .orderBy($"cluster")
-      .localCheckpoint() // k rows — materialize so v's cache can drop
-    v.unpersist(blocking = false)
-    out
+      .orderBy($"cluster"))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -531,10 +526,10 @@ object Similarity {
     * log2(n) lesson) — blocks stay constant-sized and the join never
     * degenerates.
     */
-  val q148_semdedup: Q = (spark, dir) => {
+  val q148_semdedup: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val k = 16
-    val v = quantized(spark, dir).persist()
+    val v = sc.persist(quantized(spark, dir))
     val seeds = kmSeeds(v, k)
     require(seeds.length == k, s"q148: corpus under $dir has < $k vectors")
     val c1 = kmUpdate(v, seeds, k)
@@ -544,10 +539,9 @@ object Similarity {
     // guide §4). Here it runs once per vector; in `dups` below once
     // per CANDIDATE PAIR, the (n/k)² term that is the query's hot
     // loop at any scale.
-    val assigned = kmScored(v, c1)
+    val assigned = sc.persist(kmScored(v, c1)
       .select($"vec_id", $"cluster".as("cl"), $"q",
-        graft.functions.GraftFunctions.dot_i64($"q", $"q").as("n2"))
-      .persist()
+        graft.functions.GraftFunctions.dot_i64($"q", $"q").as("n2")))
     val a = assigned
       .select($"cl", $"vec_id".as("va"), $"q".as("qa"), $"n2".as("na2"))
     val b = assigned
@@ -564,17 +558,14 @@ object Similarity {
           .replace("\n", " ")))
       .select($"cl", $"vb".as("vec_id"), lit(1).as("dr"))
       .distinct()
-    val out = assigned.select($"cl", $"vec_id")
+    // k rows — sealed so the corpus-sized caches can drop
+    sc.seal(assigned.select($"cl", $"vec_id")
       .join(dups, Seq("cl", "vec_id"), "left")
       .groupBy($"cl")
       .agg(count(lit(1)).as("n_members"),
         count($"dr").as("n_dropped"),
         sum(when($"dr".isNull, $"vec_id")).as("survivor_sum"))
-      .orderBy($"cl")
-      .localCheckpoint() // k rows — drop the corpus-sized caches below
-    assigned.unpersist(blocking = false)
-    v.unpersist(blocking = false)
-    out
+      .orderBy($"cl"))
   }
 
   /** q136: signed-random-projection (SRP) sketch + Hamming near-dup —

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.GraftFunctions._
 
 /** Text-analysis operators for training-data pipelines over the
@@ -694,20 +694,19 @@ object TextOps {
     * re-aggregate per lang, and a broadcast of the 5-row totals. The
     * corpus is read once and never shuffled wider than the vocabulary.
     */
-  val q167_corpus_shift: Q = (spark, dir) => {
+  val q167_corpus_shift: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    // localCheckpoint: `cnt` feeds both the totals and the final
+    // checkpointed: `cnt` feeds both the totals and the final
     // aggregate — without it the corpus word explode re-executes once
     // per consumer (2 scans of the 100 TB side for a vocab-sized
     // table). Plan pinned scan-free downstream in PlanInvariantsSpec.
-    val cnt = Tables.load(spark, dir, "documents")
+    val cnt = sc.ckpt(Tables.load(spark, dir, "documents")
       .select($"lang", ($"doc_id" % 2 === 0).as("old_half"),
         explode(split(lower(trim($"text")), "\\s+")).as("word"))
       .where(length($"word") > 0)
       .groupBy($"lang", $"word")
       .agg(sum(when($"old_half", 1L).otherwise(0L)).as("a"),
-        sum(when($"old_half", 0L).otherwise(1L)).as("b"))
-      .localCheckpoint()
+        sum(when($"old_half", 0L).otherwise(1L)).as("b")))
     val tot = cnt.groupBy($"lang")
       .agg(sum($"a").as("ta"), sum($"b").as("tb"))
     cnt.join(broadcast(tot), "lang")
@@ -782,14 +781,13 @@ object TextOps {
     * window runs per source over scored vocab rows (WindowGroupLimit
     * prunes map-side).
     */
-  val q177_source_terms: Q = (spark, dir) => {
+  val q177_source_terms: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val cnt = Tables.load(spark, dir, "documents")
+    val cnt = sc.ckpt(Tables.load(spark, dir, "documents")
       .select($"source", explode(split(lower(trim($"text")), "\\s+")).as("word"))
       .where(length($"word") > 0)
-      .groupBy($"source", $"word").agg(count(lit(1)).as("a"))
-      .localCheckpoint()
+      .groupBy($"source", $"word").agg(count(lit(1)).as("a")))
     val wordTot = cnt.groupBy($"word").agg(sum($"a").as("wt"))
     val srcTot = cnt.groupBy($"source").agg(sum($"a").as("at"))
     val all = cnt.agg(sum($"a").as("tt"))
@@ -1259,12 +1257,12 @@ object TextOps {
     * reference BPE on the collected vocabulary and pins exact
     * equality.
     */
-  val q155_bpe_merges: Q = (spark, dir) => {
+  val q155_bpe_merges: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val (vocab, merges) = bpeTrain(spark, dir, 8)
     // the merge table is driver-side rows — the final vocabulary
     // checkpoint has no consumer here (q165 is the one that encodes)
-    Relational.releaseCkpt(vocab)
+    // and dies with the scope
+    val (_, merges) = bpeTrain(sc, spark, dir, 8)
     merges.toDF("step", "left", "right", "pair_count")
       .orderBy($"step")
   }
@@ -1273,20 +1271,20 @@ object TextOps {
     * encode): one corpus pass builds the (word, freq) vocabulary, then
     * k merge iterations run over the vocabulary only. Returns the
     * final vocabulary — each word type with its post-merge symbol
-    * array — and the merge table. The `word` column rides along so
-    * q165 can join the encoded lengths back onto the corpus.
+    * array, checkpointed in `sc` — and the merge table. The `word`
+    * column rides along so q165 can join the encoded lengths back onto
+    * the corpus.
     */
-  private def bpeTrain(spark: SparkSession, dir: String, k: Int)
+  private def bpeTrain(sc: Scope, spark: SparkSession, dir: String, k: Int)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
     import spark.implicits._
-    var vocab = Tables.load(spark, dir, "documents")
+    var vocab = sc.ckpt(Tables.load(spark, dir, "documents")
       .select(explode(split(lower(trim($"text")), "\\s+")).as("word"))
       .where(length($"word") > 0)
       .groupBy($"word").agg(count(lit(1)).as("freq"))
       .select($"word", expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))")
-        .as("syms"), $"freq")
-      .localCheckpoint()
+        .as("syms"), $"freq"))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (step <- 1 to k) {
       val best = vocab
@@ -1306,19 +1304,17 @@ object TextOps {
       // greedy left-to-right non-overlap: the merged token (l+r)
       // differs from l, so a fresh occurrence of the pair never
       // re-consumes the symbol just produced
-      val next = vocab.select(
+      val next = sc.ckpt(vocab.select(
         $"word",
         aggregate($"syms", array().cast("array<string>"),
           (acc, s) => when(size(acc) > 0 &&
               element_at(acc, -1) === lit(l) && s === lit(r),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
             .otherwise(concat(acc, array(s)))).as("syms"),
-        $"freq")
-        .localCheckpoint()
+        $"freq"))
       // roll: the new checkpoint re-stores the whole vocabulary, so
-      // the previous step's blocks are dead (RDD-level release —
-      // Dataset.unpersist never sees a local checkpoint)
-      Relational.releaseCkpt(vocab)
+      // the previous step's blocks are dead
+      sc.release(vocab)
       vocab = next
     }
     (vocab, merges.result())
@@ -1342,9 +1338,9 @@ object TextOps {
     * then the encode tail. `chars_per_tok_x1000` is integer division
     * of exact BIGINT sums — engine-exact.
     */
-  val q165_bpe_encode: Q = (spark, dir) => {
+  val q165_bpe_encode: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val (vocab, _) = bpeTrain(spark, dir, 8)
+    val (vocab, _) = bpeTrain(sc, spark, dir, 8)
     val enc = vocab.select($"word", size($"syms").cast("long").as("n_toks"))
     val out = Tables.load(spark, dir, "documents")
       .select($"source", explode(split(lower(trim($"text")), "\\s+")).as("word"))
@@ -1356,8 +1352,9 @@ object TextOps {
         sum($"n_toks").as("n_tokens"))
       .withColumn("chars_per_tok_x1000", expr("(n_chars * 1000) DIV n_tokens"))
       .orderBy($"source")
-    // seal the per-source rows, release the final vocabulary ckpt
-    Relational.dropAfter(out, vocab)
+    // seal the per-source rows; the final vocabulary ckpt dies with
+    // the scope
+    sc.seal(out)
   }
 
   /** q160: cross-source vocabulary-overlap matrix — pairwise Jaccard
@@ -1374,12 +1371,12 @@ object TextOps {
     * costs |sources|² rows, not (docs-containing-it)². Totals join
     * back by broadcast; the output is |sources|² rows.
     */
-  val q160_source_overlap: Q = (spark, dir) => {
+  val q160_source_overlap: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val sv = Tables.load(spark, dir, "documents")
+    val sv = sc.persist(Tables.load(spark, dir, "documents")
       .select($"source", explode(split(lower(trim($"text")), "\\s+")).as("w"))
       .where(length($"w") > 0)
-      .distinct().persist()
+      .distinct())
     val sizes = sv.groupBy($"source").agg(count(lit(1)).as("n"))
     val pairs = sv.groupBy($"w").agg(sort_array(collect_set($"source")).as("ss"))
       .select(explode(expr(
@@ -1388,15 +1385,13 @@ object TextOps {
           |    struct(a AS sa, b AS sb))))""".stripMargin)).as("p"))
       .groupBy($"p.sa".as("sa"), $"p.sb".as("sb"))
       .agg(count(lit(1)).as("inter"))
-    val out = pairs
+    // |sources|² rows — sealed so the vocab cache can drop
+    sc.seal(pairs
       .join(broadcast(sizes.toDF("sa", "na")), "sa")
       .join(broadcast(sizes.toDF("sb", "nb")), "sb")
       .select($"sa", $"sb", $"inter", $"na", $"nb",
         ($"inter" / ($"na" + $"nb" - $"inter")).as("jaccard"))
-      .orderBy($"sa", $"sb")
-      .localCheckpoint() // |sources|² rows — drop the vocab cache
-    sv.unpersist(blocking = false)
-    out
+      .orderBy($"sa", $"sb"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.GraftFunctions._
 
 /** Training-data pipeline operators beyond the per-document scans in
@@ -85,17 +85,16 @@ object Training {
     * component = the minimum id reachable from `id`. See
     * [[q77_dedup_clusters]] for the scale notes.
     */
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxRounds: Int = 64): DataFrame = Scope { sc =>
     val spark = pairs.sparkSession
     import spark.implicits._
     val Array(ca, cb) = pairs.columns.take(2)
     // p persists through the edges fill: the union's two branches would
     // otherwise evaluate the whole upstream pair-generation pipeline
     // twice (the shared-subtree lesson — q104/q67/q31)
-    val p = pairs.select(col(ca).as("a"), col(cb).as("b")).persist()
-    val edges = p.select($"a".as("src"), $"b".as("dst"))
-      .union(p.select($"b".as("src"), $"a".as("dst")))
-      .persist()
+    val p = sc.persist(pairs.select(col(ca).as("a"), col(cb).as("b")))
+    val edges = sc.persist(p.select($"a".as("src"), $"b".as("dst"))
+      .union(p.select($"b".as("src"), $"a".as("dst"))))
     // Labels only ever DECREASE under min-propagation, so the label
     // sum is a convergence witness: unchanged sum <=> no label moved.
     // One map-side-combinable aggregate per round replaces a
@@ -109,13 +108,13 @@ object Training {
       lit(java.math.BigDecimal.ZERO)).as("lblsum")
     def ckptWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
       val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, witness).localCheckpoint()
+      val out = sc.ckpt(df.observe(obs, witness))
       (out, obs.get("lblsum").asInstanceOf[java.math.BigDecimal])
     }
     var (labels, prevSum) = ckptWithSum(
       edges.select($"src".as("id")).distinct()
         .select($"id", $"id".as("lbl")))
-    p.unpersist() // edges is materialized by the eager checkpoint above
+    sc.release(p) // edges is materialized by the eager checkpoint above
     var changed = true
     var rounds = 0
     while (changed && rounds < maxRounds) {
@@ -124,13 +123,13 @@ object Training {
       val (nl, nextSum) = ckptWithSum(
         labels.union(prop).groupBy($"id").agg(min($"lbl").as("lbl")))
       // prior round's checkpoint is dead once the new one exists
-      Relational.releaseCkpt(labels)
+      sc.release(labels)
       labels = nl
       changed = nextSum.compareTo(prevSum) != 0
       prevSum = nextSum
       rounds += 1
     }
-    edges.unpersist()
+    sc.release(edges)
     // Hash-min needs graph-diameter rounds; if the cap was hit the
     // labels are NOT the transitive closure — fail loudly rather than
     // return wrong components. (Near-dup graphs are shallow cliques,
@@ -140,9 +139,9 @@ object Training {
     require(!changed,
       s"connectedComponents: not converged after $rounds rounds " +
         "(graph diameter exceeds the cap)")
-    // seal: hand the caller ONE node-sized block set and release the
-    // final rolling checkpoint (drop-on-return policy)
-    Relational.dropAfter(labels.select($"id", $"lbl".as("component")), labels)
+    // seal: hand the caller ONE node-sized block set; the final
+    // rolling checkpoint dies with the scope
+    sc.seal(labels.select($"id", $"lbl".as("component")))
   }
 
   /** SemDeDup-style keep-policy over the near-dup components: pair
@@ -191,13 +190,10 @@ object Training {
       .orderBy($"doc_id")
   }
 
-  val q77_dedup_clusters: Q = (spark, dir) => {
+  val q77_dedup_clusters: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val pairs = Dedup.q29_dedup_minhash(spark, dir).select($"doc_a", $"doc_b")
-    val cc = connectedComponents(pairs) // sealed (eager) inside
-    // q29's sealed output was only this query's input — release it
-    Relational.releaseCkpt(pairs)
-    Relational.dropAfter(clusterReport(cc), cc)
+    sc.seal(clusterReport(sc.adopt(connectedComponents(pairs))))
   }
 
   /** q180: duplication-aware SOFT dedup — instead of dropping all but
@@ -272,7 +268,7 @@ object Training {
     * graph is a union of stars centered at component minima, and the
     * labeling reads off each node's minimum final neighbor.
     */
-  def connectedComponentsTwoPhase(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+  def connectedComponentsTwoPhase(pairs: DataFrame, maxIters: Int = 50): DataFrame = Scope { sc =>
     val spark = pairs.sparkSession
     import spark.implicits._
     val Array(ca, cb) = pairs.columns.take(2)
@@ -285,11 +281,10 @@ object Training {
     // alternation; see the loop-discipline note above).
     def ckptWithSig(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
       val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs,
+      val out = sc.ckpt(df.observe(obs,
         count(lit(1)).as("ne"),
         coalesce(sum(xxhash64($"a", $"b").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO)).as("hs"))
-        .localCheckpoint()
+          lit(java.math.BigDecimal.ZERO)).as("hs")))
       val m = obs.get
       (out, (m("ne").asInstanceOf[Long],
         m("hs").asInstanceOf[java.math.BigDecimal]))
@@ -323,13 +318,13 @@ object Training {
     // the final labeling join, after the loop has released the initial
     // edges — checkpoint it so the final join never re-derives the
     // whole upstream pair pipeline
-    val nodes = e.select($"a".as("id")).union(e.select($"b".as("id")))
-      .distinct().localCheckpoint()
+    val nodes = sc.ckpt(e.select($"a".as("id")).union(e.select($"b".as("id")))
+      .distinct())
     var stable = cur._1 == 0L
     var iters = 0
     while (!stable && iters < maxIters) {
       val (ne, next) = ckptWithSig(smallStar(largeStar(e)))
-      Relational.releaseCkpt(e) // prior alternation is dead now
+      sc.release(e) // prior alternation is dead now
       e = ne
       stable = next._1 == cur._1 && next._2.compareTo(cur._2) == 0
       cur = next
@@ -343,9 +338,9 @@ object Training {
       .select($"id", least($"mn", $"id").as("component"))
     val out = nodes.join(lbl, Seq("id"), "left")
       .select($"id", coalesce($"component", $"id").as("component"))
-    // seal the node-sized labeling; release the final star-contraction
-    // edge checkpoint and the node table (drop-on-return policy)
-    Relational.dropAfter(out, nodes, e)
+    // seal the node-sized labeling; the final star-contraction edge
+    // checkpoint and the node table die with the scope
+    sc.seal(out)
   }
 
   /** q77's cluster report computed with the two-phase kernel — same
@@ -353,13 +348,10 @@ object Training {
     * algorithm is exercised by the correctness gate, not only by its
     * equality spec.
     */
-  val q91_cc_twophase: Q = (spark, dir) => {
+  val q91_cc_twophase: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val pairs = Dedup.q29_dedup_minhash(spark, dir).select($"doc_a", $"doc_b")
-    val cc = connectedComponentsTwoPhase(pairs) // sealed (eager) inside
-    // q29's sealed output was only this query's input — release it
-    Relational.releaseCkpt(pairs)
-    Relational.dropAfter(clusterReport(cc), cc)
+    sc.seal(clusterReport(sc.adopt(connectedComponentsTwoPhase(pairs))))
   }
 
   private def docWords(spark: SparkSession, dir: String): DataFrame = {
@@ -556,22 +548,21 @@ object Training {
     * join keyed on the bigram beyond it — deliberately unhinted.
     * Per-doc then per-source folds are map-side-combinable groupBys.
     */
-  val q186_lm_quality: Q = (spark, dir) => {
+  val q186_lm_quality: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val w = Tables.load(spark, dir, "documents")
       .select($"doc_id", $"source", $"lang",
         expr("filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
           .as("ws"))
-    val bi = w.where(size($"ws") >= 2)
+    val bi = sc.ckpt(w.where(size($"ws") >= 2)
       .select($"doc_id", $"source", $"lang",
         explode(expr("transform(sequence(1, size(ws) - 1), i ->" +
           " struct(element_at(ws, i) AS w1, element_at(ws, i + 1) AS w2))"))
           .as("b"))
-      .select($"doc_id", $"source", $"lang", $"b.w1", $"b.w2")
-      .localCheckpoint()
-    val c2 = bi.where($"lang" === "en")
-      .groupBy($"w1", $"w2").agg(count(lit(1)).as("c2n"))
-      .localCheckpoint() // feeds c1 and the scoring join
+      .select($"doc_id", $"source", $"lang", $"b.w1", $"b.w2"))
+    // feeds c1 and the scoring join
+    val c2 = sc.ckpt(bi.where($"lang" === "en")
+      .groupBy($"w1", $"w2").agg(count(lit(1)).as("c2n")))
     val c1 = c2.groupBy($"w1").agg(sum($"c2n").as("c1n"))
     // V from the bigram-TYPE table (w1 ∪ w2), NOT a second corpus
     // scan: every train word reaches the vocab through some bigram
@@ -595,8 +586,9 @@ object Training {
         sum(when($"dn" * 100 < $"nb" * 335, 1L).otherwise(0L)).as("n_head"),
         sum(when($"dn" * 100 > $"nb" * 347, 1L).otherwise(0L)).as("n_tail"))
       .orderBy($"source")
-    // seal the per-source rows; release the bigram-stream and LM ckpts
-    Relational.dropAfter(out, bi, c2)
+    // seal the per-source rows; the bigram-stream and LM ckpts die
+    // with the scope
+    sc.seal(out)
   }
 
   /** q187: DSIR hashed-n-gram importance weights (Xie et al.
@@ -627,10 +619,10 @@ object Training {
     * no corpus-sized side ever shuffles on a skewable key; doc and
     * source folds are map-side-combinable groupBys.
     */
-  val q187_dsir_weights: Q = (spark, dir) => {
+  val q187_dsir_weights: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val b = 256
-    val feats = Tables.load(spark, dir, "documents")
+    val feats = sc.ckpt(Tables.load(spark, dir, "documents")
       .select($"doc_id", $"source", $"lang",
         expr("filter(split(lower(trim(text)), '\\\\s+'), x -> length(x) > 0)")
           .as("ws"))
@@ -649,8 +641,7 @@ object Training {
         // list_reduce twin is unchanged because the kernel reproduces
         // the same recurrence bit-for-bit.
         graft.functions.GraftFunctions.poly31_bucket($"f", 1000003L, b)
-          .as("bkt"))
-      .localCheckpoint()
+          .as("bkt")))
     val hist = feats.groupBy($"bkt")
       .agg(sum(when($"lang" === "en", 1L).otherwise(0L)).as("ct"),
         count(lit(1)).as("cr"))
@@ -905,10 +896,10 @@ object Training {
     * first-occurrence property, so the work is linear in grams where
     * the similarity family (q31/q139) pays candidate pairs.
     */
-  val q154_novelty: Q = (spark, dir) => {
+  val q154_novelty: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
-    val g = posGrams(spark, dir).select($"doc_id", $"gram")
-      .distinct().persist()
+    val g = sc.persist(posGrams(spark, dir).select($"doc_id", $"gram")
+      .distinct())
     val tot = g.groupBy($"doc_id").agg(count(lit(1)).as("n_grams"))
     val nn = g.groupBy($"gram").agg(min($"doc_id").as("doc_id"))
       .groupBy($"doc_id").agg(count(lit(1)).as("n_new"))
@@ -916,7 +907,7 @@ object Training {
       .select($"doc_id", $"n_grams", coalesce($"n_new", lit(0L)).as("n_new"))
       .withColumn("novelty", $"n_new" / $"n_grams")
       .orderBy($"doc_id")
-    graft.operators.Relational.dropAfter(out, g)
+    sc.seal(out)
   }
 
   /** q150: global token start-offset per document — the index build
@@ -940,7 +931,7 @@ object Training {
     * entries (25B docs at B=S=4096 → ~1.5k rows). The parallel-prefix
     * recursion of Blelloch's scan, laid onto DataFrame windows.
     */
-  val q150_global_offsets: Q = (spark, dir) => {
+  val q150_global_offsets: Q = (spark, dir) => Scope { sc =>
     import spark.implicits._
     val B = 32L
     val S = 16L
@@ -948,9 +939,8 @@ object Training {
       .select($"doc_id",
         size(split(trim($"text"), "\\s+")).cast("long").as("n_tokens"),
         expr(s"doc_id DIV $B").as("bucket"))
-    val bTot = docs.groupBy($"bucket").agg(sum($"n_tokens").as("tot"))
-      .withColumn("sb", expr(s"bucket DIV $S"))
-      .persist()
+    val bTot = sc.persist(docs.groupBy($"bucket").agg(sum($"n_tokens").as("tot"))
+      .withColumn("sb", expr(s"bucket DIV $S")))
     var acc = 0L
     val bases = bTot.groupBy($"sb").agg(sum($"tot").as("stot"))
       .orderBy($"sb").collect()
@@ -969,7 +959,7 @@ object Training {
       .select($"doc_id", $"n_tokens",
         ($"bucket_base" + $"pre_in_bucket").as("start_offset"))
       .orderBy($"doc_id")
-    graft.operators.Relational.dropAfter(out, bTot)
+    sc.seal(out)
   }
 
   private val pairsCte =

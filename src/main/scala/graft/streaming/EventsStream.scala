@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.Scope
+
 /** Structured Streaming over the `events` shape (SURVEY §2.11: the
   * reference has no continuous sources — its closest analog is the
   * paginated incremental pull, spotify_client.py:217-240 — so this is
@@ -314,12 +316,12 @@ object EventsStream {
             Seq("key"), buckets)
           // one row per touched key; checkpointed so the segment write
           // below cannot re-trigger the stateful computation. The
-          // Ckpts finally releases both batch checkpoints on success
-          // and failed/replayed attempts alike (round-15 ADVICE #1).
-          val ck = new Ckpts
-          try {
-          val up = updates.localCheckpoint()
-          ck.add(up.toDF())
+          // batch scope releases both batch checkpoints on success and
+          // failed/replayed attempts alike (round-15 ADVICE #1), so a
+          // long-lived stream doesn't accumulate one block set per
+          // micro-batch.
+          Scope { ck =>
+          val up = ck.ckpt(updates)
           val agg0 = readCdcAgg(ss, storeDir)
           // contribution of a store snapshot restricted to some keys —
           // distributed aggregates, four numbers to the driver
@@ -354,7 +356,7 @@ object EventsStream {
             // the resolve is exchange-free over the key-bucketed scan,
             // checkpointed because the INSERT overwrites a table the
             // fold reads
-            val folded = ck(readCdcStore(ss, storeDir).toDF()
+            val folded = ck.ckpt(readCdcStore(ss, storeDir).toDF()
               .join(broadcast(bKeys), Seq("key"), "left_anti")
               .unionByName(up.toDF()))
             SegStore.writeBucketed(ss, storeDir, "kv", folded, batchId,
@@ -363,11 +365,7 @@ object EventsStream {
           Seq(agg1).toDS().write.mode("overwrite").parquet(s"$seg/agg")
           SegStore.writeSnapshot(ss, aggDir, Seq(agg1).toDS().toDF(), batchId)
           SegStore.commit(ss, storeDir, batchId, base, runId)
-          // drop-on-write: the checkpoints are on disk — release their
-          // blocks so a long-lived stream doesn't accumulate one block
-          // set per micro-batch (Dataset.unpersist never sees a local
-          // checkpoint)
-          } finally ck.releaseAll()
+          }
         }
         ()
       }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Scope
+
 /** Streaming graph maintenance: the q113 base/delta ingest split AS A
   * STREAM. Each micro-batch of arriving customer–supplier pairs is
   * merged into the on-disk pair/degree store DELTA-SIZED, and the
@@ -138,12 +140,11 @@ object GraphStream {
             Seq("node"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "meta",
             "k BIGINT, ns BIGINT", Seq("k"), 1)
-          // every batch-scoped checkpoint registers here; the single
-          // finally releases them on success AND failed/replayed
+          // every batch-scoped checkpoint registers in the batch
+          // scope, which releases them on success AND failed/replayed
           // attempts alike (round-15 ADVICE #1)
-          val ck = new Ckpts
-          try {
-            val up = ck(batch.select($"c", $"s").distinct())
+          Scope { ck =>
+            val up = ck.ckpt(batch.select($"c", $"s").distinct())
             // delta-sized dedup against the store: the batch's customer
             // keys prune the pairs scan; the semi-join against the batch
             // (broadcast) shrinks the hit set to <= batch size, and THAT
@@ -151,8 +152,8 @@ object GraphStream {
             val bCs = up.select($"c").distinct()
             val present = SegStore.prunedScan(ss, storeDir, "pairs", "c", bCs)
               .join(broadcast(up), Seq("c", "s"), "left_semi")
-            val newPairs = ck(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
-            val newDeg = ck(graft.operators.BipartiteGraph.degreesOf(newPairs))
+            val newPairs = ck.ckpt(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
+            val newDeg = ck.ckpt(graft.operators.BipartiteGraph.degreesOf(newPairs))
             val base = SegStore.active(ss, storeDir).size >= compactEvery
             if (newPairs.isEmpty)
               // all-replay: graph, labels and snapshot all unchanged
@@ -179,7 +180,7 @@ object GraphStream {
                 componentRefresh(ss, storeDir, outDir, batchId, base, runId,
                   ck, newPairs, newDeg, nS0.get, maxComponentMembers)
             }
-          } finally ck.releaseAll()
+          }
         }
         ()
       }
@@ -193,7 +194,7 @@ object GraphStream {
     * store. Publishes only when no snapshot exists yet (restart edge).
     */
   private def unchangedBatch(ss: SparkSession, storeDir: String, outDir: String,
-      batchId: Long, base: Boolean, runId: String, ck: Ckpts,
+      batchId: Long, base: Boolean, runId: String, ck: Scope,
       newPairs: DataFrame, newDeg: DataFrame): Unit = {
     import ss.implicits._
     if (base) {
@@ -216,7 +217,7 @@ object GraphStream {
       if (!hasSnap || overlayTop)
         publishFallback(ss, storeDir, outDir, batchId, ck)
       // checkpoint every fold: the INSERTs overwrite tables they read
-      val folds = foldAll(ss, storeDir, None).map { case (k, v) => k -> ck(v) }
+      val folds = foldAll(ss, storeDir, None).map { case (k, v) => k -> ck.ckpt(v) }
       val subs = foldSubs(ss, folds)
       SegStore.writeBucketedAll(ss, storeDir, subs, batchId, base = true)
       SegStore.commit(ss, storeDir, batchId, base = true, runId)
@@ -237,7 +238,7 @@ object GraphStream {
     * store) a full push over the committed graph.
     */
   private def publishFallback(ss: SparkSession, storeDir: String,
-      outDir: String, batchId: Long, ck: Ckpts): Unit = {
+      outDir: String, batchId: Long, ck: Scope): Unit = {
     import ss.implicits._
     if (readMeta(ss, storeDir).isDefined) {
       val snap = resolvePrc(ss, storeDir, Nil)
@@ -246,7 +247,7 @@ object GraphStream {
     } else {
       val (p0, d0) = readGraph(ss, storeDir)
       SegStore.writeSnapshot(ss, outDir,
-        ck.add(graft.operators.GraphOps.forwardPush(ss, p0, d0,
+        ck.adopt(graft.operators.GraphOps.forwardPush(ss, p0, d0,
           earlyExit = true)), batchId)
     }
   }
@@ -263,26 +264,26 @@ object GraphStream {
     * idempotent double-write; round-16 ADVICE #3).
     */
   private def fullRefresh(ss: SparkSession, storeDir: String, outDir: String,
-      batchId: Long, base: Boolean, runId: String, ck: Ckpts,
+      batchId: Long, base: Boolean, runId: String, ck: Scope,
       newPairs: DataFrame, newDeg: DataFrame,
       graphDeltaWritten: Boolean = false): Unit = {
     import ss.implicits._
     val (p0, d0) = readGraph(ss, storeDir)
-    val pairsAll = ck(p0.union(newPairs))
-    val degAll = ck(d0.union(newDeg)
+    val pairsAll = ck.ckpt(p0.union(newPairs))
+    val degAll = ck.ckpt(d0.union(newDeg)
       .groupBy($"src").agg(sum($"degree").as("degree")))
     val nS = degAll
       .where(graft.operators.BipartiteGraph.isPprSeed($"src")).count()
-    // both helpers return already-checkpointed frames — register, don't
-    // re-checkpoint (a second localCheckpoint would orphan the first's
-    // blocks; releaseAll walks the registered plan and finds them).
+    // both helpers return their sealed output — adopt it, don't
+    // re-checkpoint (a second checkpoint would orphan the first's
+    // blocks).
     // CC by two-phase star contraction: O(log n) alternations
     // regardless of diameter — the full graph at 100 TB can carry
     // arbitrarily deep chains the hash-min kernel's diameter-bounded
     // rounds cannot afford; labels (min node id) are kernel-identical
-    val state = ck.add(graft.operators.GraphOps.forwardPush(ss, pairsAll,
+    val state = ck.adopt(graft.operators.GraphOps.forwardPush(ss, pairsAll,
       degAll, earlyExit = true, nSOverride = Some(nS)))
-    val ccEdges = ck.add(graft.operators.Training
+    val ccEdges = ck.adopt(graft.operators.Training
       .connectedComponentsTwoPhase(pairsAll)
       .select($"id".as("node"), $"component".as("comp")))
     // label the FULL node universe, not just endpoints of a =!= b
@@ -295,10 +296,10 @@ object GraphStream {
     // that component — the canonical rule the incremental merge
     // agrees with. degAll.src is exactly the node universe (degreesOf
     // unions both endpoints).
-    val cc = ck(degAll.select($"src".as("node"))
+    val cc = ck.ckpt(degAll.select($"src".as("node"))
       .join(ccEdges, Seq("node"), "left_outer")
       .select($"node", coalesce($"comp", $"node").as("comp")))
-    val prcRows = ck(cc
+    val prcRows = ck.ckpt(cc
       .join(state.withColumn("t", lit(true)), Seq("node"), "left_outer")
       .select($"node", $"comp", coalesce($"est", lit(0L)).as("est"),
         coalesce($"res", lit(0L)).as("res"),
@@ -331,7 +332,7 @@ object GraphStream {
     * the full run for those components, everything else untouched.
     */
   private def componentRefresh(ss: SparkSession, storeDir: String,
-      outDir: String, batchId: Long, base: Boolean, runId: String, ck: Ckpts,
+      outDir: String, batchId: Long, base: Boolean, runId: String, ck: Scope,
       newPairs: DataFrame, newDeg: DataFrame, nS: Long,
       maxComponentMembers: Long): Unit = {
     import ss.implicits._
@@ -346,9 +347,9 @@ object GraphStream {
     try {
     // 1. batch endpoints and their committed labels (pruned cc scan,
     //    latest-wins among the delta-bounded pruned rows only)
-    val endpoints = ck(newPairs.select($"c".as("node"))
+    val endpoints = ck.ckpt(newPairs.select($"c".as("node"))
       .union(newPairs.select($"s".as("node"))).distinct())
-    val lbl = ck(SegStore.prunedScanTagged(ss, storeDir, "cc", "node", endpoints)
+    val lbl = ck.ckpt(SegStore.prunedScanTagged(ss, storeDir, "cc", "node", endpoints)
       .map(_.groupBy($"node").agg(expr("max_by(comp, _seg)").as("comp")))
       .getOrElse(Seq.empty[(Long, Long)].toDF("node", "comp")))
     // 2. label merges over the CONTRACTED batch graph: nodes are old
@@ -367,7 +368,7 @@ object GraphStream {
     // (both endpoints in one existing component) drop out of the
     // contraction — the coalesce fallbacks below keep such labels
     // unchanged, which is exactly right. Returns a checkpointed frame.
-    val merged = ck.add(graft.operators.Training
+    val merged = ck.adopt(graft.operators.Training
       .connectedComponentsTwoPhase(contracted))
     // 3. the member set of the merged components: committed members
     //    from a pruned ccn scan BY the old current labels (exact — see
@@ -383,7 +384,7 @@ object GraphStream {
       .join(merged.select($"id".as("node"), $"component".as("nc")),
         Seq("node"), "left_outer")
       .select($"node", coalesce($"nc", $"node").as("comp"))
-    val allMembers = ck(membersRelab.unionByName(newNodes).distinct())
+    val allMembers = ck.ckpt(membersRelab.unionByName(newNodes).distinct())
     // size gate BEFORE the label INSERTs start: the member set drives
     // broadcast-semi pruned scans below, so a giant merged component
     // would broadcast a corpus-sized key set — at that size the
@@ -420,17 +421,17 @@ object GraphStream {
     //    set (pruned scans — the corpus is never shuffled to be
     //    probed) plus this batch's delta; components are edge-closed,
     //    so this IS the merged components' full subgraph
-    val subPairs = ck(SegStore.prunedScan(ss, storeDir, "pairs", "c",
+    val subPairs = ck.ckpt(SegStore.prunedScan(ss, storeDir, "pairs", "c",
       allMembers.select($"node".as("c"))).unionByName(newPairs))
-    val subDeg = ck(SegStore.prunedScan(ss, storeDir, "degree", "src",
+    val subDeg = ck.ckpt(SegStore.prunedScan(ss, storeDir, "degree", "src",
       allMembers.select($"node".as("src")))
       .unionByName(newDeg)
       .groupBy($"src").agg(sum($"degree").as("degree")))
     // 5. the push, with the GLOBAL seed count's initial mass — exact
     //    per the component decomposition argument (forwardPush doc)
-    val state = ck.add(graft.operators.GraphOps.forwardPush(ss, subPairs,
+    val state = ck.adopt(graft.operators.GraphOps.forwardPush(ss, subPairs,
       subDeg, earlyExit = true, nSOverride = Some(nS)))
-    val prcDelta = ck(allMembers
+    val prcDelta = ck.ckpt(allMembers
       .join(state.withColumn("t", lit(true)), Seq("node"), "left_outer")
       .select($"node", $"comp", coalesce($"est", lit(0L)).as("est"),
         coalesce($"res", lit(0L)).as("res"),
@@ -440,7 +441,7 @@ object GraphStream {
       // (the base's GC drops every older partition)
       val folds = foldAll(ss, storeDir,
         Some((newPairs, newDeg, allMembers, prcDelta, nS)))
-        .map { case (k, v) => k -> ck(v) }
+        .map { case (k, v) => k -> ck.ckpt(v) }
       val subs = foldSubs(ss, folds)
       SegStore.writeBucketedAll(ss, storeDir, subs, batchId, base = true)
       val snap = folds("prc").where($"touched").select($"node", $"est", $"res")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{BipartiteGraph, GraphOps, Relational}
+import graft.Scope
+import graft.operators.{BipartiteGraph, GraphOps}
 
 /** Streaming PPR maintenance with per-changed-batch cost tracking the
   * DELTA, not the graph — the scale-safe companion to
@@ -124,15 +125,14 @@ object GraphStreamApprox {
           SegStore.ensureBucketed(ss, storeDir, "pr",
             "node BIGINT, est BIGINT, res BIGINT", Seq("node"), buckets)
           // leak-proof release: every batch-scoped checkpoint registers
-          // here and the single finally releases them on success and
+          // in the batch scope, which releases them on success and
           // failed/replayed attempts alike (round-15 ADVICE #1)
-          val ck = new Ckpts
-          try {
-          val up = ck(batch.select($"c", $"s").distinct())
+          Scope { ck =>
+          val up = ck.ckpt(batch.select($"c", $"s").distinct())
           val bCs = up.select($"c").distinct()
           val present = SegStore.prunedScan(ss, storeDir, "pairs", "c", bCs)
             .join(broadcast(up), Seq("c", "s"), "left_semi")
-          val newPairs = ck(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
+          val newPairs = ck.ckpt(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
           val compactDue = SegStore.active(ss, storeDir).size >= compactEvery
           if (newPairs.isEmpty) {
             // all-replay: graph and state unchanged — record the batch
@@ -144,8 +144,8 @@ object GraphStreamApprox {
                 lit(0L).as("res"))), batchId)
             SegStore.commit(ss, storeDir, batchId, base = false, runId)
           } else {
-            val newEdges = ck(BipartiteGraph.edgesOf(newPairs))
-            val newDeg = ck(BipartiteGraph.degreesOf(newPairs))
+            val newEdges = ck.ckpt(BipartiteGraph.edgesOf(newPairs))
+            val newDeg = ck.ckpt(BipartiteGraph.degreesOf(newPairs))
             val touched = newDeg.select($"src")
             val degPrior = SegStore.prunedScan(ss, storeDir, "degree", "src", touched)
               .groupBy($"src").agg(sum($"degree").as("d_old"))
@@ -158,13 +158,12 @@ object GraphStreamApprox {
             // resolve a stale row past it
             def fullPush(): Unit = {
               val (p0, d0) = GraphStream.readGraph(ss, storeDir)
-              val pairsAll = ck(p0.union(newPairs))
-              val degAll = ck(d0.union(newDeg)
+              val pairsAll = ck.ckpt(p0.union(newPairs))
+              val degAll = ck.ckpt(d0.union(newDeg)
                 .groupBy($"src").agg(sum($"degree").as("degree")))
-              // forwardPush returns an already-checkpointed frame:
-              // register it (ck() would re-checkpoint and orphan the
-              // inner blocks)
-              val state = ck.add(GraphOps.forwardPush(ss, pairsAll, degAll,
+              // forwardPush returns its sealed output: adopt it
+              // (ck.ckpt() would re-checkpoint and orphan the inner blocks)
+              val state = ck.adopt(GraphOps.forwardPush(ss, pairsAll, degAll,
                 earlyExit = true, maxRounds = maxPushRounds))
               SegStore.writeBucketedAll(ss, storeDir, Seq(
                 "pairs" -> pairsAll,
@@ -199,13 +198,13 @@ object GraphStreamApprox {
                 preJoin.foreach(_())
                 fullPush()
               case Some(prDelta0) =>
-                val prDelta = ck(prDelta0)
+                val prDelta = ck.ckpt(prDelta0)
                 if (compactDue) {
                   val (p0, d0) = GraphStream.readGraph(ss, storeDir)
-                  val pairsAll = ck(p0.union(newPairs))
-                  val degAll = ck(d0.union(newDeg)
+                  val pairsAll = ck.ckpt(p0.union(newPairs))
+                  val degAll = ck.ckpt(d0.union(newDeg)
                     .groupBy($"src").agg(sum($"degree").as("degree")))
-                  val prAll = ck(foldPr(ss, storeDir, prDelta))
+                  val prAll = ck.ckpt(foldPr(ss, storeDir, prDelta))
                   SegStore.writeBucketedAll(ss, storeDir, Seq(
                     "pairs" -> pairsAll,
                     "edges" -> BipartiteGraph.edgesOf(pairsAll),
@@ -225,7 +224,7 @@ object GraphStreamApprox {
             }
             }
           }
-          } finally ck.releaseAll()
+          }
         }
         ()
       }
@@ -265,38 +264,39 @@ object GraphStreamApprox {
           expr("max_by(est, _seg)").as("est"),
           expr("max_by(res, _seg)").as("res")))
         .getOrElse(Seq.empty[(Long, Long, Long)].toDF("node", "est", "res"))
-    val endp = newDeg.select($"src".as("node"), $"degree".as("k"))
-      .join(degPrior.select($"src".as("node"), $"d_old"), Seq("node"), "left_outer")
-      .na.fill(0L, Seq("d_old"))
-      .join(stateOf(newDeg.select($"src".as("node"))), Seq("node"), "left_outer")
-      .na.fill(0L, Seq("est", "res"))
-      // p(u)/(α·d) and ((1−α)/α)·p(u)/d at the OLD degree (α = 15/100);
-      // both vanish for a new node (d_old = 0: nothing was ever pushed
-      // with the wrong degree)
-      .withColumn("per_edge",
-        when($"d_old" > 0, expr("(est * 100) DIV (15 * d_old)")).otherwise(lit(0L)))
-      .withColumn("to_partner",
-        when($"d_old" > 0, expr("(est * 85) DIV (15 * d_old)")).otherwise(lit(0L)))
-      .localCheckpoint()
-    // Σ over the node's new partners x of ((1−α)/α)·p(x)/d_x — every
-    // partner is itself an endpoint, so the broadcast side is delta-sized
-    val partnerSum = newEdges
-      .join(broadcast(endp.select($"node".as("dst"), $"to_partner")), "dst")
-      .groupBy($"src").agg(sum($"to_partner").as("partner_sum"))
-    val corrected = endp
-      .join(partnerSum.select($"src".as("node"), $"partner_sum"),
-        Seq("node"), "left_outer")
-      .na.fill(0L, Seq("partner_sum"))
-      .select($"node",
-        // p'(u) = p(u)·(d+k)/d, computed as p + (p·k) DIV d to keep the
-        // intermediate within Long for high-degree nodes
-        when($"d_old" > 0, $"est" + expr("(est * k) DIV d_old"))
-          .otherwise($"est").as("est"),
-        ($"res" - $"k" * $"per_edge" + $"partner_sum").as("res"),
-        ($"d_old" + $"k").as("deg"))
-    val seedRows =
-      try corrected.limit(maxLocalNodes + 1).as[(Long, Long, Long, Long)].collect()
-      finally Relational.releaseCkpt(endp)
+    // endp feeds partnerSum AND the corrected rows; released once the
+    // seed rows are on the driver
+    val seedRows = Scope { sc =>
+      val endp = sc.ckpt(newDeg.select($"src".as("node"), $"degree".as("k"))
+        .join(degPrior.select($"src".as("node"), $"d_old"), Seq("node"), "left_outer")
+        .na.fill(0L, Seq("d_old"))
+        .join(stateOf(newDeg.select($"src".as("node"))), Seq("node"), "left_outer")
+        .na.fill(0L, Seq("est", "res"))
+        // p(u)/(α·d) and ((1−α)/α)·p(u)/d at the OLD degree (α = 15/100);
+        // both vanish for a new node (d_old = 0: nothing was ever pushed
+        // with the wrong degree)
+        .withColumn("per_edge",
+          when($"d_old" > 0, expr("(est * 100) DIV (15 * d_old)")).otherwise(lit(0L)))
+        .withColumn("to_partner",
+          when($"d_old" > 0, expr("(est * 85) DIV (15 * d_old)")).otherwise(lit(0L))))
+      // Σ over the node's new partners x of ((1−α)/α)·p(x)/d_x — every
+      // partner is itself an endpoint, so the broadcast side is delta-sized
+      val partnerSum = newEdges
+        .join(broadcast(endp.select($"node".as("dst"), $"to_partner")), "dst")
+        .groupBy($"src").agg(sum($"to_partner").as("partner_sum"))
+      val corrected = endp
+        .join(partnerSum.select($"src".as("node"), $"partner_sum"),
+          Seq("node"), "left_outer")
+        .na.fill(0L, Seq("partner_sum"))
+        .select($"node",
+          // p'(u) = p(u)·(d+k)/d, computed as p + (p·k) DIV d to keep the
+          // intermediate within Long for high-degree nodes
+          when($"d_old" > 0, $"est" + expr("(est * k) DIV d_old"))
+            .otherwise($"est").as("est"),
+          ($"res" - $"k" * $"per_edge" + $"partner_sum").as("res"),
+          ($"d_old" + $"k").as("deg"))
+      corrected.limit(maxLocalNodes + 1).as[(Long, Long, Long, Long)].collect()
+    }
     if (seedRows.length > maxLocalNodes) return None
     // in-memory working state; adjacency fetched in frontier waves
     val est = new java.util.HashMap[Long, Long]()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Scope
+
 /** Streaming boilerplate-segment scrub: q191's cross-grid segment
   * dedup AS A STREAM — what the fingerprint family got with
   * [[WinnowStream]], for the segment-scrub family. Each micro-batch
@@ -103,13 +105,13 @@ object SegScrubStream {
               Seq("source"), buckets)
           }
           // leak-proof release: every batch-scoped checkpoint registers
-          // here and the single finally releases them on success and
+          // in the batch scope, which releases them on success and
           // failed/replayed attempts alike (round-15 ADVICE #1)
-          val ck = new Ckpts
+          Scope { ck =>
           // replay absorption: seen doc ids from a pruned scan,
           // survivors anti-join the <= batch-sized hit set broadcast
           val bOcc = phased("segment") {
-            ck(graft.operators.Dedup
+            ck.ckpt(graft.operators.Dedup
               .crossSegOcc(batch.dropDuplicates("doc_id")))
           }
           // PRIOR per-seg df, probed by the PRE-absorb segment set (a
@@ -118,17 +120,16 @@ object SegScrubStream {
           // absorb probe — same device as the winnow gate's probeOlds
           val fPrior = SegStore.async(ss) {
             phased("dfprior") {
-              SegStore.prunedScan(ss, storeDir, "sdf", "seg",
+              ck.ckpt(SegStore.prunedScan(ss, storeDir, "sdf", "seg",
                   bOcc.select($"seg").distinct())
-                .groupBy($"seg").agg(sum($"df").as("df_prior"))
-                .localCheckpoint()
+                .groupBy($"seg").agg(sum($"df").as("df_prior")))
             }
           }
           try {
           val newOcc = phased("absorb") {
             val bDocs = bOcc.select($"doc_id").distinct()
             val seen = SegStore.prunedScan(ss, storeDir, "docs", "doc_id", bDocs)
-            ck(bOcc.join(broadcast(seen), Seq("doc_id"), "left_anti")
+            ck.ckpt(bOcc.join(broadcast(seen), Seq("doc_id"), "left_anti")
               .select($"seg", $"doc_id", $"source", $"occ0", $"occ1"))
           }
           val newDocs = newOcc.select($"doc_id").distinct()
@@ -137,12 +138,12 @@ object SegScrubStream {
           val newDf = newOcc.groupBy($"seg").agg(count(lit(1)).as("df"))
           val post = phased("dfpost") {
             val prior = SegStore.await(fPrior)
-            try ck(newDf.join(prior, Seq("seg"), "left_outer")
+            try ck.ckpt(newDf.join(prior, Seq("seg"), "left_outer")
               .select($"seg", $"df".as("df_delta"),
                 coalesce($"df_prior", lit(0L)).as("df_prior"))
               .withColumn("df_post", $"df_prior" + $"df_delta"))
               // batch-seg-sized; feeds inserts AND flips
-            finally graft.operators.Relational.releaseCkpt(prior)
+            finally ck.release(prior)
           }
           // (a) INSERT rows: batch docs against the POST-batch df of
           // their own segments
@@ -165,7 +166,7 @@ object SegScrubStream {
               when($"occ0" > 0, 1L).otherwise(0L).as("f0"),
               when($"occ1" > 0, 1L).otherwise(0L).as("f1"))
           val statDelta = phased("statdelta") {
-            ck(inserts.unionByName(flipRows))
+            ck.ckpt(inserts.unionByName(flipRows))
           }
           // The per-source readout state is maintained INCREMENTALLY
           // (sub-table `srcstat`, additive partials keyed on source):
@@ -230,22 +231,22 @@ object SegScrubStream {
                     greatest($"p0", $"p1")).as("dup_docs_any"),
                   sum(straddleOf(greatest($"p0", $"f0"), greatest($"p1", $"f1"))
                     - $"ex" * straddleOf($"p0", $"p1")).as("straddle_docs"))
-            }).transform(ck.apply)
+            }).transform(ck.ckpt(_))
           }
           if (base) {
             val occ0 = readOcc(ss, storeDir)
-            val occAll = ck(occ0.union(newOcc))
-            val sdfAll = ck(SegStore.readBucketed(ss, storeDir, "sdf")
+            val occAll = ck.ckpt(occ0.union(newOcc))
+            val sdfAll = ck.ckpt(SegStore.readBucketed(ss, storeDir, "sdf")
               .getOrElse(Seq.empty[(String, Long)].toDF("seg", "df"))
               .union(newDf)
               .groupBy($"seg").agg(sum($"df").as("df")))
-            val docsAll = ck(SegStore.readBucketed(ss, storeDir, "docs")
+            val docsAll = ck.ckpt(SegStore.readBucketed(ss, storeDir, "docs")
               .getOrElse(Seq.empty[Long].toDF("doc_id"))
               .union(newDocs))
             // `merged` IS the folded docstat — the compaction reuses
             // it, and its source grain IS the total srcstat state
-            val merged = ck(mergedDocstat(ss, storeDir, statDelta))
-            val srcAll = ck(srcGrainPartial(merged))
+            val merged = ck.ckpt(mergedDocstat(ss, storeDir, statDelta))
+            val srcAll = ck.ckpt(srcGrainPartial(merged))
             SegStore.writeBucketedAll(ss, storeDir,
               Seq("occ" -> occAll, "sdf" -> sdfAll, "docs" -> docsAll,
                 "docstat" -> merged, "srcstat" -> srcAll), batchId,
@@ -283,8 +284,8 @@ object SegScrubStream {
             }
           }
           SegStore.commit(ss, storeDir, batchId, base, runId)
-          } catch { case e: Throwable => SegStore.dropQuiet(fPrior); throw e }
-          finally ck.releaseAll()
+          } catch { case e: Throwable => SegStore.awaitQuiet(fPrior); throw e }
+          }
         }
         ()
       }

@@ -951,7 +951,7 @@ object SegStore {
 
   /** How long an ERROR path waits for in-flight INSERTs/probes before
     * escalating to a job-group cancel ([[quiesce]]) or abandoning a
-    * read-only probe ([[dropQuiet]]). Generous — a healthy INSERT
+    * read-only probe ([[awaitQuiet]]). Generous — a healthy INSERT
     * finishes in seconds — but finite: a wedged write must not hang
     * the error path forever and mask the batch's original failure
     * (round-15 ADVICE #4). Test hook: specs shrink it to force the
@@ -1012,16 +1012,16 @@ object SegStore {
     }
   }
 
-  /** Await an async PROBE and drop its checkpoint, swallowing
-    * non-fatal failures — the gates' error-path cleanup for
-    * concurrent read-only probes. Bounded like [[quiesce]]: a wedged
-    * probe is abandoned after [[quiesceWait]] (it holds no write
+  /** Await an async PROBE, swallowing non-fatal failures — the gates'
+    * error-path cleanup for concurrent read-only probes: once the probe
+    * has finished, its checkpoint is registered in the batch
+    * [[graft.Scope]], which releases it. Bounded like [[quiesce]]: a
+    * wedged probe is abandoned after [[quiesceWait]] (it holds no write
     * hazard — worst case one leaked checkpoint on a wedged-forever
     * probe, vs. the error path hanging). Fatals/interrupts propagate.
     */
-  private[streaming] def dropQuiet(f: scala.concurrent.Future[DataFrame]): Unit =
-    try graft.operators.Relational.releaseCkpt(
-      scala.concurrent.Await.result(f, quiesceWait))
+  private[streaming] def awaitQuiet(f: scala.concurrent.Future[DataFrame]): Unit =
+    try { scala.concurrent.Await.result(f, quiesceWait); () }
     catch {
       case _: java.util.concurrent.TimeoutException => ()
       case scala.util.control.NonFatal(_) => ()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Scope
+
 /** Streaming alignment-independent boilerplate scrub: q192's
   * word-level winnowing scrub AS A STREAM — the gate the
   * alignment-independent family gets, completing the set (q173 →
@@ -66,34 +68,33 @@ object WinnowScrubStream {
             "source STRING, n_docs BIGINT, n_fps BIGINT, dup_fps BIGINT, " +
               "dup_docs BIGINT", Seq("source"), buckets)
           // leak-proof release: every batch-scoped checkpoint registers
-          // here and the single finally releases them on success and
+          // in the batch scope, which releases them on success and
           // failed/replayed attempts alike (round-15 ADVICE #1)
-          val ck = new Ckpts
-          val bSel = ck(graft.operators.Dedup
+          Scope { ck =>
+          val bSel = ck.ckpt(graft.operators.Dedup
             .winnowSel(batch.dropDuplicates("doc_id")))
           // PRIOR per-fp df, probed by the PRE-absorb fingerprint set
           // (superset; extras dropped by the newDf join) so the store
           // scan runs concurrent with the absorb probe
           val fPrior = SegStore.async(ss) {
-            SegStore.prunedScan(ss, storeDir, "fdf", "fp",
+            ck.ckpt(SegStore.prunedScan(ss, storeDir, "fdf", "fp",
                 bSel.select($"fp").distinct())
-              .groupBy($"fp").agg(sum($"df").as("df_prior"))
-              .localCheckpoint()
+              .groupBy($"fp").agg(sum($"df").as("df_prior")))
           }
           try {
           val bDocs = bSel.select($"doc_id").distinct()
           val seen = SegStore.prunedScan(ss, storeDir, "docs", "doc_id", bDocs)
-          val newSel = ck(bSel.join(broadcast(seen), Seq("doc_id"), "left_anti")
+          val newSel = ck.ckpt(bSel.join(broadcast(seen), Seq("doc_id"), "left_anti")
             .select($"fp", $"doc_id", $"source"))
           val newDocs = newSel.select($"doc_id").distinct()
           val newDf = newSel.groupBy($"fp").agg(count(lit(1)).as("df"))
           val post = {
             val prior = SegStore.await(fPrior)
-            try ck(newDf.join(prior, Seq("fp"), "left_outer")
+            try ck.ckpt(newDf.join(prior, Seq("fp"), "left_outer")
               .select($"fp", $"df".as("df_delta"),
                 coalesce($"df_prior", lit(0L)).as("df_prior"))
               .withColumn("df_post", $"df_prior" + $"df_delta"))
-            finally graft.operators.Relational.releaseCkpt(prior)
+            finally ck.release(prior)
           }
           val inserts = newSel
             .join(broadcast(post.select($"fp", $"df_post")), "fp")
@@ -106,7 +107,7 @@ object WinnowScrubStream {
           val flipRows = SegStore.prunedScan(ss, storeDir, "sel", "fp", flipped)
             .select($"doc_id", $"source", lit(0L).as("fps"),
               lit(1L).as("dup_fps"), lit(1L).as("flag"))
-          val statDelta = ck(inserts.unionByName(flipRows))
+          val statDelta = ck.ckpt(inserts.unionByName(flipRows))
           // incremental source-grain state (`srcstat`, additive
           // partials) — the SegScrubStream device: the per-batch
           // snapshot folds |sources|-bounded rows, never the
@@ -143,22 +144,22 @@ object WinnowScrubStream {
                   sum($"fps").as("n_fps"),
                   sum($"dup_fps").as("dup_fps"),
                   sum(greatest($"p", $"flag") - $"p").as("dup_docs"))
-            }).transform(ck.apply)
+            }).transform(ck.ckpt(_))
           }
           if (base) {
-            val selAll = ck(SegStore.readBucketed(ss, storeDir, "sel")
+            val selAll = ck.ckpt(SegStore.readBucketed(ss, storeDir, "sel")
               .getOrElse(Seq.empty[(String, Long, String)]
                 .toDF("fp", "doc_id", "source"))
               .union(newSel))
-            val fdfAll = ck(SegStore.readBucketed(ss, storeDir, "fdf")
+            val fdfAll = ck.ckpt(SegStore.readBucketed(ss, storeDir, "fdf")
               .getOrElse(Seq.empty[(String, Long)].toDF("fp", "df"))
               .union(newDf)
               .groupBy($"fp").agg(sum($"df").as("df")))
-            val docsAll = ck(SegStore.readBucketed(ss, storeDir, "docs")
+            val docsAll = ck.ckpt(SegStore.readBucketed(ss, storeDir, "docs")
               .getOrElse(Seq.empty[Long].toDF("doc_id"))
               .union(newDocs))
-            val merged = ck(mergedDocstat(ss, storeDir, statDelta))
-            val srcAll = ck(srcGrainPartial(merged))
+            val merged = ck.ckpt(mergedDocstat(ss, storeDir, statDelta))
+            val srcAll = ck.ckpt(srcGrainPartial(merged))
             SegStore.writeBucketedAll(ss, storeDir,
               Seq("sel" -> selAll, "fdf" -> fdfAll, "docs" -> docsAll,
                 "docstat" -> merged, "srcstat" -> srcAll), batchId,
@@ -187,8 +188,8 @@ object WinnowScrubStream {
             }
           }
           SegStore.commit(ss, storeDir, batchId, base, runId)
-          } catch { case e: Throwable => SegStore.dropQuiet(fPrior); throw e }
-          finally ck.releaseAll()
+          } catch { case e: Throwable => SegStore.awaitQuiet(fPrior); throw e }
+          }
         }
         ()
       }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Scope
+
 /** Streaming ingest near-dup gate: q173's incremental winnowing AS A
   * STREAM — the screen a continuous crawl/ingest pipeline runs before
   * admitting documents to a training corpus. Each micro-batch of
@@ -101,11 +103,11 @@ object WinnowStream {
               "doc_id BIGINT", Seq("doc_id"), buckets)
           }
           // leak-proof release: every batch-scoped checkpoint registers
-          // here and the single finally releases them on success and
+          // in the batch scope, which releases them on success and
           // failed/replayed attempts alike (round-15 ADVICE #1)
-          val ck = new Ckpts
+          Scope { ck =>
           val bfp = phased("fingerprint") {
-            ck(graft.operators.Dedup
+            ck.ckpt(graft.operators.Dedup
               .winnowFp(batch.dropDuplicates("doc_id")))
           }
           // the probe's two store scans (df cap fold, then the capped
@@ -118,8 +120,7 @@ object WinnowStream {
           // (GateProbe: delta_200 3.4 → ~2.4 s)
           val fOlds = SegStore.async(ss) {
             phased("probe") {
-              probeOlds(ss, storeDir, bfp.select($"h").distinct())
-                .localCheckpoint()
+              ck.ckpt(probeOlds(ss, storeDir, bfp.select($"h").distinct()))
             }
           }
           try {
@@ -130,7 +131,7 @@ object WinnowStream {
           val newFp = phased("absorb") {
             val bDocs = bfp.select($"doc_id").distinct()
             val seen = SegStore.prunedScan(ss, storeDir, "docs", "doc_id", bDocs)
-            ck(bfp.join(broadcast(seen), Seq("doc_id"), "left_anti"))
+            ck.ckpt(bfp.join(broadcast(seen), Seq("doc_id"), "left_anti"))
           }
           val newDf = newFp.groupBy($"h").agg(count(lit(1)).as("df"))
           val newDocs = newFp.select($"doc_id").distinct()
@@ -140,7 +141,7 @@ object WinnowStream {
             try phased("flags") {
               pairFlags(newFp, olds)
                 .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-            } finally graft.operators.Relational.releaseCkpt(olds)
+            } finally ck.release(olds)
           }
           if (base) {
             writeFlags()
@@ -149,9 +150,9 @@ object WinnowStream {
             // fold reads
             val (fpAll, dfAll, docsAll) = phased("fold") {
               val (fp0, df0, docs0) = readAll(ss, storeDir)
-              (ck(fp0.union(newFp)),
-                ck(df0.union(newDf).groupBy($"h").agg(sum($"df").as("df"))),
-                ck(docs0.union(newDocs)))
+              (ck.ckpt(fp0.union(newFp)),
+                ck.ckpt(df0.union(newDf).groupBy($"h").agg(sum($"df").as("df"))),
+                ck.ckpt(docs0.union(newDocs)))
             }
             phased("write") {
               SegStore.writeBucketedAll(ss, storeDir,
@@ -174,8 +175,8 @@ object WinnowStream {
           phased("commit") {
             SegStore.commit(ss, storeDir, batchId, base, runId)
           }
-          } catch { case e: Throwable => SegStore.dropQuiet(fOlds); throw e }
-          finally ck.releaseAll()
+          } catch { case e: Throwable => SegStore.awaitQuiet(fOlds); throw e }
+          }
         }
         ()
       }

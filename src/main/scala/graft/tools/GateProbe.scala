@@ -295,7 +295,7 @@ object GateProbe {
           concat_ws(" ", transform(split($"text", " "),
             w => concat(w, lit(s"_$c")))).as("text"))
       }.reduce(_ unionByName _)
-      for (mult <- Seq(1, 8)) {
+      for (mult <- Seq(1, 8)) graft.Scope { sc =>
         val w = s"$work/composed_${mult}x"
         FsUtil.rm(w)
         val corpus = corpus3Of(mult)
@@ -327,18 +327,18 @@ object GateProbe {
         // (solo inflated), which is protocol noise, not gate cost.
         // One delta batch per gate warms codegen, parquet footers and
         // the insert pool before anything is timed.
-        val dWarm = docs3.orderBy($"doc_id").limit(200)
+        val dWarm = sc.ckpt(docs3.orderBy($"doc_id").limit(200)
           .select(($"doc_id" + lit(890000000L)).as("doc_id"), $"source",
-            $"text").localCheckpoint()
+            $"text"))
         dWarm.select($"doc_id", $"text")
           .write.mode("append").parquet(s"$w/win_in")
         dWarm.write.mode("append").parquet(s"$w/scrub_in")
         dWarm.write.mode("append").parquet(s"$w/wscrub_in")
         gateRuns().foreach(start => start().awaitTermination())
         // ship the SAME 200-doc delta to all three gates
-        val d3 = docs3.orderBy($"doc_id").limit(200)
+        val d3 = sc.ckpt(docs3.orderBy($"doc_id").limit(200)
           .select(($"doc_id" + lit(900000000L)).as("doc_id"), $"source",
-            $"text").localCheckpoint()
+            $"text"))
         d3.select($"doc_id", $"text")
           .write.mode("append").parquet(s"$w/win_in")
         d3.write.mode("append").parquet(s"$w/scrub_in")
@@ -350,9 +350,9 @@ object GateProbe {
         val solo = gateRuns().map { start =>
           time(start().awaitTermination())._1
         }
-        val d3b = docs3.orderBy($"doc_id").limit(200)
+        val d3b = sc.ckpt(docs3.orderBy($"doc_id").limit(200)
           .select(($"doc_id" + lit(910000000L)).as("doc_id"), $"source",
-            $"text").localCheckpoint()
+            $"text"))
         d3b.select($"doc_id", $"text")
           .write.mode("append").parquet(s"$w/win_in")
         d3b.write.mode("append").parquet(s"$w/scrub_in")
@@ -367,7 +367,6 @@ object GateProbe {
           f"=${solo.sum}%.2f s composed=$composedWall%.2f s " +
           f"overlap_ratio=${solo.sum / composedWall}%.2f " +
           "(1.0 = fully serialized, 3.0 = perfect overlap)")
-        graft.operators.Relational.releaseCkpt(dWarm, d3, d3b)
       }
     }
 
@@ -379,14 +378,14 @@ object GateProbe {
     // seed pattern) — a delta rewiring pairs INSIDE copy 0 touches
     // 1/8th of the graph, so the component batch should cost a
     // fraction of the new-seed (full re-push) batch on the same store.
-    if (sections("ppr")) {
+    if (sections("ppr")) graft.Scope { sc =>
       import graft.operators.BipartiteGraph
       // drop phases accumulated by earlier sections (they don't report
       // through `report`, so the buffer may hold their batch bodies)
       phases.synchronized { phases.clear() }
       val w = s"$work/ppr"
       FsUtil.rm(w)
-      val basePairs = BipartiteGraph.pairs(spark, dir).localCheckpoint()
+      val basePairs = sc.ckpt(BipartiteGraph.pairs(spark, dir))
       val copies = (0 until 8).map { cpy =>
         basePairs.select(($"c" + lit(cpy * 20000000L)).as("c"),
           ($"s" + lit(cpy * 20000000L)).as("s"))
@@ -420,10 +419,10 @@ object GateProbe {
       // any that already exist — the component path's common case
       val neigh = basePairs.orderBy($"c", $"s").limit(4001).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
-      val rewired = neigh.indices.dropRight(7).map { i =>
+      val rewired = sc.ckpt(neigh.indices.dropRight(7).map { i =>
         (neigh(i)._1, neigh(i + 7)._2) // pair c_i with a FAR supplier
       }.distinct.toDF("c", "s")
-        .except(basePairs).limit(200).localCheckpoint()
+        .except(basePairs).limit(200))
       println(s"[gate-probe] ppr component delta pairs: ${rewired.count()}")
       rewired.write.mode("append").parquet(s"$w/in")
       jobs.set(0)
@@ -444,7 +443,6 @@ object GateProbe {
         .write.mode("append").parquet(s"$w/in")
       jobs.set(0)
       report("ppr_full_delta", runPpr())
-      graft.operators.Relational.releaseCkpt(basePairs, rewired)
     }
 
     // ---- bucket-count escalation (round-15 VERDICT task #2) -------------
@@ -481,7 +479,7 @@ object GateProbe {
               .parquet(s"$w/in"),
             s"$w/store", s"$w/out", s"$w/ckpt", compactEvery = 1)
             .awaitTermination()
-        locally {
+        graft.Scope { sc =>
           drive() // batch 0: the corpus (delta segment, 8 buckets)
           // per-STORE threshold, recorded in each sub-table's spec
           // (the round-17 move off the old JVM-global knob): MaxValue
@@ -509,7 +507,7 @@ object GateProbe {
           // compacted store, production path (prunedScan InSet)
           val dfp = graft.operators.Dedup.winnowFp(
             delta.withColumn("doc_id", $"doc_id" + lit(50000000L)))
-          val hs = dfp.select($"h").distinct().localCheckpoint()
+          val hs = sc.ckpt(dfp.select($"h").distinct())
           def probe(sub: String): (Double, Double, Long) = {
             val p = SegStore.prunedScan(spark, s"$w/store", sub, "h", hs)
             val (t1, n) = time(p.count())
@@ -522,7 +520,6 @@ object GateProbe {
             f"buckets=${bucketIds.size}%3d store_bytes=${du(new java.io.File(s"$w/store"))}%12d | " +
             f"probe_fp run1=$f1%.2f run2=$f2%.2f rows=$fn | " +
             f"probe_df run1=$d1%.2f run2=$d2%.2f rows=$dn")
-          graft.operators.Relational.releaseCkpt(hs)
         }
       }
     }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Dev utility: dump `explain("formatted")` for the LAZY plan of
   * queries whose declared entry seals its output behind an eager
   * `localCheckpoint` (so `Explain` on the returned frame shows only a
-  * checkpoint scan). Queries with a `seal = false` twin use it
-  * directly; for the others this rebuilds the exact sub-frame the
+  * checkpoint scan). Queries written against a [[graft.Scope]] are
+  * built under [[graft.Scope.Lazy]], which materializes nothing and
+  * so returns the plain plan; for the others this rebuilds the exact sub-frame the
   * optimization touched, line-for-line from the operator source (the
   * build site is cited next to each), so the dumped plan is the real
   * pre/post-change operator shape.
@@ -35,9 +36,9 @@ object PlanDump {
     import spark.implicits._
     val df = name match {
       case "q139_setsim_join" =>
-        graft.operators.Dedup.setsimJoin(spark, sfDir, seal = false)
+        graft.operators.Dedup.setsimJoin(spark, sfDir, graft.Scope.Lazy)
       case "q144_containment_join" =>
-        graft.operators.Dedup.containmentJoin(spark, sfDir, seal = false)
+        graft.operators.Dedup.containmentJoin(spark, sfDir, graft.Scope.Lazy)
       case "q148_semdedup_pairs" =>
         // the q148 candidate-pair scoring sub-frame as built at
         // operators/Similarity.scala (q148_semdedup): cluster-blocked

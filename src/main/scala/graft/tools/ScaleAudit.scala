@@ -261,14 +261,14 @@ object ScaleAudit {
       // asymmetric (probe prefix × full postings), so the profiled
       // quantity is Σ probe·post over PROBED grams plus the largest
       // probed posting bucket.
-      if (want("skew")) locally {
-        val (_, _, _, prefix139) = graft.operators.Dedup.setsimStreams(spark, dir)
+      if (want("skew")) graft.Scope { sc =>
+        val (_, _, _, prefix139) = graft.operators.Dedup.setsimStreams(sc, spark, dir)
         val p = prefix139.groupBy($"trank").agg(count(lit(1)).as("cnt"))
           .agg(count(lit(1)).as("n_keys"), max($"cnt").as("max_bucket"),
             sum($"cnt" * $"cnt").as("sum_sq")).collect()(0)
         println(s"[audit] q139 prefix-key skew @ $dir: " +
           s"n_keys=${p.getLong(0)} max_bucket=${p.getLong(1)} sum_sq=${p.getLong(2)}")
-        val (_, probeA, fullB) = graft.operators.Dedup.containmentStreams(spark, dir)
+        val (_, probeA, fullB) = graft.operators.Dedup.containmentStreams(sc, spark, dir)
         val probes = probeA.groupBy($"g").agg(count(lit(1)).as("probe_cnt"))
         val posts = fullB.groupBy($"g").agg(count(lit(1)).as("post_cnt"))
         val q = probes.join(posts, "g")
@@ -345,9 +345,10 @@ object ScaleAudit {
       // Warm each variant once (bench() cleaned all caches), then time.
       if (want("q67_interval_join")) {
         def timedPairs(chunk: Long) = {
-          graft.operators.Extras.intervalJoinOn(spark, dir, 3600L * 1000000L, chunk).count()
-          time(graft.operators.Extras
-            .intervalJoinOn(spark, dir, 3600L * 1000000L, chunk).count())
+          def pairs() = graft.Scope(graft.operators.Extras
+            .intervalJoinOn(spark, dir, 3600L * 1000000L, chunk, _))
+          pairs().count()
+          time(pairs().count())
         }
         val (tc, nc) = timedPairs(1024L)
         val (tu, nu) = timedPairs(Long.MaxValue / 4)
@@ -632,11 +633,11 @@ object ScaleAudit {
       // nodes — no new seeds, so the delta-local path runs) against a
       // 1x vs mult-x accumulated graph. The exact gate re-pushes
       // O(graph) here; this gate's wall must NOT track the graph.
-      if (only.isEmpty || only.exists("ppr_approx".contains)) locally {
+      if (only.isEmpty || only.exists("ppr_approx".contains)) graft.Scope { sc =>
         import graft.streaming.{GraphStreamApprox, SegStore}
         val gw = s"$work/ppr_approx_${math.abs(dir.hashCode)}"
         FsUtil.rm(gw)
-        val g = graft.operators.BipartiteGraph.pairs(spark, dir).localCheckpoint()
+        val g = sc.ckpt(graft.operators.BipartiteGraph.pairs(spark, dir))
         g.write.mode("overwrite").parquet(s"$gw/in")
         // 200 genuinely-new edges among copy-0 endpoints: recombine
         // existing customers with existing suppliers, drop anything
@@ -644,10 +645,10 @@ object ScaleAudit {
         val base0 = graft.operators.BipartiteGraph.pairs(spark, base)
         val cS = base0.select($"c").distinct().orderBy($"c").limit(100)
         val sS = base0.select($"s").distinct().orderBy($"s".desc).limit(100)
-        val pool = cS.crossJoin(sS)
+        val pool = sc.ckpt(cS.crossJoin(sS)
           .join(base0, Seq("c", "s"), "left_anti")
-          .orderBy($"c", $"s").localCheckpoint()
-        val delta = pool.limit(200).localCheckpoint()
+          .orderBy($"c", $"s"))
+        val delta = sc.ckpt(pool.limit(200))
         def runGate(): Double = time {
           GraphStreamApprox.pprPushStreamApprox(
             spark.readStream.schema("c LONG, s LONG").parquet(s"$gw/in"),
@@ -680,7 +681,6 @@ object ScaleAudit {
           }
           println(s"[audit] ppr_approx_delta @ $dir: ${walls.mkString("; ")}")
         }
-        graft.operators.Relational.releaseCkpt(g, delta, pool)
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stage-level wall attribution for q139 (round-13 verdict task #5):
@@ -48,38 +48,34 @@ object StageProbe {
       println(f"[stage] $name%-12s t=$t%6.2f s rows=$n")
       reset()
     }
+    // each stage probe runs in its own scope: the streams' persist and
+    // checkpoint are released once the count returns
+    def q139Streams[A](f: ((DataFrame, DataFrame, DataFrame, DataFrame)) => A): A =
+      graft.Scope(sc => f(graft.operators.Dedup.setsimStreams(sc, spark, dir)))
     probe("toks") {
-      val (toks, ranked, _, _) = graft.operators.Dedup.setsimStreams(spark, dir)
-      val n = toks.count()
-      graft.operators.Relational.releaseCkpt(ranked); n
+      q139Streams { case (toks, _, _, _) => toks.count() }
     }
     probe("ranked") {
-      val (_, ranked, _, _) = graft.operators.Dedup.setsimStreams(spark, dir)
-      val n = ranked.count()
-      graft.operators.Relational.releaseCkpt(ranked); n
+      q139Streams { case (_, ranked, _, _) => ranked.count() }
     }
     probe("prefix") {
-      val (_, ranked, _, prefix) = graft.operators.Dedup.setsimStreams(spark, dir)
-      val n = prefix.count()
-      graft.operators.Relational.releaseCkpt(ranked); n
+      q139Streams { case (_, _, _, prefix) => prefix.count() }
     }
     probe("arrs") {
-      val (_, ranked, dt, _) = graft.operators.Dedup.setsimStreams(spark, dir)
-      val n = dt.groupBy($"doc_id")
+      q139Streams { case (_, _, dt, _) => dt.groupBy($"doc_id")
         .agg(sort_array(collect_list($"trank")).as("toks"), count(lit(1)).as("n"))
         .count()
-      graft.operators.Relational.releaseCkpt(ranked); n
+      }
     }
     probe("cands") {
-      val (_, ranked, _, prefix) = graft.operators.Dedup.setsimStreams(spark, dir)
-      val n = prefix.as("a").join(prefix.as("b"),
+      q139Streams { case (_, _, _, prefix) => prefix.as("a").join(prefix.as("b"),
           $"a.trank" === $"b.trank" && $"a.doc_id" < $"b.doc_id" &&
             least($"a.t", $"b.t") * 10 >= greatest($"a.t", $"b.t") * 9 &&
             (lit(1) + least($"a.t" - $"a.rn", $"b.t" - $"b.rn")) * 19 >=
               ($"a.t" + $"b.t") * 9)
         .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
         .distinct().count()
-      graft.operators.Relational.releaseCkpt(ranked); n
+      }
     }
     probe("full") {
       graft.SparkEntry.queries("q139_setsim_join")(spark, dir).count()
@@ -91,29 +87,14 @@ object StageProbe {
     println("[stage] ==== q133_knn_triangles ====")
     graft.SparkEntry.queries("q133_knn_triangles")(spark, dir).count() // warm
     reset()
-    def q133Stages() = graft.operators.Analytics.knnTriangleStages(spark, dir)
-    def dropPersists(dfs: org.apache.spark.sql.DataFrame*): Unit =
-      dfs.foreach(_.unpersist(blocking = false))
-    probe("pw") {
-      val (pw, _, e, o, _, _, _) = q133Stages()
-      val n = pw.count(); dropPersists(e, o); n
-    }
-    probe("topk") {
-      val (_, topk, e, o, _, _, _) = q133Stages()
-      val n = topk.count(); dropPersists(e, o); n
-    }
-    probe("edges") {
-      val (_, _, e, o, _, _, _) = q133Stages()
-      val n = e.count(); dropPersists(e, o); n
-    }
-    probe("wedges") {
-      val (_, _, e, o, _, wedge, _) = q133Stages()
-      val n = wedge.count(); dropPersists(e, o); n
-    }
-    probe("triangles") {
-      val (_, _, e, o, _, _, tri) = q133Stages()
-      val n = tri.count(); dropPersists(e, o); n
-    }
+    def q133Stages[A](f: ((DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
+        DataFrame, DataFrame)) => A): A =
+      graft.Scope(sc => f(graft.operators.Analytics.knnTriangleStages(sc, spark, dir)))
+    probe("pw") { q133Stages { case (pw, _, _, _, _, _, _) => pw.count() } }
+    probe("topk") { q133Stages { case (_, topk, _, _, _, _, _) => topk.count() } }
+    probe("edges") { q133Stages { case (_, _, e, _, _, _, _) => e.count() } }
+    probe("wedges") { q133Stages { case (_, _, _, _, _, wedge, _) => wedge.count() } }
+    probe("triangles") { q133Stages { case (_, _, _, _, _, _, tri) => tri.count() } }
     probe("full133") {
       graft.SparkEntry.queries("q133_knn_triangles")(spark, dir).count()
     }
@@ -126,34 +107,29 @@ object StageProbe {
     println("[stage] ==== q178_curate_card_diff ====")
     graft.SparkEntry.queries("q178_curate_card_diff")(spark, dir).count() // warm
     reset()
-    def dropStages(stages: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit =
-      stages.foreach(_._2.unpersist(blocking = false))
-    probe("funnel") {
-      val stages = graft.operators.Analytics.curationStages(spark, dir)
-      val n = stages.last._2.count(); dropStages(stages); n
-    }
+    def clean[A](f: DataFrame => A): A = graft.Scope(sc =>
+      f(graft.operators.Analytics.curationStages(sc, spark, dir).last._2))
+    probe("funnel") { clean(_.count()) }
     probe("curated") {
-      val stages = graft.operators.Analytics.curationStages(spark, dir)
-      val clean = stages.last._2
-      val n = clean.join(
-        graft.operators.TextOps.gopherRules(clean)
-          .where($"keep" === 1).select($"doc_id"),
-        Seq("doc_id"), "left_semi").count()
-      dropStages(stages); n
+      clean { c =>
+        c.join(
+          graft.operators.TextOps.gopherRules(c)
+            .where($"keep" === 1).select($"doc_id"),
+          Seq("doc_id"), "left_semi").count()
+      }
     }
     probe("card_before") {
       graft.operators.Curation.cardOf(
         graft.Tables.load(spark, dir, "documents"), exact = true).count()
     }
     probe("card_after") {
-      val stages = graft.operators.Analytics.curationStages(spark, dir)
-      val clean = stages.last._2
-      val curated = clean.join(
-        graft.operators.TextOps.gopherRules(clean)
-          .where($"keep" === 1).select($"doc_id"),
-        Seq("doc_id"), "left_semi")
-      val n = graft.operators.Curation.cardOf(curated, exact = true).count()
-      dropStages(stages); n
+      clean { c =>
+        val curated = c.join(
+          graft.operators.TextOps.gopherRules(c)
+            .where($"keep" === 1).select($"doc_id"),
+          Seq("doc_id"), "left_semi")
+        graft.operators.Curation.cardOf(curated, exact = true).count()
+      }
     }
     probe("full178") {
       graft.SparkEntry.queries("q178_curate_card_diff")(spark, dir).count()

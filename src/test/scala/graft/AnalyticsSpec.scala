@@ -146,17 +146,20 @@ class AnalyticsSpec extends AnyFunSuite {
     import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions.{count, lit}
     val observations = scala.collection.mutable.LinkedHashMap[String, Observation]()
-    val stages = Analytics.curationStages(spark, sf, (name, df) => {
-      val o = Observation(s"curation_$name")
-      observations(name) = o
-      df.observe(o, count(lit(1)).as("n"))
-    })
     // materialize the LINEAR prefix once: the dedup stage's single
     // collect fires every upstream observation (the decontamination
     // stage consumes its input twice, so at scale that input is
     // persisted before fan-out — see the scaladoc)
-    val linear = stages.take(5)
-    linear.last._2.collect()
+    val linear = Scope { sc =>
+      val stages = Analytics.curationStages(sc, spark, sf, (name, df) => {
+        val o = Observation(s"curation_$name")
+        observations(name) = o
+        df.observe(o, count(lit(1)).as("n"))
+      })
+      val linear = stages.take(5)
+      linear.last._2.collect()
+      linear
+    }
     val funnel = Analytics.q109_curation_pipeline(spark, sf).collect()
       .map(r => r.getString(1) -> r.getLong(2)).toMap
     linear.foreach { case (name, _) =>

@@ -91,4 +91,18 @@ class BenchHygieneSpec extends AnyFunSuite {
     assert(reruns == List("q_b", "q_c", "q_d")) // suite order, no q_a
     assert(resets == 3) // reset after every re-draw, throwing included
   }
+
+  test("subset runs at two scale factors write two artifacts") {
+    val a = Bench.artifactName("/root/testdata/sf0.001", subset = true, sameSf = true)
+    val b = Bench.artifactName("/root/testdata/sf0.01", subset = true, sameSf = true)
+    assert(a != b, s"two sf dirs share the subset artifact $a")
+    assert(a.startsWith("BENCH_FULL_subset_sf0.001_") && a.endsWith(".json"), a)
+    // the same dir spelled differently is the same artifact
+    assert(Bench.artifactName("/root/testdata/./sf0.001/", subset = true,
+      sameSf = false) == a)
+    // neither collides with the full-run names
+    val full = Bench.artifactName("/root/testdata/sf0.001", subset = false, sameSf = true)
+    val divert = Bench.artifactName("/root/testdata/sf0.001", subset = false, sameSf = false)
+    assert(full == "BENCH_FULL.json" && Set(a, b, full, divert).size == 4)
+  }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the drop-on-return cache policy (round-9 ADVICE #5) for the
   * WHOLE query surface: after any `SparkEntry.queries` entry returns
   * and its result is consumed, the only block-holding RDD allowed to
-  * remain is the query's own sealed output (the `dropAfter`
+  * remain is the query's own sealed output (the [[Scope.seal]]
   * checkpoint — at most ONE persistent RDD). Queries that return a
   * plain lazy plan leave zero. Anything else is a leak: an embedding
   * application calling that query in a loop would accumulate dead
@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * sealed output once consumed (`localCheckpoint` blocks are not in
   * the SQL cache manager, so only an RDD-level unpersist releases
   * them); the assertion is on what a query leaves BEYOND that.
+  *
+  * The failure-path pins hold [[Scope]] to the same standard when
+  * the body throws.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
@@ -41,7 +44,7 @@ class CacheHygieneSpec extends AnyFunSuite {
         val before = sc.getPersistentRDDs.keySet
         val df = fn(spark, sf)
         df.count() // consume: lazy plans run their internal persists here
-        // blocks the RETURNED plan itself is backed by (the dropAfter
+        // blocks the RETURNED plan itself is backed by (the Scope
         // seal, or a checkpoint the lazy output legitimately reads)
         // are the caller's to release — everything else is a leak
         val outIds = df.queryExecution.logical.collect {
@@ -56,5 +59,38 @@ class CacheHygieneSpec extends AnyFunSuite {
     }
     assert(leaks.isEmpty,
       s"queries holding blocks beyond their own output: ${leaks.mkString(", ")}")
+  }
+
+  test("a Scope body that persists, checkpoints and then throws leaves no persistent RDD") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[IllegalStateException] {
+      Scope { s =>
+        val p = s.persist(spark.range(1000).toDF("id"))
+        p.count() // materialize the cache blocks
+        s.ckpt(p.where("id % 2 = 0"))
+        throw new IllegalStateException("body failed after materializing")
+      }
+    }
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"failed scope left persistent RDDs: $leaked")
+  }
+
+  test("bfsHops with no seed nodes throws and leaves no persistent RDD") {
+    import spark.implicits._
+    // every customer key shifted past the seed range (node <= 20)
+    val dir = java.nio.file.Files.createTempDirectory("graft_noseed_").toString
+    Tables.load(spark, sf, "lineitem").write.parquet(s"$dir/lineitem.parquet")
+    Tables.load(spark, sf, "orders")
+      .withColumn("o_custkey", $"o_custkey" + 1000000L)
+      .write.parquet(s"$dir/orders.parquet")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.GraphOps.bfsHops(spark, dir, earlyExit = true)
+    }
+    assert(e.getMessage.contains("no seed nodes"), e.getMessage)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"empty-seed bfsHops left persistent RDDs: $leaked")
   }
 }

@@ -46,7 +46,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(txt.startsWith("[\n") && txt.contains("r_name"))
   }
 
-  test("spark.graft.reliableCheckpoint routes dropAfter's seal through a reliable checkpoint") {
+  test("spark.graft.reliableCheckpoint routes Scope.seal through a reliable checkpoint") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     def sealRdds(out: org.apache.spark.sql.DataFrame) =
@@ -54,21 +54,19 @@ class ConfigSpec extends AnyFunSuite {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       }
     // default: local checkpoint — no checkpoint file on disk
-    val dfLocal = graft.operators.Relational.dropAfter(
-      spark.range(10).toDF("id"))
+    val dfLocal = Scope(_.seal(spark.range(10).toDF("id")))
     assert(dfLocal.collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
     assert(sealRdds(dfLocal).nonEmpty &&
       sealRdds(dfLocal).forall(_.getCheckpointFile.isEmpty),
       "default seal must be a LOCAL checkpoint (no checkpoint dir needed)")
     // switch on: the seal is a reliable checkpoint against the
-    // configured dir (the cluster deployment story the dropAfter
+    // configured dir (the cluster deployment story the Scope.seal
     // scaladoc documents) — same rows, executor-loss-safe blocks
     val ckDir = Files.createTempDirectory("reliable-ck").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {
-      val df = graft.operators.Relational.dropAfter(
-        spark.range(10).toDF("id"))
+      val df = Scope(_.seal(spark.range(10).toDF("id")))
       assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
       val rdds = sealRdds(df)
       assert(rdds.nonEmpty && rdds.forall(_.getCheckpointFile.isDefined),

@@ -76,11 +76,15 @@ class KernelEqualitySpec extends AnyFunSuite {
     val codeExpr = projs.zipWithIndex
       .map { case (p, b) => s"(CASE WHEN ($p) > 0 THEN ${1L << b} ELSE 0 END)" }
       .mkString(" + ")
-    val df = rows.toDF("sv")
+    // null elements: every per-bit fold turns NULL, so the SQL code
+    // is 0 — compared null-safely, as a NULL on either side must match
+    val withNulls = Seq(Seq(Some(5L), None, Some(-3L)), Seq(None),
+      Seq(Some(1000000L), Some(-7L), None)).map(Tuple1(_)).toDF("sv")
+    val df = rows.toDF("sv").union(withNulls)
       .withColumn("sql", expr(s"CAST($codeExpr AS BIGINT)"))
       .withColumn("kern", graft.functions.GraftFunctions.srp_code_i64($"sv", 16))
-    assert(df.where($"sql" =!= $"kern").isEmpty,
-      df.where($"sql" =!= $"kern").select("sv", "sql", "kern")
+    assert(df.where(!($"sql" <=> $"kern")).isEmpty,
+      df.where(!($"sql" <=> $"kern")).select("sv", "sql", "kern")
         .collect().take(3).mkString("\n"))
   }
 
@@ -101,12 +105,30 @@ class KernelEqualitySpec extends AnyFunSuite {
         |    aggregate(sequence(0, 7), CAST(0 AS BIGINT),
         |      (a, t) -> a + qq[i * 8 + t] * dq[j * 8 + t]))))""".stripMargin
         .replace("\n", " ")
-    val df = rows.toDF("qq", "dq")
+    // null elements: a null in a query sub-vector nulls the total; a
+    // null in a doc sub-vector drops that sub-vector from array_max;
+    // nulls in every doc sub-vector null the total
+    def holes(v: Array[Long], at: Int*) =
+      v.toSeq.zipWithIndex.map { case (x, k) => if (at.contains(k)) None else Some(x) }
+    val withNulls = Seq(
+      (holes(vec(), 13), holes(vec())),
+      (holes(vec()), holes(vec(), 17)),
+      (holes(vec()), holes(vec(), 3, 60)),
+      (holes(vec()), holes(vec(), (0 until 8).map(_ * 8 + 5): _*)),
+      (holes(vec(), 0, 63), holes(vec(), 8))).toDF("qq", "dq")
+    val df = rows.toDF("qq", "dq").union(withNulls)
       .withColumn("sql", expr(s"CAST(($maxsim) AS BIGINT)"))
       .withColumn("kern", graft.functions.GraftFunctions.maxsim_i64($"qq", $"dq"))
-    assert(df.where($"sql" =!= $"kern").isEmpty,
-      df.where($"sql" =!= $"kern").select("sql", "kern")
+    assert(df.where(!($"sql" <=> $"kern")).isEmpty,
+      df.where(!($"sql" <=> $"kern")).select("sql", "kern")
         .collect().take(3).mkString("\n"))
+    // fewer than 64 elements on either side: NULL, never a read past
+    // the end (the fold itself fails there under ANSI)
+    val short = Seq((vec().take(63), vec()), (vec(), vec().take(8)),
+      (Array.empty[Long], Array.empty[Long])).toDF("qq", "dq")
+      .select(graft.functions.GraftFunctions.maxsim_i64($"qq", $"dq").as("kern"))
+    assert(short.where($"kern".isNotNull).isEmpty,
+      short.collect().mkString("\n"))
   }
 
   test("poly31_bucket equals the per-character SQL fold it replaced") {

@@ -85,10 +85,10 @@ class PlanInvariantsSpec extends AnyFunSuite {
   }
 
   test("q67: interval join is a binned equi-join on chunk-pair keys, not a nested loop") {
-    // lazy variant: the shipped query seals its output behind a
-    // checkpoint (drop-on-return), which would hide the join shape
+    // lazy scope: the shipped query seals its output behind a
+    // checkpoint (Scope.seal), which would hide the join shape
     val p = graft.operators.Extras.intervalJoinOn(spark, sf,
-      3600L * 1000000L, 1024L, seal = false)
+      3600L * 1000000L, 1024L, Scope.Lazy)
       .queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"interval predicate planned as a cross product:\n$p")
@@ -144,7 +144,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   }
 
   test("q139: candidates meet in the prefix-token equi-join, never a cross product") {
-    val p = graft.operators.Dedup.setsimJoin(spark, sf, seal = false)
+    val p = graft.operators.Dedup.setsimJoin(spark, sf, Scope.Lazy)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"all-pairs product:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop pairing:\n$p")
@@ -156,14 +156,14 @@ class PlanInvariantsSpec extends AnyFunSuite {
   }
 
   test("q144: containment candidates meet in the probe-gram equi-join, never a cross product") {
-    val p = graft.operators.Dedup.containmentJoin(spark, sf, seal = false)
+    val p = graft.operators.Dedup.containmentJoin(spark, sf, Scope.Lazy)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"all-pairs product:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop pairing:\n$p")
   }
 
   test("q192: winnow selection is a per-doc window; no cross product anywhere") {
-    val p = graft.operators.Dedup.winnowScrub(spark, sf, seal = false)
+    val p = graft.operators.Dedup.winnowScrub(spark, sf, Scope.Lazy)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"all-pairs product:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop pairing:\n$p")
@@ -175,7 +175,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   }
 
   test("q193: source pairs expand map-side from the per-fp source array, never a fp self-join") {
-    val p = graft.operators.Dedup.sourceContamination(spark, sf, seal = false)
+    val p = graft.operators.Dedup.sourceContamination(spark, sf, Scope.Lazy)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"all-pairs product:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop pairing:\n$p")
@@ -186,7 +186,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   }
 
   test("q196: split pairs expand map-side from the per-fp split set; no doc-pair join") {
-    val p = graft.operators.Curation.winnowSplitLeakage(spark, sf, seal = false)
+    val p = graft.operators.Curation.winnowSplitLeakage(spark, sf, Scope.Lazy)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"all-pairs product:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop pairing:\n$p")

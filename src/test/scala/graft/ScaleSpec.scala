@@ -256,7 +256,7 @@ class ScaleSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
     // chunkRows=256 -> hot bucket nc = ceil(3000/256) = 12, cold nc = 1
-    val (a, b, _) = graft.operators.Extras.intervalJoinSides(spark, dir, hourUs, 256L)
+    val (a, b) = graft.operators.Extras.intervalJoinSides(Scope.Lazy, spark, dir, hourUs, 256L)
     val maxCb = a.agg(max($"cb")).collect()(0).getInt(0)
     assert(maxCb == 11, s"hot hour not segmented into 12 chunks (max cb = $maxCb)")
     // per-key-group input = one chunk's sessions, NOT the bucket's 120:
@@ -274,7 +274,7 @@ class ScaleSpec extends AnyFunSuite {
     // equals the closed form 120*119/2 (every hot pair overlaps; the
     // cold point-sessions never do)
     def rows(chunkRows: Long) =
-      graft.operators.Extras.intervalJoinOn(spark, dir, hourUs, chunkRows)
+      Scope(graft.operators.Extras.intervalJoinOn(spark, dir, hourUs, chunkRows, _))
         .collect().map(_.toSeq).toSeq
     val chunked = rows(256L)
     assert(chunked.size == 120 * 119 / 2, s"expected 7140 pairs, got ${chunked.size}")

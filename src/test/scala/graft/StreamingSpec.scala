@@ -939,7 +939,7 @@ class StreamingSpec extends AnyFunSuite {
     runOnce()
     def readout(d: org.apache.spark.sql.DataFrame) =
       graft.operators.Dedup.winnowReadout(
-        graft.operators.Dedup.winnowSel(d), seal = false)
+        graft.operators.Dedup.winnowSel(d), Scope.Lazy)
     val docs01 = p0.union(p1)
     val snap1 = SegStore.readSnapshot(spark, s"$work/out").get
     val want1 = readout(docs01)
@@ -1058,106 +1058,107 @@ class StreamingSpec extends AnyFunSuite {
     // Batch 1: a bulk edge delta (corrections at many endpoints);
     // batch 2: ONE new edge (the strict delta-sized pin); batch 3:
     // re-delivers batch 1 verbatim (pure replay).
-    val full = BipartiteGraph.pairs(spark, sfG).localCheckpoint()
-    val marked = full
-      .withColumn("rc", row_number().over(Window.partitionBy($"c").orderBy($"s")))
-      .withColumn("rs", row_number().over(Window.partitionBy($"s").orderBy($"c")))
-      .withColumn("held", $"rc" > 1 && $"rs" > 1 &&
-        pmod(hash($"c", $"s"), lit(10)) === 0)
-    val held = marked.where($"held").select($"c", $"s").localCheckpoint()
-    val single = held.orderBy($"c", $"s").limit(1).localCheckpoint()
-    val delta = held.join(single, Seq("c", "s"), "left_anti").localCheckpoint()
-    val base = marked.where(!$"held").select($"c", $"s")
-    assert(delta.count() > 100, "fixture degenerate: no held-back edges")
-    shipFile(base, "0_base")
-    // the delta ALSO re-delivers some base pairs: a changed batch must
-    // absorb replayed pairs pair-level, not just batch-level
-    shipFile(delta.unionByName(base.limit(50)), "1_delta")
-    shipFile(single, "2_single")
-    shipFile(delta, "3_replay")
-    val store = s"$work/store"
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema("c LONG, s LONG")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      GraphStreamApprox.pprPushStreamApprox(stream, store, s"$work/ckpt")
-        .awaitTermination()
+    // the fixture checkpoints die with the scope
+    Scope { sc =>
+      val full = sc.ckpt(BipartiteGraph.pairs(spark, sfG))
+      val marked = full
+        .withColumn("rc", row_number().over(Window.partitionBy($"c").orderBy($"s")))
+        .withColumn("rs", row_number().over(Window.partitionBy($"s").orderBy($"c")))
+        .withColumn("held", $"rc" > 1 && $"rs" > 1 &&
+          pmod(hash($"c", $"s"), lit(10)) === 0)
+      val held = sc.ckpt(marked.where($"held").select($"c", $"s"))
+      val single = sc.ckpt(held.orderBy($"c", $"s").limit(1))
+      val delta = sc.ckpt(held.join(single, Seq("c", "s"), "left_anti"))
+      val base = marked.where(!$"held").select($"c", $"s")
+      assert(delta.count() > 100, "fixture degenerate: no held-back edges")
+      shipFile(base, "0_base")
+      // the delta ALSO re-delivers some base pairs: a changed batch must
+      // absorb replayed pairs pair-level, not just batch-level
+      shipFile(delta.unionByName(base.limit(50)), "1_delta")
+      shipFile(single, "2_single")
+      shipFile(delta, "3_replay")
+      val store = s"$work/store"
+      def runOnce(): Unit = {
+        val stream = spark.readStream
+          .schema("c LONG, s LONG")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(src)
+        GraphStreamApprox.pprPushStreamApprox(stream, store, s"$work/ckpt")
+          .awaitTermination()
+      }
+      runOnce()
+      // layout: batch 0 full-pushed as a BASE (empty store), batches 1-3
+      // are deltas (edge-only / single-edge / all-replay — never a full
+      // push)
+      val segs = SegStore.active(spark, store)
+      assert(segs.map(s => (s.id, s.base)) ==
+        Seq((0L, true), (1L, false), (2L, false), (3L, false)),
+        s"unexpected segment layout: $segs")
+      // the accumulated graph IS the full pair index
+      val (stored, degStore) = GraphStream.readGraph(spark, store)
+      assert(stored.except(full).isEmpty && full.except(stored).isEmpty,
+        "accumulated pair store != full pair index")
+      // DELTA-SIZED state maintenance: the single-edge batch wrote state
+      // rows only for the two endpoints' pushed neighborhoods (a small
+      // fraction of the graph); the all-replay batch wrote none
+      val nNodes = degStore.count()
+      // per-segment row counts via the catalog table (an all-replay
+      // batch's partition holds zero files — a raw path read can't
+      // infer a schema from it)
+      def prRows(segId: Long): Long = spark
+        .table(SegStore.bucketedName(store, "pr"))
+        .where(col("_seg") === segId).count()
+      val pr2 = prRows(2L)
+      val pr3 = prRows(3L)
+      assert(pr3 == 0, s"all-replay batch wrote $pr3 state rows")
+      assert(pr2 > 0 && pr2 < nNodes / 4,
+        s"single-edge batch wrote $pr2 state rows over $nNodes nodes - " +
+          "not delta-sized")
+      // CONTRACT (a): every node's residual is below the push threshold
+      val state = GraphStreamApprox.readPprApprox(spark, store)
+      val viol = state
+        .join(degStore.select($"src".as("node"), $"degree"), Seq("node"))
+        .where(abs($"res") > $"degree" * Eps)
+      assert(viol.isEmpty,
+        s"residuals above Eps*degree: ${viol.take(3).toSeq}")
+      // CONTRACT (b): est within 3*Eps*(degree+1) of a fresh CONVERGED
+      // push over the same final graph (2x the two runs' forward-push
+      // bounds + integer-rounding slack)
+      val conv = GraphOps.forwardPush(spark, full,
+        BipartiteGraph.degreesOf(full), earlyExit = true, maxRounds = 64)
+      val bad = state.select($"node", $"est".as("est_a"))
+        .join(conv.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
+        .na.fill(0L, Seq("est_a", "est_c"))
+        .join(degStore.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
+        .na.fill(0L, Seq("degree"))
+        .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
+      assert(bad.isEmpty,
+        s"est outside the error contract: ${bad.take(3).toSeq}")
+      // the documented fallback: a batch introducing a NEW seed-pattern
+      // node changes the global seed mass — full converged re-push,
+      // written as a base segment; the contract holds on the new graph
+      val maxC = full.agg(max($"c")).as[Long].head()
+      val newSeedNode = ((maxC / 20L) + 1L) * 20L
+      val someS = full.agg(max($"s")).as[Long].head()
+      shipFile(Seq((newSeedNode, someS)).toDF("c", "s"), "4_newseed")
+      runOnce()
+      val segs2 = SegStore.active(spark, store)
+      assert(segs2.map(s => (s.id, s.base)) == Seq((4L, true)),
+        s"new-seed batch did not full-push to a base: $segs2")
+      val full2 = sc.ckpt(full.unionByName(Seq((newSeedNode, someS)).toDF("c", "s")))
+      val deg2 = BipartiteGraph.degreesOf(full2)
+      val state2 = GraphStreamApprox.readPprApprox(spark, store)
+      val conv2 = GraphOps.forwardPush(spark, full2, deg2,
+        earlyExit = true, maxRounds = 64)
+      val bad2 = state2.select($"node", $"est".as("est_a"))
+        .join(conv2.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
+        .na.fill(0L, Seq("est_a", "est_c"))
+        .join(deg2.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
+        .na.fill(0L, Seq("degree"))
+        .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
+      assert(bad2.isEmpty,
+        s"post-fallback est outside the contract: ${bad2.take(3).toSeq}")
     }
-    runOnce()
-    // layout: batch 0 full-pushed as a BASE (empty store), batches 1-3
-    // are deltas (edge-only / single-edge / all-replay — never a full
-    // push)
-    val segs = SegStore.active(spark, store)
-    assert(segs.map(s => (s.id, s.base)) ==
-      Seq((0L, true), (1L, false), (2L, false), (3L, false)),
-      s"unexpected segment layout: $segs")
-    // the accumulated graph IS the full pair index
-    val (stored, degStore) = GraphStream.readGraph(spark, store)
-    assert(stored.except(full).isEmpty && full.except(stored).isEmpty,
-      "accumulated pair store != full pair index")
-    // DELTA-SIZED state maintenance: the single-edge batch wrote state
-    // rows only for the two endpoints' pushed neighborhoods (a small
-    // fraction of the graph); the all-replay batch wrote none
-    val nNodes = degStore.count()
-    // per-segment row counts via the catalog table (an all-replay
-    // batch's partition holds zero files — a raw path read can't
-    // infer a schema from it)
-    def prRows(segId: Long): Long = spark
-      .table(SegStore.bucketedName(store, "pr"))
-      .where(col("_seg") === segId).count()
-    val pr2 = prRows(2L)
-    val pr3 = prRows(3L)
-    assert(pr3 == 0, s"all-replay batch wrote $pr3 state rows")
-    assert(pr2 > 0 && pr2 < nNodes / 4,
-      s"single-edge batch wrote $pr2 state rows over $nNodes nodes - " +
-        "not delta-sized")
-    // CONTRACT (a): every node's residual is below the push threshold
-    val state = GraphStreamApprox.readPprApprox(spark, store)
-    val viol = state
-      .join(degStore.select($"src".as("node"), $"degree"), Seq("node"))
-      .where(abs($"res") > $"degree" * Eps)
-    assert(viol.isEmpty,
-      s"residuals above Eps*degree: ${viol.take(3).toSeq}")
-    // CONTRACT (b): est within 3*Eps*(degree+1) of a fresh CONVERGED
-    // push over the same final graph (2x the two runs' forward-push
-    // bounds + integer-rounding slack)
-    val conv = GraphOps.forwardPush(spark, full,
-      BipartiteGraph.degreesOf(full), earlyExit = true, maxRounds = 64)
-    val bad = state.select($"node", $"est".as("est_a"))
-      .join(conv.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
-      .na.fill(0L, Seq("est_a", "est_c"))
-      .join(degStore.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
-      .na.fill(0L, Seq("degree"))
-      .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
-    assert(bad.isEmpty,
-      s"est outside the error contract: ${bad.take(3).toSeq}")
-    // the documented fallback: a batch introducing a NEW seed-pattern
-    // node changes the global seed mass — full converged re-push,
-    // written as a base segment; the contract holds on the new graph
-    val maxC = full.agg(max($"c")).as[Long].head()
-    val newSeedNode = ((maxC / 20L) + 1L) * 20L
-    val someS = full.agg(max($"s")).as[Long].head()
-    shipFile(Seq((newSeedNode, someS)).toDF("c", "s"), "4_newseed")
-    runOnce()
-    val segs2 = SegStore.active(spark, store)
-    assert(segs2.map(s => (s.id, s.base)) == Seq((4L, true)),
-      s"new-seed batch did not full-push to a base: $segs2")
-    val full2 = full.unionByName(Seq((newSeedNode, someS)).toDF("c", "s"))
-      .localCheckpoint()
-    val deg2 = BipartiteGraph.degreesOf(full2)
-    val state2 = GraphStreamApprox.readPprApprox(spark, store)
-    val conv2 = GraphOps.forwardPush(spark, full2, deg2,
-      earlyExit = true, maxRounds = 64)
-    val bad2 = state2.select($"node", $"est".as("est_a"))
-      .join(conv2.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
-      .na.fill(0L, Seq("est_a", "est_c"))
-      .join(deg2.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
-      .na.fill(0L, Seq("degree"))
-      .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
-    assert(bad2.isEmpty,
-      s"post-fallback est outside the contract: ${bad2.take(3).toSeq}")
-    graft.operators.Relational.releaseCkpt(full, held, single, delta, full2)
   }
 
   test("approximate PPR gate: drain bail-out falls back to a full push, then recovers the delta path") {
@@ -1183,81 +1184,82 @@ class StreamingSpec extends AnyFunSuite {
     // endpoints already carry a rank-1 (unheld) edge, so a held batch
     // never introduces a node — the new-seed full-push path cannot
     // mask the bail-out under test
-    val full = BipartiteGraph.pairs(spark, sfG).localCheckpoint()
-    val marked = full
-      .withColumn("rc", row_number().over(Window.partitionBy($"c").orderBy($"s")))
-      .withColumn("rs", row_number().over(Window.partitionBy($"s").orderBy($"c")))
-      .withColumn("held", $"rc" > 1 && $"rs" > 1 &&
-        pmod(hash($"c", $"s"), lit(10)) === 0)
-    val held = marked.where($"held").select($"c", $"s").localCheckpoint()
-    val single = held.orderBy($"c", $"s").limit(1).localCheckpoint()
-    val bulk = held.join(single, Seq("c", "s"), "left_anti").localCheckpoint()
-    assert(bulk.count() > 100, "fixture degenerate: no held-back edges")
-    shipFile(marked.where(!$"held").select($"c", $"s"), "0_base")
-    shipFile(bulk, "1_bulk")
-    val store = s"$work/store"
-    def runOnce(maxNodes: Int): Unit = {
-      val stream = spark.readStream
-        .schema("c LONG, s LONG")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      GraphStreamApprox.pprPushStreamApprox(stream, store, s"$work/ckpt",
-        maxLocalNodes = maxNodes)
-        .awaitTermination()
+    // the fixture checkpoints die with the scope
+    Scope { sc =>
+      val full = sc.ckpt(BipartiteGraph.pairs(spark, sfG))
+      val marked = full
+        .withColumn("rc", row_number().over(Window.partitionBy($"c").orderBy($"s")))
+        .withColumn("rs", row_number().over(Window.partitionBy($"s").orderBy($"c")))
+        .withColumn("held", $"rc" > 1 && $"rs" > 1 &&
+          pmod(hash($"c", $"s"), lit(10)) === 0)
+      val held = sc.ckpt(marked.where($"held").select($"c", $"s"))
+      val single = sc.ckpt(held.orderBy($"c", $"s").limit(1))
+      val bulk = sc.ckpt(held.join(single, Seq("c", "s"), "left_anti"))
+      assert(bulk.count() > 100, "fixture degenerate: no held-back edges")
+      shipFile(marked.where(!$"held").select($"c", $"s"), "0_base")
+      shipFile(bulk, "1_bulk")
+      val store = s"$work/store"
+      def runOnce(maxNodes: Int): Unit = {
+        val stream = spark.readStream
+          .schema("c LONG, s LONG")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(src)
+        GraphStreamApprox.pprPushStreamApprox(stream, store, s"$work/ckpt",
+          maxLocalNodes = maxNodes)
+          .awaitTermination()
+      }
+      // caps cranked tiny: the bulk delta's distinct-endpoint seed set
+      // (>100 edges, so far more than 10 nodes) outgrows maxLocalNodes
+      // in incrementalRefresh's FIRST guard — localDrain returns None
+      // and the gate must fall back to a full converged push mid-stream
+      runOnce(maxNodes = 10)
+      // the fallback batch wrote a BASE segment (base truncates the
+      // active list — only the fallback's segment remains)
+      val segs1 = SegStore.active(spark, store)
+      assert(segs1.map(s => (s.id, s.base)) == Seq((1L, true)),
+        s"bail-out batch did not full-push to a base segment: $segs1")
+      // error contract after the fallback: (a) residuals under the push
+      // threshold, (b) est within 3*Eps*(degree+1) of a fresh converged
+      // push over the same graph
+      val graph1 = sc.ckpt(full.join(single, Seq("c", "s"), "left_anti"))
+      val deg1 = BipartiteGraph.degreesOf(graph1)
+      val state1 = GraphStreamApprox.readPprApprox(spark, store)
+      val viol = state1
+        .join(deg1.select($"src".as("node"), $"degree"), Seq("node"))
+        .where(abs($"res") > $"degree" * Eps)
+      assert(viol.isEmpty,
+        s"post-fallback residuals above Eps*degree: ${viol.take(3).toSeq}")
+      val conv1 = GraphOps.forwardPush(spark, graph1, deg1,
+        earlyExit = true, maxRounds = 64)
+      val bad1 = state1.select($"node", $"est".as("est_a"))
+        .join(conv1.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
+        .na.fill(0L, Seq("est_a", "est_c"))
+        .join(deg1.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
+        .na.fill(0L, Seq("degree"))
+        .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
+      assert(bad1.isEmpty,
+        s"post-fallback est outside the error contract: ${bad1.take(3).toSeq}")
+      // subsequent small batch under the default caps: back on the
+      // delta path (non-base segment on top of the fallback's base),
+      // and the contract still holds over the final graph
+      shipFile(single, "2_single")
+      runOnce(maxNodes = 4000000)
+      val segs2 = SegStore.active(spark, store)
+      assert(segs2.map(s => (s.id, s.base)) == Seq((1L, true), (2L, false)),
+        s"post-bail-out single-edge batch did not take the delta path: $segs2")
+      val deg2 = BipartiteGraph.degreesOf(full)
+      val state2 = GraphStreamApprox.readPprApprox(spark, store)
+      val conv2 = GraphOps.forwardPush(spark, full, deg2,
+        earlyExit = true, maxRounds = 64)
+      val bad2 = state2.select($"node", $"est".as("est_a"))
+        .join(conv2.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
+        .na.fill(0L, Seq("est_a", "est_c"))
+        .join(deg2.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
+        .na.fill(0L, Seq("degree"))
+        .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
+      assert(bad2.isEmpty,
+        s"post-recovery est outside the error contract: ${bad2.take(3).toSeq}")
     }
-    // caps cranked tiny: the bulk delta's distinct-endpoint seed set
-    // (>100 edges, so far more than 10 nodes) outgrows maxLocalNodes
-    // in incrementalRefresh's FIRST guard — localDrain returns None
-    // and the gate must fall back to a full converged push mid-stream
-    runOnce(maxNodes = 10)
-    // the fallback batch wrote a BASE segment (base truncates the
-    // active list — only the fallback's segment remains)
-    val segs1 = SegStore.active(spark, store)
-    assert(segs1.map(s => (s.id, s.base)) == Seq((1L, true)),
-      s"bail-out batch did not full-push to a base segment: $segs1")
-    // error contract after the fallback: (a) residuals under the push
-    // threshold, (b) est within 3*Eps*(degree+1) of a fresh converged
-    // push over the same graph
-    val graph1 = full.join(single, Seq("c", "s"), "left_anti")
-      .localCheckpoint()
-    val deg1 = BipartiteGraph.degreesOf(graph1)
-    val state1 = GraphStreamApprox.readPprApprox(spark, store)
-    val viol = state1
-      .join(deg1.select($"src".as("node"), $"degree"), Seq("node"))
-      .where(abs($"res") > $"degree" * Eps)
-    assert(viol.isEmpty,
-      s"post-fallback residuals above Eps*degree: ${viol.take(3).toSeq}")
-    val conv1 = GraphOps.forwardPush(spark, graph1, deg1,
-      earlyExit = true, maxRounds = 64)
-    val bad1 = state1.select($"node", $"est".as("est_a"))
-      .join(conv1.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
-      .na.fill(0L, Seq("est_a", "est_c"))
-      .join(deg1.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
-      .na.fill(0L, Seq("degree"))
-      .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
-    assert(bad1.isEmpty,
-      s"post-fallback est outside the error contract: ${bad1.take(3).toSeq}")
-    // subsequent small batch under the default caps: back on the
-    // delta path (non-base segment on top of the fallback's base),
-    // and the contract still holds over the final graph
-    shipFile(single, "2_single")
-    runOnce(maxNodes = 4000000)
-    val segs2 = SegStore.active(spark, store)
-    assert(segs2.map(s => (s.id, s.base)) == Seq((1L, true), (2L, false)),
-      s"post-bail-out single-edge batch did not take the delta path: $segs2")
-    val deg2 = BipartiteGraph.degreesOf(full)
-    val state2 = GraphStreamApprox.readPprApprox(spark, store)
-    val conv2 = GraphOps.forwardPush(spark, full, deg2,
-      earlyExit = true, maxRounds = 64)
-    val bad2 = state2.select($"node", $"est".as("est_a"))
-      .join(conv2.select($"node", $"est".as("est_c")), Seq("node"), "full_outer")
-      .na.fill(0L, Seq("est_a", "est_c"))
-      .join(deg2.select($"src".as("node"), $"degree"), Seq("node"), "left_outer")
-      .na.fill(0L, Seq("degree"))
-      .where(abs($"est_a" - $"est_c") > lit(3L) * Eps * ($"degree" + 1))
-    assert(bad2.isEmpty,
-      s"post-recovery est outside the error contract: ${bad2.take(3).toSeq}")
-    graft.operators.Relational.releaseCkpt(full, held, single, bulk, graph1)
   }
 
   /** Seeded randomized batch-split fuzz for a scrub gate: the fixed
@@ -1347,7 +1349,7 @@ class StreamingSpec extends AnyFunSuite {
       (s, store, out, ckpt) =>
         graft.streaming.WinnowScrubStream.winnowScrubStream(s, store, out, ckpt),
       d => graft.operators.Dedup.winnowReadout(
-        graft.operators.Dedup.winnowSel(d), seal = false))
+        graft.operators.Dedup.winnowSel(d), Scope.Lazy))
   }
 
   test("streaming winnow scrub (q192 twin) equals the batch readout at EVERY prefix") {
@@ -1388,7 +1390,7 @@ class StreamingSpec extends AnyFunSuite {
     runOnce()
     def readout(d: org.apache.spark.sql.DataFrame) =
       graft.operators.Dedup.winnowReadout(
-        graft.operators.Dedup.winnowSel(d), seal = false)
+        graft.operators.Dedup.winnowSel(d), Scope.Lazy)
     val snap0 = graft.streaming.SegStore.readSnapshot(spark, s"$work/out").get
     val want0 = readout(p0)
     assert(snap0.except(want0).isEmpty && want0.except(snap0).isEmpty,
@@ -1690,7 +1692,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(segs.map(_.base) == Seq(true), s"win layout: $segs")
       val snap = SegStore.readSnapshot(spark, s"$work/win/out").get
       val want = graft.operators.Dedup.winnowReadout(
-        graft.operators.Dedup.winnowSel(docs), seal = false)
+        graft.operators.Dedup.winnowSel(docs), Scope.Lazy)
       assert(snap.except(want).isEmpty && want.except(snap).isEmpty,
         "compacted winnow-scrub readout != batch readout")
     }
