@@ -39,15 +39,14 @@ object DecontamStream {
       ckptDir: String): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch(GateBatch(docs.sparkSession) { (batch, batchId) =>
         graft.operators.TextOps.fiveGrams(batch.dropDuplicates("doc_id"))
           .join(broadcast(evalGrams.withColumn("hit", lit(1))),
             Seq("gram"), "left")
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_hit"))
           .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
 }

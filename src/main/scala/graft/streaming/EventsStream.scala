@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.Scope
-
 /** Structured Streaming over the `events` shape (SURVEY §2.11: the
   * reference has no continuous sources — its closest analog is the
   * paginated incremental pull, spotify_client.py:217-240 — so this is
@@ -308,20 +306,14 @@ object EventsStream {
     cdcCompactStream(events).writeStream
       .outputMode("update")
       .option("checkpointLocation", ckptDir)
-      .foreachBatch { (updates: Dataset[CdcUpdate], batchId: Long) =>
-        val runId = SegStore.ckptQueryId(ss, ckptDir)
-        if (!SegStore.isApplied(ss, storeDir, batchId, runId)) {
+      .foreachBatch(GateBatch.store(ss, storeDir, ckptDir) {
+        (_, updates, batchId, runId, ck) =>
           SegStore.ensureBucketed(ss, storeDir, "kv",
             "key BIGINT, deleted BOOLEAN, value DOUBLE, n_ops BIGINT",
             Seq("key"), buckets)
           // one row per touched key; checkpointed so the segment write
-          // below cannot re-trigger the stateful computation. The
-          // batch scope releases both batch checkpoints on success and
-          // failed/replayed attempts alike (round-15 ADVICE #1), so a
-          // long-lived stream doesn't accumulate one block set per
-          // micro-batch.
-          Scope { ck =>
-          val up = ck.ckpt(updates)
+          // below cannot re-trigger the stateful computation
+          val up = ck.ckpt(updates.as[CdcUpdate])
           val agg0 = readCdcAgg(ss, storeDir)
           // contribution of a store snapshot restricted to some keys —
           // distributed aggregates, four numbers to the driver
@@ -365,10 +357,7 @@ object EventsStream {
           Seq(agg1).toDS().write.mode("overwrite").parquet(s"$seg/agg")
           SegStore.writeSnapshot(ss, aggDir, Seq(agg1).toDS().toDF(), batchId)
           SegStore.commit(ss, storeDir, batchId, base, runId)
-          }
-        }
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
   }
@@ -565,9 +554,9 @@ object EventsStream {
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch(GateBatch(df.sparkSession) { (batch, _) =>
         graft.sources.JdbcSink.write(batch, cfg)
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
 

@@ -122,11 +122,9 @@ object GraphStream {
       maxComponentMembers: Long = 4000000L): StreamingQuery =
     pairs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        val runId = SegStore.ckptQueryId(ss, ckptDir)
-        if (!SegStore.isApplied(ss, storeDir, batchId, runId)) {
+      .foreachBatch(GateBatch.store(pairs.sparkSession, storeDir, ckptDir) {
+        (ss, batch, batchId, runId, ck) =>
+          import ss.implicits._
           SegStore.ensureBucketed(ss, storeDir, "pairs",
             "c BIGINT, s BIGINT", Seq("c"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "degree",
@@ -140,50 +138,43 @@ object GraphStream {
             Seq("node"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "meta",
             "k BIGINT, ns BIGINT", Seq("k"), 1)
-          // every batch-scoped checkpoint registers in the batch
-          // scope, which releases them on success AND failed/replayed
-          // attempts alike (round-15 ADVICE #1)
-          Scope { ck =>
-            val up = ck.ckpt(batch.select($"c", $"s").distinct())
-            // delta-sized dedup against the store: the batch's customer
-            // keys prune the pairs scan; the semi-join against the batch
-            // (broadcast) shrinks the hit set to <= batch size, and THAT
-            // broadcasts into the anti — the store is never shuffled
-            val bCs = up.select($"c").distinct()
-            val present = SegStore.prunedScan(ss, storeDir, "pairs", "c", bCs)
-              .join(broadcast(up), Seq("c", "s"), "left_semi")
-            val newPairs = ck.ckpt(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
-            val newDeg = ck.ckpt(graft.operators.BipartiteGraph.degreesOf(newPairs))
-            val base = SegStore.active(ss, storeDir).size >= compactEvery
-            if (newPairs.isEmpty)
-              // all-replay: graph, labels and snapshot all unchanged
-              unchangedBatch(ss, storeDir, outDir, batchId, base, runId, ck,
-                newPairs, newDeg)
-            else {
-              // a never-seen node matching the seed pattern changes the
-              // global seed mass Total/nS: every component's rows move —
-              // full converged re-push (no locality argument survives)
-              val touched = newDeg.select($"src")
-              val degPrior = SegStore
-                .prunedScan(ss, storeDir, "degree", "src", touched)
-                .groupBy($"src").agg(sum($"degree").as("d_old"))
-              val newSeed = !newDeg.join(degPrior, Seq("src"), "left_anti")
-                .where(graft.operators.BipartiteGraph.isPprSeed($"src")).isEmpty
-              val nS0 = readMeta(ss, storeDir)
-              if (newSeed || nS0.isEmpty ||
-                  SegStore.active(ss, storeDir).isEmpty)
-                phased("ppr-full") {
-                  fullRefresh(ss, storeDir, outDir, batchId, base, runId, ck,
-                    newPairs, newDeg)
-                }
-              else
-                componentRefresh(ss, storeDir, outDir, batchId, base, runId,
-                  ck, newPairs, newDeg, nS0.get, maxComponentMembers)
-            }
+          val up = ck.ckpt(batch.select($"c", $"s").distinct())
+          // delta-sized dedup against the store: the batch's customer
+          // keys prune the pairs scan; the semi-join against the batch
+          // (broadcast) shrinks the hit set to <= batch size, and THAT
+          // broadcasts into the anti — the store is never shuffled
+          val bCs = up.select($"c").distinct()
+          val present = SegStore.prunedScan(ss, storeDir, "pairs", "c", bCs)
+            .join(broadcast(up), Seq("c", "s"), "left_semi")
+          val newPairs = ck.ckpt(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
+          val newDeg = ck.ckpt(graft.operators.BipartiteGraph.degreesOf(newPairs))
+          val base = SegStore.active(ss, storeDir).size >= compactEvery
+          if (newPairs.isEmpty)
+            // all-replay: graph, labels and snapshot all unchanged
+            unchangedBatch(ss, storeDir, outDir, batchId, base, runId, ck,
+              newPairs, newDeg)
+          else {
+            // a never-seen node matching the seed pattern changes the
+            // global seed mass Total/nS: every component's rows move —
+            // full converged re-push (no locality argument survives)
+            val touched = newDeg.select($"src")
+            val degPrior = SegStore
+              .prunedScan(ss, storeDir, "degree", "src", touched)
+              .groupBy($"src").agg(sum($"degree").as("d_old"))
+            val newSeed = !newDeg.join(degPrior, Seq("src"), "left_anti")
+              .where(graft.operators.BipartiteGraph.isPprSeed($"src")).isEmpty
+            val nS0 = readMeta(ss, storeDir)
+            if (newSeed || nS0.isEmpty ||
+                SegStore.active(ss, storeDir).isEmpty)
+              phased("ppr-full") {
+                fullRefresh(ss, storeDir, outDir, batchId, base, runId, ck,
+                  newPairs, newDeg)
+              }
+            else
+              componentRefresh(ss, storeDir, outDir, batchId, base, runId,
+                ck, newPairs, newDeg, nS0.get, maxComponentMembers)
           }
-        }
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
 

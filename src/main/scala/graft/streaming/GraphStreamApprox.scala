@@ -111,11 +111,9 @@ object GraphStreamApprox {
       maxLocalEdges: Long = 16000000L): StreamingQuery =
     pairs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        val runId = SegStore.ckptQueryId(ss, ckptDir)
-        if (!SegStore.isApplied(ss, storeDir, batchId, runId)) {
+      .foreachBatch(GateBatch.store(pairs.sparkSession, storeDir, ckptDir) {
+        (ss, batch, batchId, runId, ck) =>
+          import ss.implicits._
           SegStore.ensureBucketed(ss, storeDir, "pairs",
             "c BIGINT, s BIGINT", Seq("c"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "edges",
@@ -124,10 +122,6 @@ object GraphStreamApprox {
             "src BIGINT, degree BIGINT", Seq("src"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "pr",
             "node BIGINT, est BIGINT, res BIGINT", Seq("node"), buckets)
-          // leak-proof release: every batch-scoped checkpoint registers
-          // in the batch scope, which releases them on success and
-          // failed/replayed attempts alike (round-15 ADVICE #1)
-          Scope { ck =>
           val up = ck.ckpt(batch.select($"c", $"s").distinct())
           val bCs = up.select($"c").distinct()
           val present = SegStore.prunedScan(ss, storeDir, "pairs", "c", bCs)
@@ -224,10 +218,7 @@ object GraphStreamApprox {
             }
             }
           }
-          }
-        }
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
 

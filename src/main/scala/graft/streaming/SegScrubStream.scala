@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.Scope
-
 /** Streaming boilerplate-segment scrub: q191's cross-grid segment
   * dedup AS A STREAM — what the fingerprint family got with
   * [[WinnowStream]], for the segment-scrub family. Each micro-batch
@@ -82,11 +80,9 @@ object SegScrubStream {
       ckptDir: String, compactEvery: Int = 8, buckets: Int = 8): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        val runId = SegStore.ckptQueryId(ss, ckptDir)
-        if (!SegStore.isApplied(ss, storeDir, batchId, runId)) {
+      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir) {
+        (ss, batch, batchId, runId, ck) =>
+          import ss.implicits._
           import GatePhase.phased
           phased("declare") {
             SegStore.ensureBucketed(ss, storeDir, "occ",
@@ -104,10 +100,6 @@ object SegScrubStream {
                 "dup_docs_g0 BIGINT, dup_docs_any BIGINT, straddle_docs BIGINT",
               Seq("source"), buckets)
           }
-          // leak-proof release: every batch-scoped checkpoint registers
-          // in the batch scope, which releases them on success and
-          // failed/replayed attempts alike (round-15 ADVICE #1)
-          Scope { ck =>
           // replay absorption: seen doc ids from a pruned scan,
           // survivors anti-join the <= batch-sized hit set broadcast
           val bOcc = phased("segment") {
@@ -285,10 +277,7 @@ object SegScrubStream {
           }
           SegStore.commit(ss, storeDir, batchId, base, runId)
           } catch { case e: Throwable => SegStore.awaitQuiet(fPrior); throw e }
-          }
-        }
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
 

@@ -772,10 +772,11 @@ object SegStore {
   def writeBucketed(ss: SparkSession, root: String, sub: String,
       df: DataFrame, batchId: Long, base: Boolean = false): Unit = {
     if (base) escalateForBase(ss, root, sub, batchId)
-    // the temp view and the INSERT must run on the SAME session: inside
-    // foreachBatch the batch frame belongs to a CLONED session whose
-    // temp-view catalog the outer session cannot see (the catalog
-    // TABLE is shared state, temp views are not)
+    // the temp view and the INSERT run on the FRAME's session: temp
+    // views are per-session state (the catalog TABLE is shared), and a
+    // caller may pass a frame of a session other than `ss` (the gates
+    // do not: GateBatch re-homes each micro-batch off the stream's
+    // cloned session onto the owning one)
     val sse = df.sparkSession
     val name = bucketedName(root, sub)
     val cols = sse.table(name).schema.fieldNames.filterNot(_ == "_seg")

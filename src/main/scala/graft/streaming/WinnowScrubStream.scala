@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.Scope
-
 /** Streaming alignment-independent boilerplate scrub: q192's
   * word-level winnowing scrub AS A STREAM — the gate the
   * alignment-independent family gets, completing the set (q173 →
@@ -50,11 +48,9 @@ object WinnowScrubStream {
       ckptDir: String, compactEvery: Int = 8, buckets: Int = 8): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        val runId = SegStore.ckptQueryId(ss, ckptDir)
-        if (!SegStore.isApplied(ss, storeDir, batchId, runId)) {
+      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir) {
+        (ss, batch, batchId, runId, ck) =>
+          import ss.implicits._
           SegStore.ensureBucketed(ss, storeDir, "sel",
             "fp STRING, doc_id BIGINT, source STRING", Seq("fp"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "fdf",
@@ -67,10 +63,6 @@ object WinnowScrubStream {
           SegStore.ensureBucketed(ss, storeDir, "srcstat",
             "source STRING, n_docs BIGINT, n_fps BIGINT, dup_fps BIGINT, " +
               "dup_docs BIGINT", Seq("source"), buckets)
-          // leak-proof release: every batch-scoped checkpoint registers
-          // in the batch scope, which releases them on success and
-          // failed/replayed attempts alike (round-15 ADVICE #1)
-          Scope { ck =>
           val bSel = ck.ckpt(graft.operators.Dedup
             .winnowSel(batch.dropDuplicates("doc_id")))
           // PRIOR per-fp df, probed by the PRE-absorb fingerprint set
@@ -189,10 +181,7 @@ object WinnowScrubStream {
           }
           SegStore.commit(ss, storeDir, batchId, base, runId)
           } catch { case e: Throwable => SegStore.awaitQuiet(fPrior); throw e }
-          }
-        }
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
 

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.Scope
-
 /** Streaming ingest near-dup gate: q173's incremental winnowing AS A
   * STREAM — the screen a continuous crawl/ingest pipeline runs before
   * admitting documents to a training corpus. Each micro-batch of
@@ -89,11 +87,9 @@ object WinnowStream {
       ckptDir: String, compactEvery: Int = 8, buckets: Int = 8): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        import ss.implicits._
-        val runId = SegStore.ckptQueryId(ss, ckptDir)
-        if (!SegStore.isApplied(ss, storeDir, batchId, runId)) {
+      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir) {
+        (ss, batch, batchId, runId, ck) =>
+          import ss.implicits._
           phased("declare") {
             SegStore.ensureBucketed(ss, storeDir, "fp",
               "doc_id BIGINT, h BIGINT", Seq("h"), buckets)
@@ -102,10 +98,6 @@ object WinnowStream {
             SegStore.ensureBucketed(ss, storeDir, "docs",
               "doc_id BIGINT", Seq("doc_id"), buckets)
           }
-          // leak-proof release: every batch-scoped checkpoint registers
-          // in the batch scope, which releases them on success and
-          // failed/replayed attempts alike (round-15 ADVICE #1)
-          Scope { ck =>
           val bfp = phased("fingerprint") {
             ck.ckpt(graft.operators.Dedup
               .winnowFp(batch.dropDuplicates("doc_id")))
@@ -176,10 +168,7 @@ object WinnowStream {
             SegStore.commit(ss, storeDir, batchId, base, runId)
           }
           } catch { case e: Throwable => SegStore.awaitQuiet(fOlds); throw e }
-          }
-        }
-        ()
-      }
+      })
       .trigger(Trigger.AvailableNow())
       .start()
 

@@ -1,7 +1,10 @@
 package graft.tools
 
+import org.apache.spark.GraftCoreBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 
 /** Phase-level attribution of the streaming gates' PER-BATCH CONSTANT
@@ -68,12 +71,27 @@ object GateProbe {
         s"$work/store", s"$work/out", s"$work/ckpt", compactEvery = 100)
         .awaitTermination()
     }._1
+    // codegen compiles (count, nanos) since the last mark(): a batch
+    // that recompiles classes the JVM already compiled (a per-query
+    // class loader) shows here as compiles that never fall batch over
+    // batch
+    def codegen(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    var cg0 = codegen()
+    def mark(): Unit = {
+      GraftCoreBridge.drainListenerBus(spark.sparkContext)
+      jobs.set(0)
+      cg0 = codegen()
+    }
     def report(label: String, wall: Double): Unit = {
+      GraftCoreBridge.drainListenerBus(spark.sparkContext)
       val ph = phases.synchronized { val v = phases.toVector; phases.clear(); v }
       val body = ph.map(_._2).sum
       val lines = ph.map { case (n, t) => f"$n=$t%.2f" }.mkString(" ")
+      val (nc, tc) = codegen()
       println(f"[gate-probe] $label: wall=$wall%.2f s body=$body%.2f s " +
-        f"machinery=${wall - body}%.2f s jobs=${jobs.getAndSet(0)} | $lines")
+        f"machinery=${wall - body}%.2f s jobs=${jobs.getAndSet(0)} " +
+        f"compiles=${nc - cg0._1} compile_s=${(tc - cg0._2) / 1e9}%.2f | $lines")
     }
 
     // the 200-doc delta: fresh ids over base content — the
@@ -89,23 +107,23 @@ object GateProbe {
       graft.Tables.load(spark, dir, "documents")
         .select($"doc_id", $"text")
         .write.mode("overwrite").parquet(s"$work/in")
-      jobs.set(0)
+      mark()
       report("corpus_batch", runGate())
 
       delta.write.mode("append").parquet(s"$work/in")
-      jobs.set(0)
+      mark()
       report("delta_200", runGate())
 
       // all-replay: the same 200 docs again — every doc absorbed by the
       // docs-probe anti-join, zero new fingerprints; what remains is the
       // floor a no-op trigger pays
       delta.write.mode("append").parquet(s"$work/in")
-      jobs.set(0)
+      mark()
       report("replay_200", runGate())
 
       // empty trigger: the stream restarts, finds no new files — pure
       // query start/stop + source listing, no batch body at all
-      jobs.set(0)
+      mark()
       report("no_data", runGate())
     }
 
@@ -129,13 +147,13 @@ object GateProbe {
         .select($"doc_id", $"source", $"text").orderBy($"doc_id").limit(200)
         .select(($"doc_id" + lit(900000000L)).as("doc_id"), $"source", $"text")
         .localCheckpoint()
-      jobs.set(0)
+      mark()
       report("scrub_corpus", runScrub())
       sdelta.write.mode("append").parquet(s"$work/sin")
-      jobs.set(0)
+      mark()
       report("scrub_delta_200", runScrub())
       sdelta.write.mode("append").parquet(s"$work/sin")
-      jobs.set(0)
+      mark()
       report("scrub_replay_200", runScrub())
     }
 
@@ -157,10 +175,10 @@ object GateProbe {
         .select($"doc_id", $"source", $"text").orderBy($"doc_id").limit(200)
         .select(($"doc_id" + lit(900000000L)).as("doc_id"), $"source", $"text")
         .localCheckpoint()
-      jobs.set(0)
+      mark()
       report("wscrub_corpus", runWScrub())
       wdelta.write.mode("append").parquet(s"$work/win")
-      jobs.set(0)
+      mark()
       report("wscrub_delta_200", runWScrub())
     }
 
@@ -411,7 +429,7 @@ object GateProbe {
           .sortBy(_.getName)
           .map(f => s"${f.getName}=${du(f)}B").mkString(" ")
       }
-      jobs.set(0)
+      mark()
       report("ppr_bootstrap_8copies", runPpr())
       println(s"[gate-probe] ppr snapshots after bootstrap: ${snapSizes()}")
       // no-new-seed delta: 200 rewired pairs among EXISTING copy-0
@@ -425,7 +443,7 @@ object GateProbe {
         .except(basePairs).limit(200))
       println(s"[gate-probe] ppr component delta pairs: ${rewired.count()}")
       rewired.write.mode("append").parquet(s"$w/in")
-      jobs.set(0)
+      mark()
       report("ppr_component_delta", runPpr())
       println(s"[gate-probe] ppr snapshots after component delta: ${snapSizes()}")
       // reader-side cost of the overlay fold (base + 1 overlay) vs the
@@ -441,7 +459,7 @@ object GateProbe {
       // customer (20e9 % 20 == 0) — Total/nS moves, full re-push
       Seq((20000000000L, neigh.head._2)).toDF("c", "s")
         .write.mode("append").parquet(s"$w/in")
-      jobs.set(0)
+      mark()
       report("ppr_full_delta", runPpr())
     }
 

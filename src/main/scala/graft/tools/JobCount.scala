@@ -64,13 +64,13 @@ object JobCount {
       val fn = graft.SparkEntry.queries(name)
       fn(spark, sfDir).count() // warm run: codegen, staging artifacts
       reset()
-      Thread.sleep(400) // listener bus is async; drain before resetting counters
+      org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0)
       shuffleRead.set(0L); shuffleWrite.set(0L)
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400) // drain async listener events before reading counters
+      org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
       println(f"[jobcount] $name%-28s wall=$wall%6.2f s jobs=${jobs.get}%3d " +
         f"stages=${stages.get}%4d tasks=${tasks.get}%6d " +
         f"shufR=${shuffleRead.get / 1024 / 1024.0}%8.1f MB " +

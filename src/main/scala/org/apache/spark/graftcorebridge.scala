@@ -1,6 +1,7 @@
 package org.apache.spark
 
-/** Bridge into `private[spark]` SparkContext local-properties access.
+/** Bridge into `private[spark]` SparkContext local-properties and
+  * listener-bus access.
   * Lives in the org.apache.spark package namespace solely to reach the
   * package-private API; contains no Spark-internal logic of its own.
   *
@@ -21,4 +22,10 @@ object GraftCoreBridge {
   /** Install a previously captured set on the CURRENT thread. */
   def installLocalProps(sc: SparkContext, props: java.util.Properties): Unit =
     sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (Spark's own test drain). Listener-based counters read after
+    * this see every job, stage and task of the work that preceded it.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

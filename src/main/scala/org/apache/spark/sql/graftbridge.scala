@@ -15,8 +15,8 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  def analyzedPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+  def analyzedPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
   /** The catalog-declared bucket count of `table` (None when the table
     * is not bucketed). Used by the segment store to verify that an

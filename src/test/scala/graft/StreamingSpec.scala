@@ -583,6 +583,58 @@ class StreamingSpec extends AnyFunSuite {
       s"batch-2 store write ($b2 B) not delta-sized vs corpus segment ($b0 B)")
   }
 
+  test("near-dup gate: a later AvailableNow query reuses the generated code of an earlier one") {
+    // Every streaming query runs on a fresh clone of its session, and
+    // with artifact isolation (Spark's default) each session compiles
+    // generated code under its own class loader. A gate whose batch
+    // body ran on the clone recompiled every class it uses in every
+    // query; on the owning session the second query's delta batch
+    // finds the first query's classes cached.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions._
+    import graft.streaming.WinnowStream
+    val work = Files.createTempDirectory("graft_gate_codegen_").toString
+    val src = s"$work/in"
+    new java.io.File(src).mkdirs()
+    def shipFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val tmp = s"$work/tmp_$name"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(s"$src/$name.parquet"))
+    }
+    val docs = Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("text"))
+    // a delta of fresh ids over shipped texts: every batch after the
+    // corpus probes, flags and writes a segment
+    def delta(shift: Long, m: Int) = docs.where(col("doc_id") % 10 === m)
+      .select((col("doc_id") + shift).as("doc_id"), col("text"))
+    def runGate(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val q = WinnowStream.nearDupGateStream(spark.readStream
+          .schema("doc_id LONG, text STRING")
+          .option("maxFilesPerTrigger", "1").parquet(src),
+        s"$work/store", s"$work/out", s"$work/ckpt")
+      q.awaitTermination()
+      q.exception.foreach(e => throw e)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    // query 1: the corpus batch, then a delta batch
+    shipFile(docs.where(col("doc_id") % 10 =!= 7), "0_corpus")
+    shipFile(delta(9000000L, 7), "1_delta")
+    val first = runGate()
+    // query 2: one more delta batch of the same shape
+    shipFile(delta(9100000L, 3), "2_delta")
+    val second = runGate()
+    info(s"codegen compiles: query 1 (2 batches) $first, query 2 (1 delta batch) $second")
+    assert(spark.read.schema("new_doc LONG, old_doc LONG, shared LONG")
+      .parquet(s"$work/out/batch_2").count() > 0, "the delta batch flagged nothing")
+    assert(second <= 25,
+      s"the second query's delta batch compiled $second classes: its batch " +
+        "body is not reusing the generated code of the first query")
+  }
+
   test("forwardPush: strict batch path throws on empty seeds, lenient stream path yields the empty snapshot") {
     import spark.implicits._
     val cs = Seq.empty[(Long, Long)].toDF("c", "s")
