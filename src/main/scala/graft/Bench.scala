@@ -18,23 +18,6 @@ import org.apache.spark.sql.SparkSession
   * printed first AND written to BENCH_FULL.json in the working dir.
   */
 object Bench {
-  /** Restore the session to a pre-query state: drop every SQL-cached
-    * plan, synchronously release every block-holding RDD (persists AND
-    * localCheckpoints — the latter never enter the SQL cache manager,
-    * so `clearCache` alone misses them), and run two synchronous GCs
-    * so the ContextCleaner's weak-ref queue drains NOW, in the untimed
-    * gap, instead of during the next query's timed region. The first
-    * GC enqueues the weak refs; the second collects objects the first
-    * pass's finalization resurrected. BenchHygieneSpec pins that this
-    * routine leaves zero persistent RDDs and an empty SQL cache.
-    */
-  private[graft] def resetSession(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-    System.gc()
-  }
-
   /** Min-of-N with the session RESET BETWEEN RUNS. Round 10 ran the
     * two timings back-to-back and only cleaned up afterwards, so run
     * 2 — the one min-of-2 usually reports — executed under run 1's
@@ -93,38 +76,6 @@ object Bench {
       } else name -> t
     }
 
-  /** Spark local dir for the bench session: `SPARK_GRAFT_LOCAL_DIR`
-    * when set (the operator override — e.g. redirect to disk when
-    * tmpfs is too small for a bigger SF), else tmpfs when available
-    * (see the builder comment), else the JVM temp dir. Each JVM gets
-    * its own PER-PID subdirectory — two bench JVMs on one host must
-    * never delete each other's live shuffle files (round-12 ADVICE
-    * #3). Stale SIBLING dirs are swept only when their owning process
-    * is gone (/proc/<pid> absent): a killed prior run leaves shuffle
-    * files behind, and on tmpfs leftovers silently consume RAM for
-    * the life of the box (round-11 ADVICE #4).
-    */
-  private[graft] def localDir: String = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      def rm(f: java.io.File): Unit = graft.tools.FsUtil.rm(f.getPath)
-      val pool = new java.io.File(shm, "graft-bench-local")
-      val pid = ProcessHandle.current().pid()
-      Option(pool.listFiles()).foreach(_.foreach { sib =>
-        val owner = sib.getName
-        if (owner.forall(_.isDigit) && owner.nonEmpty && owner.toLong != pid
-            && !new java.io.File(s"/proc/$owner").exists())
-          rm(sib)
-      })
-      // pre-pid legacy layout: shuffle dirs directly under the pool
-      // root belong to no live tracking scheme — sweep them too
-      Option(pool.listFiles()).foreach(_.foreach { f =>
-        if (!f.getName.forall(_.isDigit)) rm(f)
-      })
-      new java.io.File(pool, pid.toString).getPath
-    } else System.getProperty("java.io.tmpdir")
-  })
-
   /** `s` as a canonical path (the raw string if it cannot resolve). */
   private[graft] def canonSf(s: String): String =
     // IOException only (round-16 VERDICT nitpick): a fatal VM error
@@ -156,45 +107,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Shuffle cleanup is async by default: the ContextCleaner fires
-      // remove RPCs and returns, so across a 190-query session the
-      // driver keeps timing query N while the block manager is still
-      // unlinking query N-1's shuffle files — the round-9 judge
-      // measured q134 at 13.4 s in-session vs 3.59 s isolated from
-      // exactly this backlog. Blocking cleanup moves that wait into
-      // the untimed gap between queries where it belongs.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      // Shuffle files + block-manager disk store on tmpfs when the
-      // box has one: with local.dir on the VM's virtio disk, each
-      // heavy query's shuffle writes dirty the page cache and the
-      // per-query cleanup deletes thousands of files — both contend
-      // with the NEXT query's parquet reads on the same device, which
-      // measured as random 10-40 s stalls inside otherwise-quiet
-      // timed regions (no GC events). A cluster's NVMe-backed
-      // local dirs don't have this failure mode; tmpfs is the
-      // local-mode stand-in, and sf0.1 shuffle volumes are GBs
-      // against 126 GB of /dev/shm.
-      .config("spark.local.dir", Bench.localDir)
-      // The live status store retains 1000 executions / 1000 jobs /
-      // 100k tasks of history even with the UI off; 150 queries into
-      // the session that's a steadily growing in-memory KV store
-      // every task completion updates — measured as a consistent
-      // ~1 s in-session surcharge on stage-heavy queries (q188:
-      // 2.76/2.37/2.20 s draws vs 1.29 isolated). The bench session
-      // reads none of that history; keep only a screenful.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .withExtensions(new GraftExtensions) // the production install path
-    // Dev-only A/B hook: semicolon-separated `key=value` Spark confs
-    // (e.g. SPARK_GRAFT_CONF="spark.sql.join.preferSortMergeJoin=false")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    // Dev-only A/B hook: semicolon-separated `key=value` runtime SQL
+    // confs (e.g. SPARK_GRAFT_CONF="spark.sql.join.preferSortMergeJoin=false")
     // so config experiments run under the EXACT bench protocol
     // (min-of-N, session resets, tmpfs local dir) instead of a
     // different harness. Unset in the driver's environment, so the
@@ -203,10 +118,8 @@ object Bench {
       .flatMap(_.split(';')).filter(_.contains('='))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
+        spark.conf.set(k.trim, v.trim)
       }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // optional args: bench only the named queries (iteration aid)
     val selected =
       if (args.isEmpty) SparkEntry.queries
@@ -218,13 +131,13 @@ object Bench {
     }
     val ordered = selected.toSeq.sortBy(_._1)
     val inline = ordered.map { case (name, fn) =>
-      val t = try minStableNamed(name, () => once(fn), () => resetSession(spark))
-        catch { case _: Throwable => resetSession(spark); -1.0 }
+      val t = try minStableNamed(name, () => once(fn), () => GraftSession.reset(spark))
+        catch { case _: Throwable => GraftSession.reset(spark); -1.0 }
       name -> t
     }
     val byName = ordered.toMap
     val results =
-      withDeferredPass(inline, n => once(byName(n)), () => resetSession(spark))
+      withDeferredPass(inline, n => once(byName(n)), () => GraftSession.reset(spark))
     val total = results.map(_._2).filter(_ >= 0).sum
     // Steal-resistant round-over-round signal (round-13 VERDICT #3 +
     // stretch #8): the official totals are noise-dominated on this

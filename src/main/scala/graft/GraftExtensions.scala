@@ -8,13 +8,16 @@ import graft.functions._
 import graft.plans.AsOfJoinStrategy
 
 /** Production registration path: install the engine's planner strategy
-  * and SQL functions at session build time —
+  * and SQL functions at session build time. [[GraftSession.local]] is
+  * the one recipe that does it —
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)          // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * val spark = graft.GraftSession.local(cores = 8)
   * }}}
+  *
+  * — and an application building its own session passes
+  * `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions` to its builder.
   *
   * (`AsOf.join` also self-injects via experimental.extraStrategies for
   * sessions built without extensions; `GraftFunctions.register` is the

@@ -35,7 +35,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * [[Scope.Lazy]] materializes nothing: `persist`, `ckpt` and `seal`
   * return their input unchanged, so an operator written against a
-  * `Scope` yields its plain lazy plan (plan-shape specs, PlanDump).
+  * `Scope` yields its plain lazy plan (plan-shape specs, `tools/Explain`).
   */
 final class Scope private (materialize: Boolean) {
   // (frame, isCheckpoint) in registration order

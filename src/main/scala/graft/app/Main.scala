@@ -29,6 +29,8 @@ import graft.sources.{BatchedLookup, JdbcSink, Ndjson, SpotifyService}
   *   [--service <class>]        # SpotifyService impl (default FakeApi)
   *   [--out <dir>]              # staging dir for playlist NDJSON
   * }}}
+  * The session is [[graft.GraftSession.local]] on `SPARK_GRAFT_CPUS`
+  * cores (default 8), as for Bench and Verify.
   */
 object Main {
 
@@ -46,14 +48,7 @@ object Main {
 
     System.setProperty("derby.system.home",
       Files.createTempDirectory("graft_derby").toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
 
     cmd match {
       case "trigger_etl" => triggerEtl(spark, args, jdbcUrl)

@@ -1,28 +1,29 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Scope
+import graft.operators.Dedup
 
-/** Dev utility: print the formatted physical plan and wall time of one
-  * named SparkEntry query. Usage: runMain graft.tools.Explain <name> [sfDir]
+/** Dev utility: print the physical plan and wall time of one named
+  * SparkEntry query. Usage: runMain graft.tools.Explain <name> [sfDir] [mode]
+  * (`mode` is an `explain` mode, default `formatted`; `codegen` also
+  * turns AQE off so the whole-stage code is the final code).
+  *
+  * Two extra names explain the plain lazy plan of queries that seal
+  * their output behind a checkpoint (whose own plan is a checkpoint
+  * scan): `q139_setsim_join_lazy` and `q144_containment_join_lazy`
+  * build the operator under [[graft.Scope.Lazy]].
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // Production GraftExtensions install (parser + strategy + SQL
-    // functions) by DEFAULT — q111 needs the injected parser, and the
-    // driver's Verify/Bench sessions install it too. Set
-    // SPARK_GRAFT_EXTENSIONS=0 to inspect stock-session plans.
-    val spark = (if (sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("0"))
-      builder else builder.withExtensions(new graft.GraftExtensions))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val fn = graft.SparkEntry.queries(name)
+    val spark = graft.GraftSession.local(32)
+    val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      name match {
+        case "q139_setsim_join_lazy" => Dedup.setsimJoin(_, _, Scope.Lazy)
+        case "q144_containment_join_lazy" => Dedup.containmentJoin(_, _, Scope.Lazy)
+        case _ => graft.SparkEntry.queries(name)
+      }
     val mode = if (args.length > 2) args(2) else "formatted"
     if (mode == "codegen") spark.conf.set("spark.sql.adaptive.enabled", "false")
     fn(spark, sfDir).explain(mode)

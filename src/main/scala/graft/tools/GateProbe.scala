@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.spark.GraftCoreBridge
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 
@@ -20,7 +19,7 @@ import org.apache.spark.sql.functions._
   * body phases is the streaming machinery itself (query start/stop,
   * source listing, checkpoint/offset-log writes).
   *
-  * Usage: runMain graft.tools.GateProbe [sfDir] [workDir] [sections] [master]
+  * Usage: runMain graft.tools.GateProbe [sfDir] [workDir] [sections] [cores]
   */
 object GateProbe {
   def main(args: Array[String]): Unit = {
@@ -32,19 +31,11 @@ object GateProbe {
       if (args.length > 2) args(2).split(",").filter(_.nonEmpty).toSet
       else Set("winnow", "xover", "scrub", "wscrub")
     // escal: opt-in (runMain ... escal) — it rebuilds multi-x corpora
-    // optional args(3): Spark master — e.g. local[8] for the composed
+    // optional args(3): core count — e.g. 8 for the composed
     // saturation row (a bounded pool distinguishes CPU saturation
     // from pool serialization: solo walls must rise proportionally)
-    val master = if (args.length > 3) args(3) else "local[32]"
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.local.dir", graft.Bench.localDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cores = if (args.length > 3) args(3).toInt else 32
+    val spark = graft.GraftSession.local(cores)
     import spark.implicits._
 
     FsUtil.rm(work)

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (guide §1: measure first): run named SparkEntry queries
   * under the bench session shape and report, per query, the number of
@@ -16,16 +15,7 @@ import org.apache.spark.sql.SparkSession
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.local.dir", graft.Bench.localDir)
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -54,16 +44,10 @@ object JobCount {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         tasks.incrementAndGet()
     })
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc(); System.gc()
-    }
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       fn(spark, sfDir).count() // warm run: codegen, staging artifacts
-      reset()
+      graft.GraftSession.reset(spark)
       org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0)
       shuffleRead.set(0L); shuffleWrite.set(0L)
@@ -75,7 +59,7 @@ object JobCount {
         f"stages=${stages.get}%4d tasks=${tasks.get}%6d " +
         f"shufR=${shuffleRead.get / 1024 / 1024.0}%8.1f MB " +
         f"shufW=${shuffleWrite.get / 1024 / 1024.0}%8.1f MB rows=$n")
-      reset()
+      graft.GraftSession.reset(spark)
     }
     spark.stop()
   }

@@ -31,18 +31,7 @@ object ScaleAudit {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val mult = if (args.length > 1) args(1).toInt else 8
     val work = if (args.length > 2) args(2) else "/tmp/graft_scale_audit"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same timing hygiene as Bench: shuffle on tmpfs keeps the
-      // audit's 8x fixtures' churn off the virtio disk the next
-      // query reads parquet from
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.local.dir", graft.Bench.localDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
     import spark.implicits._
 
     // ---- derive the mult-x fixture ------------------------------------
@@ -171,8 +160,7 @@ object ScaleAudit {
       time(q(spark, dir).count())
       val (t, n) = time(q(spark, dir).count())
       println(f"[audit] $name dir=$dir rows=$n time=$t%.2f s")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.GraftSession.reset(spark)
     }
 
     for (dir <- Seq(base, work)) {
@@ -278,9 +266,7 @@ object ScaleAudit {
         println(s"[audit] q144 probed-bucket skew @ $dir: " +
           s"n_probed_keys=${q.getLong(0)} max_probed_posting=${q.getLong(1)} " +
           s"join_work=${q.getLong(2)}")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       bench("q145_ppr", dir, graft.SparkEntry.queries("q145_ppr"))
       // the traversal family at the key-shifted graph (round-14
@@ -321,9 +307,7 @@ object ScaleAudit {
         println(s"[audit] q148 cluster skew @ $dir: " +
           s"n_clusters=${c148.getLong(0)} max_cluster=${c148.getLong(1)} " +
           s"pair_work=${c148.getLong(2)}")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       bench("q150_global_offsets", dir, graft.SparkEntry.queries("q150_global_offsets"))
       bench("q151_transitions", dir, graft.SparkEntry.queries("q151_transitions"))
@@ -353,8 +337,7 @@ object ScaleAudit {
         val (tc, nc) = timedPairs(1024L)
         val (tu, nu) = timedPairs(Long.MaxValue / 4)
         println(f"[audit] q67 chunked=$tc%.2f s ($nc pairs) unchunked=$tu%.2f s ($nu pairs)")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       // q164: per-copy suffixes make char-20-grams disjoint across
       // copies, so fingerprint BLOCKS grow in count while the df<=16
@@ -379,9 +362,7 @@ object ScaleAudit {
         println(s"[audit] q164 fingerprint skew @ $dir: " +
           s"n_keys=${kept.getLong(0)} max_bucket=${kept.getLong(1)} " +
           s"sum_sq=${kept.getLong(2)} dropped_keys=$dropped pairs=$pairs")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       bench("q167_corpus_shift", dir, graft.SparkEntry.queries("q167_corpus_shift"))
       bench("q168_hits", dir, graft.SparkEntry.queries("q168_hits"))
@@ -421,9 +402,7 @@ object ScaleAudit {
         println(s"[audit] q177 count-table @ $dir: " +
           s"n_keys=${m.getLong(0)} max_count=${m.getLong(1)} " +
           s"max_source_vocab=${m.getLong(2)} n_sources=${m.getLong(3)}")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       // q179: the q172 claim exactly — fixed-width value bands, so 8x
       // events is 8x rows per band growing together (band-local
@@ -522,9 +501,7 @@ object ScaleAudit {
         println(f"[audit] winnow_gate_compact @ $dir: compact_batch=$tCompact%.2f s " +
           s"base_seg_bytes=${segBytes(segs2.last.id)} " +
           s"layout=${segs2.map(x => (x.id, x.base))}")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       // Delta-DIMENSION row (round-13 VERDICT task #3): the corpus row
       // above holds the delta fixed and scales the store; this holds
@@ -568,9 +545,7 @@ object ScaleAudit {
         }
         println(s"[audit] winnow_gate_delta @ $dir: corpus_batch=" +
           f"$tCorpus%.2f s; ${walls.mkString("; ")}")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       // Compaction GROWTH row (round-13 VERDICT task #6): the
       // compactEvery=2 row above measures the fold at a one-corpus
@@ -623,9 +598,7 @@ object ScaleAudit {
           println(f"[audit] compact_growth m=$m @ $dir: delta_batch=$tDelta%.2f s " +
             f"fold_batch=$tFold%.2f s fold_overhead=${tFold - tDelta}%.2f s " +
             s"base_bytes=$baseBytes layout=${segs.map(x => (x.id, x.base))}")
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          graft.GraftSession.reset(spark)
         }
       }
       // Approx-PPR gate row (round-13 VERDICT task #2 evidence): the
@@ -681,9 +654,7 @@ object ScaleAudit {
           }
           println(s"[audit] ppr_approx_delta @ $dir: ${walls.mkString("; ")}")
         }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       // Scrub-gate corpus-flatness row: same protocol as winnow_gate
       // (fixed 200-doc delta against a 1x vs mult-x accumulated store)
@@ -734,9 +705,7 @@ object ScaleAudit {
           f"delta_batch=$tDelta%.2f s " +
           s"corpus_seg_bytes=${segBytes(segs.head.id)} " +
           s"delta_seg_bytes=${segBytes(segs.last.id)}")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       bench("q186_lm_quality", dir, graft.SparkEntry.queries("q186_lm_quality"))
       bench("q187_dsir_weights", dir, graft.SparkEntry.queries("q187_dsir_weights"))
@@ -797,9 +766,7 @@ object ScaleAudit {
           println(s"[audit] q192 selected fps @ $dir: " +
             s"n_distinct=${selStats.getLong(0)} max_df=${selStats.getLong(1)}")
         }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
       if (want("skew")) locally {
         val v = graft.Tables.load(spark, dir, "documents")
@@ -810,9 +777,7 @@ object ScaleAudit {
           .select($"value").distinct().count()
         println(s"[audit] q181 vocab @ $dir: n_words=${v.count()}; " +
           s"q179 distinct values=$dv")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.GraftSession.reset(spark)
       }
     }
 

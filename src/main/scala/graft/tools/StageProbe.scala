@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage-level wall attribution for q139 (round-13 verdict task #5):
@@ -16,23 +16,10 @@ import org.apache.spark.sql.functions._
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.local.dir", graft.Bench.localDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32)
     import spark.implicits._
 
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc(); System.gc()
-    }
+    def reset(): Unit = graft.GraftSession.reset(spark)
     def time[T](f: => T): (Double, T) = {
       val t0 = System.nanoTime()
       val r = f

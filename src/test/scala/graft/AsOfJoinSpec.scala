@@ -6,12 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.AsOf
 
 class AsOfJoinSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def asofMap(left: Seq[(Long, Long, String)], right: Seq[(Long, Long, String)]) = {
     import spark.implicits._
@@ -163,53 +158,67 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("extensions session: AQE-coalesced plan (no pre-repartition) stays aligned") {
-    spark.sparkContext // ensure the shared context exists first
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      // aggressive AQE coalescing + ASYMMETRIC side sizes: if the two
-      // ENSURE_REQUIREMENTS exchanges coalesced independently they
-      // would land on different partition counts/boundaries and the
-      // merge would misalign — this pins the SMJ-style guarantee that
-      // sibling stages of a co-partitioning binary node coalesce as
-      // one group.
-      val s2 = SparkSession.builder()
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1KB")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      import org.apache.spark.sql.functions._
-      import s2.implicits._
-      val l = (0 until 5000).map(i => (i.toLong % 500, (i * 37 % 1000).toLong, i.toLong))
-        .toDF("k", "t", "lid")
-      val r = (0 until 100000).map(i => (i.toLong % 500, (i * 61 % 1000).toLong, i.toLong))
-        .toDF("rk", "rt", "rid")
-      def rtMap(preShuffle: Boolean) =
-        AsOf.join(l, r, "k", "rk", "t", "rt", preShuffle)
-          .select($"lid", $"rt").collect()
-          .map(x => x.getLong(0) -> (if (x.isNullAt(1)) -1L else x.getLong(1))).toMap
-      val oracleRt = l.join(r, $"k" === $"rk" && $"rt" <= $"t", "left")
-        .groupBy($"lid").agg(max($"rt").as("rt"))
+    // aggressive AQE coalescing + ASYMMETRIC side sizes: if the two
+    // ENSURE_REQUIREMENTS exchanges coalesced independently they
+    // would land on different partition counts/boundaries and the
+    // merge would misalign — this pins the SMJ-style guarantee that
+    // sibling stages of a co-partitioning binary node coalesce as
+    // one group.
+    val s2 = spark.newSession()
+    Seq("spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1KB")
+      .foreach { case (k, v) => s2.conf.set(k, v) }
+    import org.apache.spark.sql.functions._
+    import s2.implicits._
+    val l = (0 until 5000).map(i => (i.toLong % 500, (i * 37 % 1000).toLong, i.toLong))
+      .toDF("k", "t", "lid")
+    val r = (0 until 100000).map(i => (i.toLong % 500, (i * 61 % 1000).toLong, i.toLong))
+      .toDF("rk", "rt", "rid")
+    def rtMap(preShuffle: Boolean) =
+      AsOf.join(l, r, "k", "rk", "t", "rt", preShuffle)
         .select($"lid", $"rt").collect()
         .map(x => x.getLong(0) -> (if (x.isNullAt(1)) -1L else x.getLong(1))).toMap
-      // green BOTH ways: the AQE-friendly default and the pinned path
-      assert(rtMap(preShuffle = false) == oracleRt)
-      assert(rtMap(preShuffle = true) == oracleRt)
-      // the extensions default really drops the user repartition
-      val plan = AsOf.join(l, r, "k", "rk", "t", "rt")
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("REPARTITION_BY_NUM"), s"unexpected pinned repartition:\n$plan")
-      assert(plan.contains("ENSURE_REQUIREMENTS"), s"expected planner exchanges:\n$plan")
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    val oracleRt = l.join(r, $"k" === $"rk" && $"rt" <= $"t", "left")
+      .groupBy($"lid").agg(max($"rt").as("rt"))
+      .select($"lid", $"rt").collect()
+      .map(x => x.getLong(0) -> (if (x.isNullAt(1)) -1L else x.getLong(1))).toMap
+    // green BOTH ways: the AQE-friendly default and the pinned path
+    assert(rtMap(preShuffle = false) == oracleRt)
+    assert(rtMap(preShuffle = true) == oracleRt)
+    // the extensions default really drops the user repartition
+    val plan = AsOf.join(l, r, "k", "rk", "t", "rt")
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("REPARTITION_BY_NUM"), s"unexpected pinned repartition:\n$plan")
+    assert(plan.contains("ENSURE_REQUIREMENTS"), s"expected planner exchanges:\n$plan")
+  }
+
+  test("stock session: AsOf.join self-installs and pre-shuffles to the same rows; Engine registers the SQL functions") {
+    val left = (0 until 2000).map(i => (i.toLong % 200, (i * 37 % 1000).toLong, i.toLong))
+    val right = (0 until 3000).map(i => (i.toLong % 200, (i * 61 % 1000).toLong, i.toLong))
+    def rows(s: SparkSession) = {
+      import s.implicits._
+      val j = AsOf.join(left.toDF("k", "t", "lid"), right.toDF("rk", "rt", "rid"),
+        "k", "rk", "t", "rt")
+      (j.select($"lid", $"rt").collect()
+        .map(x => x.getLong(0) -> (if (x.isNullAt(1)) -1L else x.getLong(1))).toMap,
+        j.queryExecution.executedPlan.toString)
     }
+    val (graftRows, _) = rows(spark)
+    val stock = TestSession.stock()
+    assert(!stock.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy))
+    val (stockRows, stockPlan) = rows(stock)
+    assert(stockRows.size == left.size && stockRows == graftRows)
+    // the fallback path: strategy self-installed, both sides pinned
+    assert(stock.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
+    assert(stockPlan.contains("AsOfJoin") && stockPlan.contains("REPARTITION_BY_NUM"),
+      s"expected the pre-shuffled fallback plan:\n$stockPlan")
+    intercept[org.apache.spark.sql.AnalysisException](
+      stock.sql("SELECT fuzz_ratio('abcd', 'abed')").collect())
+    val eng = new graft.query.Engine(stock, "/root/testdata/sf0.001")
+    val r = eng.query("SELECT fuzz_ratio('abcd', 'abed') AS f").head()
+    assert(r.getDouble(0) == 75.0)
   }
 }

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the bench harness's session hygiene (rounds 8-10 found the
   * in-session bench overstating heavy queries up to 3.7x vs isolated
   * runs purely through cross-query debris). Two properties:
   *
-  *  1. [[Bench.resetSession]] actually restores a pre-query state:
+  *  1. [[GraftSession.reset]] actually restores a pre-query state:
   *     zero persistent RDDs (including localCheckpoint blocks, which
   *     `clearCache` alone never releases) and an empty SQL cache,
   *     even after a query that persists AND checkpoints.
@@ -18,21 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchHygieneSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  private lazy val spark = TestSession.spark
 
   test("resetSession releases SQL-cached plans AND checkpoint blocks") {
     val sc = spark.sparkContext
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    GraftSession.reset(spark)
     // one SQL-cache entry + one localCheckpoint (the block family
     // Dataset.unpersist misses) + a query that does both internally
     val cached = Tables.load(spark, sf, "nation").persist()
@@ -41,9 +30,9 @@ class BenchHygieneSpec extends AnyFunSuite {
     ckpt.count()
     SparkEntry.queries("q139_setsim_join")(spark, sf).count()
     assert(sc.getPersistentRDDs.nonEmpty) // the fixture is live
-    Bench.resetSession(spark)
+    GraftSession.reset(spark)
     assert(sc.getPersistentRDDs.isEmpty,
-      s"blocks survived resetSession: ${sc.getPersistentRDDs.keySet}")
+      s"blocks survived reset: ${sc.getPersistentRDDs.keySet}")
     assert(spark.sharedState.cacheManager.isEmpty, "SQL cache not empty")
   }
 

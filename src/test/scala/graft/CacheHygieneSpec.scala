@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the drop-on-return cache policy (round-9 ADVICE #5) for the
@@ -23,22 +22,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  private lazy val spark = TestSession.spark
 
   test("every query releases its caches on return (only the output's own blocks remain)") {
     val sc = spark.sparkContext
     // start clean: earlier suites in the same JVM may have left blocks
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    GraftSession.reset(spark)
     val leaks = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val before = sc.getPersistentRDDs.keySet

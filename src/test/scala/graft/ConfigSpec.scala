@@ -36,8 +36,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("debugDump writes dated pretty JSON (K4 contract)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = TestSession.spark
     val dir = Files.createTempDirectory("dump").toString
     val p = graft.sources.Ndjson.debugDump(
       Tables.load(spark, "/root/testdata/sf0.001", "region"), dir, "regions")
@@ -47,8 +46,9 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("spark.graft.reliableCheckpoint routes Scope.seal through a reliable checkpoint") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    // a child session: the conf switched on below stays out of the
+    // shared session
+    val spark = TestSession.spark.newSession()
     def sealRdds(out: org.apache.spark.sql.DataFrame) =
       out.queryExecution.logical.collect {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
@@ -65,12 +65,10 @@ class ConfigSpec extends AnyFunSuite {
     val ckDir = Files.createTempDirectory("reliable-ck").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
-    try {
-      val df = Scope(_.seal(spark.range(10).toDF("id")))
-      assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
-      val rdds = sealRdds(df)
-      assert(rdds.nonEmpty && rdds.forall(_.getCheckpointFile.isDefined),
-        s"reliable seal must write to the checkpoint dir; got $rdds")
-    } finally spark.conf.set("spark.graft.reliableCheckpoint", "false")
+    val df = Scope(_.seal(spark.range(10).toDF("id")))
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 10L))
+    val rdds = sealRdds(df)
+    assert(rdds.nonEmpty && rdds.forall(_.getCheckpointFile.isDefined),
+      s"reliable seal must write to the checkpoint dir; got $rdds")
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import graft.sources.Ndjson
 
 class EtlModulesSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("VerticalSplit: wide frame fans out to column subsets, one scan") {
     val wide = Tables.load(spark, sf, "lineitem")

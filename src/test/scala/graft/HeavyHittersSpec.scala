@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.HeavyHittersAgg
@@ -10,11 +9,7 @@ import graft.functions.HeavyHittersAgg
   * partials merge across partitions.
   */
 class HeavyHittersSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   /** Zipf-ish skewed stream: item i appears ~ N/(i+1) times. */
   private def skewed = {
@@ -57,27 +52,10 @@ class HeavyHittersSpec extends AnyFunSuite {
   }
 
   test("SQL surface: heavy_hitters aggregates through spark.sql") {
-    graft.functions.GraftFunctions.register(spark)
-    // register() covers scalar kernels; the aggregate rides the
-    // extensions path, so exercise it via a GraftExtensions session
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[8]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val r = s2.sql(
-        """SELECT s.total AS total, size(s.items) AS k
-          |FROM (SELECT heavy_hitters(CAST(id % 7 AS STRING), 8) AS s
-          |      FROM range(700))""".stripMargin).collect()(0)
-      assert(r.getLong(0) == 700 && r.getInt(1) == 7)
-    } finally {
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
+    val r = spark.sql(
+      """SELECT s.total AS total, size(s.items) AS k
+        |FROM (SELECT heavy_hitters(CAST(id % 7 AS STRING), 8) AS s
+        |      FROM range(700))""".stripMargin).collect()(0)
+    assert(r.getLong(0) == 700 && r.getInt(1) == 7)
   }
 }

@@ -7,7 +7,6 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{BatchedLookup, HttpSpotifyService, TokenCache}
@@ -22,11 +21,7 @@ import graft.sources.{BatchedLookup, HttpSpotifyService, TokenCache}
   */
 class HttpSpotifySpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   /** Loopback token + resource server, mirroring FakeTokenEndpoint's
     * semantics at the wire level: bearer tokens live for `ttlCalls`

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * upgrade of the SQL builtins fails loudly.
   */
 class KernelEqualitySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = {
+    val s = TestSession.spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s
+  }
 
   test("dot_i64 equals the aggregate(zip_with(...)) HOF fold it replaced") {
     import spark.implicits._

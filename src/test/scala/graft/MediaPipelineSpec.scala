@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +11,7 @@ import graft.media.{MediaPipeline, PlaylistModels}
   * SURVEY §1.3), empty enrichment ids.
   */
 class MediaPipelineSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private lazy val fixturePath: String = MediaFixture.path
 

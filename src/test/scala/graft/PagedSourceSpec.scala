@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SpotifyService
@@ -24,11 +23,7 @@ object ToyApi extends SpotifyService {
 }
 
 class PagedSourceSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def read(total: Int, pageSize: Int) =
     spark.read.format("graft.sources.PagedSourceProvider")

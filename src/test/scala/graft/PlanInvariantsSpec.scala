@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the PHYSICAL PLAN shapes that make key queries scale — the
@@ -15,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanInvariantsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString

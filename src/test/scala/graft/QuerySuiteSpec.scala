@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end checks of every SparkEntry query at sf0.001, plus golden
@@ -10,22 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QuerySuiteSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  // Production install path (q111 needs the injected parser). In the
-  // full suite an extension-less session from an earlier suite already
-  // exists, and getOrCreate() would return it with the extensions
-  // silently dropped — clear the default/active session first so the
-  // builder constructs a fresh one over the shared SparkContext.
-  private lazy val spark = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  private lazy val spark = TestSession.spark
 
   test("every declared query has rows and a deterministic first row") {
     SparkEntry.queries.foreach { case (name, fn) =>

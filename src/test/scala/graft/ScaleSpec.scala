@@ -9,14 +9,7 @@ import graft.operators.Scale
 
 class ScaleSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("saltedJoin result equals the plain join (inner + left)") {
     import spark.implicits._
@@ -428,78 +421,82 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions: strategy + functions via withExtensions") {
-    spark.sparkContext // ensure the shared context exists first
-    // getOrCreate only applies extensions when it builds a NEW session,
-    // so clear the default/active session (NOT the context) and restore
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[8]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      val r = s2.sql(
-        "SELECT fuzz_ratio('abcd','abed') AS f, ascii_fold('Björk') AS a").collect()(0)
-      assert(r.getDouble(0) == 75.0 && r.getString(1) == "Bjork")
-      // the planner strategy is installed session-wide
-      assert(s2.sessionState.planner.strategies
-        .contains(graft.plans.AsOfJoinStrategy))
-
-      // the FULL kernel surface is SQL-exposed: q29's near-dup
-      // pipeline (signature -> bands -> candidate join -> exact
-      // verify) as pure SQL, equal to the DataFrame formulation
-      s2.read.parquet(s"$sf/documents.parquet").createOrReplaceTempView("documents")
-      val sqlPairs = s2.sql(
-        """WITH bands AS (
-          |  SELECT doc_id, b.band, b.key
-          |  FROM documents
-          |  LATERAL VIEW posexplode(min_hash_bands_words(text, 3, 16, 4)) b AS band, key),
-          |cand AS (
-          |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          |  FROM bands a JOIN bands b
-          |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-          |grams AS (SELECT doc_id, gram_set(text, 3) AS grams FROM documents)
-          |SELECT doc_a, doc_b, jaccard_sorted(ga.grams, gb.grams) AS jac
-          |FROM cand
-          |JOIN grams ga ON ga.doc_id = doc_a
-          |JOIN grams gb ON gb.doc_id = doc_b
-          |WHERE jaccard_sorted(ga.grams, gb.grams) >= 0.8
-          |ORDER BY doc_a, doc_b""".stripMargin).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val dfPairs = SparkEntry.queries("q29_dedup_minhash")(s2, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(sqlPairs.nonEmpty && sqlPairs == dfPairs)
-
-      // remaining kernels answer from SQL with literal tuning params
-      val k = s2.sql(
-        """SELECT min_hash('abcdef', 3)[0] AS mh,
-          |       doc_fingerprint('abcdef', 4) AS fp,
-          |       size(lsh_buckets(array(1.0F, 2.0F), 6, 12)) AS nt,
-          |       sum(1) AS one
-          |FROM range(1)""".stripMargin).collect()(0)
-      assert(k.getInt(2) == 12)
-      // top_k_by (aggregate) and ngrams (generator) via SQL
-      val tk = s2.sql(
-        """SELECT top_k_by(CAST(id AS DOUBLE), id, 2) AS top
-          |FROM range(10)""".stripMargin).collect()(0)
-      assert(tk.getSeq[org.apache.spark.sql.Row](0).map(_.getLong(1)) == Seq(9L, 8L))
-      val ng = s2.sql(
-        "SELECT ngram FROM (SELECT 'abcd' AS s) LATERAL VIEW ngrams(s, 2) g AS ngram")
-        .collect().map(_.getString(0)).toSeq
-      assert(ng == Seq("ab", "bc", "cd"))
-      // binary field readers: both endiannesses + the 16-bit LE field
-      val bin = s2.sql(
-        """SELECT be_int(X'12345678', 0) AS be, le_int(X'78563412', 0) AS le,
-          |       le_short(X'3412', 0) AS ls, le_int(X'00', 0) AS oob
-          |FROM range(1)""".stripMargin).collect()(0)
-      assert(bin.getInt(0) == 0x12345678 && bin.getInt(1) == 0x12345678 &&
-        bin.getInt(2) == 0x1234 && bin.getInt(3) == -1)
-    } finally {
+    // GraftSession.local is the one recipe that installs them. It must
+    // do so even when a stock session is the JVM's default and active
+    // session, which getOrCreate() hands back with the extensions
+    // silently dropped
+    val (prevDefault, prevActive) = (SparkSession.getDefaultSession, SparkSession.getActiveSession)
+    val stock = TestSession.stock()
+    SparkSession.setDefaultSession(stock)
+    SparkSession.setActiveSession(stock)
+    val s2 = try GraftSession.local(3) finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+      prevActive.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
     }
+    assert(s2.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s2.conf.get("spark.sql.shuffle.partitions") == "3")
+    // the planner strategy is installed session-wide
+    assert(s2.sessionState.planner.strategies
+      .contains(graft.plans.AsOfJoinStrategy))
+    val r = s2.sql(
+      "SELECT fuzz_ratio('abcd','abed') AS f, ascii_fold('Björk') AS a").collect()(0)
+    assert(r.getDouble(0) == 75.0 && r.getString(1) == "Bjork")
+    // the injected parser takes ASOF JOIN and the custom exec runs it
+    val asof = s2.sql(
+      """SELECT * FROM (SELECT 1L AS k, 10L AS t) l
+        |ASOF JOIN (SELECT 1L AS rk, 5L AS rt) r
+        |  ON k = rk AND asof_backward(t, rt)""".stripMargin)
+    assert(asof.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+    assert(asof.collect().map(_.toSeq).toSeq == Seq(Seq(1L, 10L, 1L, 5L)))
+
+    // the FULL kernel surface is SQL-exposed: q29's near-dup
+    // pipeline (signature -> bands -> candidate join -> exact
+    // verify) as pure SQL, equal to the DataFrame formulation
+    s2.read.parquet(s"$sf/documents.parquet").createOrReplaceTempView("documents")
+    val sqlPairs = s2.sql(
+      """WITH bands AS (
+        |  SELECT doc_id, b.band, b.key
+        |  FROM documents
+        |  LATERAL VIEW posexplode(min_hash_bands_words(text, 3, 16, 4)) b AS band, key),
+        |cand AS (
+        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        |  FROM bands a JOIN bands b
+        |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+        |grams AS (SELECT doc_id, gram_set(text, 3) AS grams FROM documents)
+        |SELECT doc_a, doc_b, jaccard_sorted(ga.grams, gb.grams) AS jac
+        |FROM cand
+        |JOIN grams ga ON ga.doc_id = doc_a
+        |JOIN grams gb ON gb.doc_id = doc_b
+        |WHERE jaccard_sorted(ga.grams, gb.grams) >= 0.8
+        |ORDER BY doc_a, doc_b""".stripMargin).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val dfPairs = SparkEntry.queries("q29_dedup_minhash")(s2, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(sqlPairs.nonEmpty && sqlPairs == dfPairs)
+
+    // remaining kernels answer from SQL with literal tuning params
+    val k = s2.sql(
+      """SELECT min_hash('abcdef', 3)[0] AS mh,
+        |       doc_fingerprint('abcdef', 4) AS fp,
+        |       size(lsh_buckets(array(1.0F, 2.0F), 6, 12)) AS nt,
+        |       sum(1) AS one
+        |FROM range(1)""".stripMargin).collect()(0)
+    assert(k.getInt(2) == 12)
+    // top_k_by (aggregate) and ngrams (generator) via SQL
+    val tk = s2.sql(
+      """SELECT top_k_by(CAST(id AS DOUBLE), id, 2) AS top
+        |FROM range(10)""".stripMargin).collect()(0)
+    assert(tk.getSeq[org.apache.spark.sql.Row](0).map(_.getLong(1)) == Seq(9L, 8L))
+    val ng = s2.sql(
+      "SELECT ngram FROM (SELECT 'abcd' AS s) LATERAL VIEW ngrams(s, 2) g AS ngram")
+      .collect().map(_.getString(0)).toSeq
+    assert(ng == Seq("ab", "bc", "cd"))
+    // binary field readers: both endiannesses + the 16-bit LE field
+    val bin = s2.sql(
+      """SELECT be_int(X'12345678', 0) AS be, le_int(X'78563412', 0) AS le,
+        |       le_short(X'3412', 0) AS ls, le_int(X'00', 0) AS oob
+        |FROM range(1)""".stripMargin).collect()(0)
+    assert(bin.getInt(0) == 0x12345678 && bin.getInt(1) == 0x12345678 &&
+      bin.getInt(2) == 0x1234 && bin.getInt(3) == -1)
   }
 }

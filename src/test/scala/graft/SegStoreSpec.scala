@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.SegStore
@@ -13,11 +12,11 @@ import graft.streaming.SegStore
   * they leave on disk: an uncommitted (torn) segment directory.
   */
 class SegStoreSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = {
+    val s = TestSession.spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s
+  }
 
   private def writeSeg(root: String, id: Long, base: Boolean,
       rows: Seq[(Long, Long)], commit: Boolean): Unit = {
@@ -72,8 +71,7 @@ class SegStoreSpec extends AnyFunSuite {
     writeSeg(root, 2, base = false, Seq((2L, 20L)), commit = true)
     // write base_3 and create its marker WITHOUT gc (simulate the
     // crash window by creating the marker by hand, not via commit)
-    import org.apache.spark.sql.SparkSession
-    writeSeg(root, 3, base = true,
+        writeSeg(root, 3, base = true,
       Seq((1L, 10L), (2L, 20L), (3L, 30L)), commit = false)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Recall of the approximate ANN variants against the exact baseline.
@@ -9,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SimilaritySpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def pairs(name: String): Set[(Long, Long)] =
     SparkEntry.queries(name)(spark, sf).collect()

@@ -2,19 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventsStream
 
 class StreamingSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   /** Stage the events table as NDJSON so the file stream source can
     * replay it (the parquet fixture is a single file; the JSON stage

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TopKByAgg.top_k_by
 
 class TopKBySpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("top_k_by across many partitions equals the window formulation") {
     import spark.implicits._

@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +11,7 @@ import graft.operators.{Dedup, Training}
   */
 class TrainingSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
-  private lazy val spark = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("connectedComponents: chain + separate clique + bridge ordering") {
     import spark.implicits._
