@@ -91,6 +91,15 @@ final class Scope private (materialize: Boolean) {
     drop.foreach { case (h, isCkpt) => Scope.free(h, isCkpt) }
   }
 
+  /** Run `body`; return its result and the frames this scope
+    * registered meanwhile (a [[Fixpoint]] round's own frames).
+    */
+  private[graft] def registering[A](body: => A): (A, Seq[Dataset[_]]) = {
+    val before = synchronized(held.map(_._1).toList)
+    val out = body
+    (out, synchronized(held.map(_._1).filterNot(d => before.exists(_ eq d)).toList))
+  }
+
   private def hold[T](ds: Dataset[T], ckpt: Boolean): Dataset[T] =
     synchronized { held += (ds -> ckpt); ds }
 

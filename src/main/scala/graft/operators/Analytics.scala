@@ -209,6 +209,20 @@ object Analytics {
       .orderBy($"win_start", $"event_type")
   }
 
+  /** Three rounds of q104's integer PageRank over the (src, dst,
+    * degree) edge table from the rank vector `init`; `base` is the
+    * per-node restart mass. q113 runs the same rounds over its merged
+    * graph.
+    */
+  private def pageRank(edgesDeg: DataFrame, init: DataFrame, base: Long): DataFrame =
+    (1 to 3).foldLeft(init) { (r, _) =>
+      edgesDeg
+        .join(r.withColumnRenamed("node", "src"), "src")
+        .select(col("dst"), expr("rank DIV degree").as("contrib"))
+        .groupBy(col("dst")).agg(sum(col("contrib")).as("cs"))
+        .select(col("dst").as("node"), (lit(base) + expr("(85 * cs) DIV 100")).as("rank"))
+    }
+
   /** PageRank (3 damped iterations, d = 0.85) over the undirected
     * customer–supplier interaction graph derived from lineitem ×
     * orders — the link-authority score web-corpus curation uses to
@@ -253,13 +267,7 @@ object Analytics {
     require(n > 0, s"q104: empty customer-supplier graph under $dir")
     val base = Total * 15 / 100 / n
     val init = deg.select($"src".as("node"), lit(Total / n).as("rank"))
-    val ranked = (1 to 3).foldLeft(init) { (r, _) =>
-      edgesDeg
-        .join(r.withColumnRenamed("node", "src"), "src")
-        .select($"dst", expr("rank DIV degree").as("contrib"))
-        .groupBy($"dst").agg(sum($"contrib").as("cs"))
-        .select($"dst".as("node"), (lit(base) + expr("(85 * cs) DIV 100")).as("rank"))
-    }
+    val ranked = pageRank(edgesDeg, init, base)
     // seal the node-sized result; the graph caches die with the scope
     sc.seal(ranked).orderBy($"node")
   }
@@ -325,13 +333,7 @@ object Analytics {
     require(n > 0, s"q113: empty merged customer-supplier graph under $dir")
     val base = Total * 15 / 100 / n
     val init = mergedDeg.select($"src".as("node"), lit(Total / n).as("rank"))
-    val ranked = (1 to 3).foldLeft(init) { (r, _) =>
-      edgesDeg
-        .join(r.withColumnRenamed("node", "src"), "src")
-        .select($"dst", expr("rank DIV degree").as("contrib"))
-        .groupBy($"dst").agg(sum($"contrib").as("cs"))
-        .select($"dst".as("node"), (lit(base) + expr("(85 * cs) DIV 100")).as("rank"))
-    }
+    val ranked = pageRank(edgesDeg, init, base)
     sc.seal(ranked).orderBy($"node")
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.{Scope, Tables}
+import graft.{Fixpoint, Scope, Tables}
 
 /** Graph-traversal shapes over the derived customer–supplier graph
   * (the q104/q113 bipartite node encoding: customers at `2k`,
@@ -134,11 +134,10 @@ object GraphOps {
     * Scale shape: label relaxation is the textbook distributed BFS —
     * per round ONE shuffle of the (edge ⋈ labels) contribution plus a
     * node-sized min-aggregate; no adjacency matrix, no driver-side
-    * frontier. Labels are eagerly `localCheckpoint`ed per round so
-    * the 4-round loop keeps a flat plan (the q77/q91 connected-
-    * components discipline) instead of a 2^rounds self-referencing
-    * DAG. At 100 TB the edge list is the big side and it shuffles
-    * once per round on `src` — bucketing the edge table on `src`
+    * frontier. The rounds run through [[graft.Fixpoint]], so the
+    * 4-round loop keeps a flat plan instead of a 2^rounds
+    * self-referencing DAG. At 100 TB the edge list is the big side
+    * and it shuffles once per round on `src` — bucketing the edge table on `src`
     * makes every round's join zero-exchange, the q123 layout
     * economics applied to traversal.
     */
@@ -158,15 +157,13 @@ object GraphOps {
     val edges = sc.persist(BipartiteGraph.edgesOf(cs))
     val nodes = deg.select($"src".as("node"))
     val seeds = nodes.where($"node" <= 20 && $"node" % 2 === 0)
-    // ONE init job: the observe() metric rides the seed checkpoint's
-    // own materialization, so the non-empty guard costs no job of its
-    // own (the round-17 shape paid a limit(1) probe plus a separate
-    // eager checkpoint job)
-    val initObs = org.apache.spark.sql.Observation()
-    val init = sc.ckpt(seeds.select($"node", lit(0).as("hop"))
-      .observe(initObs, count(lit(1)).as("n")))
-    require(initObs.get("n").asInstanceOf[Long] > 0,
-      s"q134: no seed nodes under $dir")
+    // labels only grow, and each round adds exactly its new frontier
+    // (the anti-join keeps it disjoint from the settled labels), so an
+    // unchanged label count means an empty frontier; round 0's count is
+    // the seed count
+    val size = count(lit(1)).as("n")
+    val init = Fixpoint.ckpt(sc, seeds.select($"node", lit(0).as("hop")))(size)
+    require(init.witness.getLong(0) > 0, s"q134: no seed nodes under $dir")
     // frontier BFS: each round joins edges against only the nodes
     // REACHED LAST ROUND (not the full label set), and the anti-join
     // against settled labels keeps the frontier shrinking — on a
@@ -174,40 +171,22 @@ object GraphOps {
     // frontier empties once everything is reached. An EMPTY frontier
     // makes every remaining round a no-op (the edge join produces
     // nothing), so the loop exits there — identical labels to running
-    // all 4 rounds, pinned in AnalyticsSpec. The frontier-empty probe
-    // is FUSED into the round's one materializing action: an observe()
-    // metric counts this round's rows (hop = h — exactly the new
-    // frontier, since settled labels all carry smaller hops) DURING
-    // the union's eager checkpoint job, where the round-17 shape paid
-    // the checkpoint job plus a separate isEmpty probe per round.
-    var labels = init
-    var frontier = init
-    var h = 0
-    var frontierEmpty = false
-    while (h < 4 && (!earlyExit || !frontierEmpty)) {
-      h += 1
+    // all 4 rounds, pinned in AnalyticsSpec.
+    val frontiers = scala.collection.mutable.ArrayBuffer(init.state)
+    val labels = Fixpoint.iterate(sc, init, maxRounds = 4) { labels =>
       val reached = edges
-        .join(frontier.select($"node".as("src")), "src")
+        .join(frontiers.last.select($"node".as("src")), "src")
         .select($"dst".as("node")).distinct()
       // persist (lazy), not localCheckpoint: the labels checkpoint
-      // below materializes it in the same job, and the next round's
-      // edge join reads it from cache — no extra eager job per round
-      val newFrontier = sc.persist(reached.join(labels, Seq("node"), "left_anti")
-        .select($"node", lit(h).as("hop")))
-      val obs = org.apache.spark.sql.Observation()
-      val next = sc.ckpt(labels.union(newFrontier)
-        .observe(obs, count(when($"hop" === h, lit(1))).as("nf")))
-      frontierEmpty = obs.get("nf").asInstanceOf[Long] == 0L
-      // the eager checkpoint above just materialized newFrontier AND
-      // re-stored the previous label set — the prior round's labels
-      // checkpoint and frontier cache are both dead now
-      sc.release(labels, frontier)
-      labels = next
-      frontier = newFrontier
-    }
+      // materializes it in the same job, and the next round's edge
+      // join reads it from cache — no extra eager job per round
+      frontiers += sc.persist(reached.join(labels, Seq("node"), "left_anti")
+        .select($"node", lit(frontiers.size).as("hop")))
+      labels.union(frontiers.last)
+    }(size)((prev, cur) => earlyExit && prev == cur).state
     // everything downstream reads only the checkpointed labels (and a
     // fresh deg scan) — the edge cache and final frontier are dead
-    sc.release(frontier, edges)
+    sc.release(frontiers.last, edges)
     val hist = labels.groupBy($"hop")
       .agg(count(lit(1)).as("n_nodes"), sum($"node").as("sum_node"))
     val unreached = nodes.join(labels, Seq("node"), "left_anti")
@@ -459,10 +438,10 @@ object GraphOps {
     *
     * Scale shape: per round, one edge⋈labels join, one (node, label)
     * count aggregate with map-side combine, one max_by argmax per
-    * node — no window sort. Labels localCheckpoint per round (the
-    * q77/q91 discipline). At 100 TB: the edge list shuffles once per
-    * round on src; bucketing it on src makes every round
-    * zero-exchange on that side (q123 economics).
+    * node — no window sort. The rounds run through [[graft.Fixpoint]].
+    * At 100 TB: the edge list shuffles once per round on src;
+    * bucketing it on src makes every round zero-exchange on that side
+    * (q123 economics).
     */
   val q156_label_propagation: Q = (spark, dir) =>
     labelPropagation(spark, dir, earlyExit = true)
@@ -473,25 +452,22 @@ object GraphOps {
     val (cs, deg) = BipartiteGraph.staged(spark, dir)
     val edges = sc.persist(BipartiteGraph
       .fanOut(spark, BipartiteGraph.edgesOf(cs)))
-    val init = sc.ckpt(deg.select($"src".as("node"), $"src".as("lbl")))
+    val init = Fixpoint.Round(sc.ckpt(deg.select($"src".as("node"), $"src".as("lbl"))))
+    // the adopted labels are exactly the full join's non-null `lbl`
+    // rows (max_by over non-null neighbor labels is never null, so no
+    // adopted row is lost; prev-only rows are the vanished ones)
+    def adopted(round: org.apache.spark.sql.DataFrame) =
+      round.where($"lbl".isNotNull).select($"node", $"lbl")
     // labels are a deterministic function of the previous round's
     // labels, so an UNCHANGED label table is a fixed point and every
     // remaining round is a no-op — exit there (pinned equal to the
-    // always-run loop in AnalyticsSpec). ONE driver-synchronous action
-    // per round: the previous round's label rides the new label table
-    // as a `prev` column (a full join of two node-sized tables — the
-    // same join the round-17 probe ran as its own second job), and an
-    // `observe()` metric counts the changed/appeared/vanished labels
-    // DURING the table's eager checkpoint job (guide §1.2: with
-    // node-sized rounds the loop's job structure is the cost; JobCount
-    // measured 39 jobs for the 4-round loop, probes included).
-    var labels = init
-    var round = 0
-    var fixedPoint = false
-    while (round < 4 && !fixedPoint) {
-      round += 1
-      val obs = org.apache.spark.sql.Observation()
-      val nextJ = sc.ckpt(edges
+    // always-run loop in AnalyticsSpec). The previous round's label
+    // rides the new label table as a `prev` column (a full join of two
+    // node-sized tables), so the witness counts the changed, appeared
+    // and vanished labels.
+    val labels = adopted(Fixpoint.iterate(sc, init, maxRounds = 4) { round =>
+      val labels = adopted(round)
+      edges
         .join(labels.withColumnRenamed("node", "src")
           .withColumnRenamed("lbl", "slbl"), "src")
         .groupBy($"dst", $"slbl").agg(count(lit(1)).as("c"))
@@ -499,20 +475,8 @@ object GraphOps {
         .agg(max_by($"slbl", struct($"c", -$"slbl")).as("lbl"))
         .select($"dst".as("node"), $"lbl")
         .join(labels.withColumnRenamed("lbl", "prev"), Seq("node"), "full")
-        .observe(obs, count(when(
-          $"lbl".isNull || $"prev".isNull || $"lbl" =!= $"prev",
-          lit(1))).as("nchanged")))
-      // the adopted labels are exactly the full join's non-null `lbl`
-      // rows (max_by over non-null neighbor labels is never null, so
-      // no adopted row is lost; prev-only rows are the vanished ones)
-      val next = nextJ.where($"lbl".isNotNull).select($"node", $"lbl")
-      fixedPoint = earlyExit && round < 4 &&
-        obs.get("nchanged").asInstanceOf[Long] == 0L
-      // the checkpoint above was the last reader of the previous
-      // round's checkpoint (`labels` reads it)
-      sc.release(labels)
-      labels = next
-    }
+    }(count(when($"lbl".isNull || $"prev".isNull || $"lbl" =!= $"prev",
+      lit(1))).as("nchanged"))((_, cur) => earlyExit && cur.getLong(0) == 0L).state)
     // the per-round eager checkpoints mean the final labels no longer
     // reference the edge cache — drop it before returning
     sc.release(edges)
@@ -700,9 +664,9 @@ object GraphOps {
     * decide). Four synchronous peeling rounds on the staged
     * customer–supplier pair index: per round, both sides' degrees are
     * ONE map-side-combined aggregate each, and the edge set shrinks
-    * via two semi-join-shaped filters; the shrinking edge set
-    * localCheckpoints per round (the q77/q91 iterative discipline —
-    * flat plans, monotone work). Reports (nodes, edges) per round —
+    * via two semi-join-shaped filters; the shrinking edge set is
+    * checkpointed per round by [[graft.Fixpoint]] (flat plans,
+    * monotone work). Reports (nodes, edges) per round —
     * the fixed-point diagnostic a curation pipeline actually reads.
     * At 100 TB each round is two degree aggregates + two joins keyed
     * by the edge list's own columns; rounds-to-converge is bounded by
@@ -722,49 +686,33 @@ object GraphOps {
     val base = cs.agg(count(lit(1)).as("ne"),
       countDistinct($"c").as("nc")).collect()(0)
     val k = math.max(base.getLong(0) / base.getLong(1) / 2, 1L)
-    var edges = cs.select($"c", $"s")
-    val out = Seq.newBuilder[(Int, Long, Long)]
+    val init = cs.select($"c", $"s")
+    // distinct counts cannot be observation metrics, so the node count
+    // is one more job per round, over the just-checkpointed blocks
+    def nodeCount(edges: org.apache.spark.sql.DataFrame) =
+      edges.select($"c".as("n")).union(edges.select($"s".as("n"))).distinct().count()
+    val nodeCounts = Seq.newBuilder[Long]
     // the edge set only ever SHRINKS, so an unchanged edge COUNT means
     // the keep-filters pruned nothing and every remaining round is the
     // identical fixed point — fill those rows without running the
     // joins (pinned round-for-round equal to the always-run loop in
     // AnalyticsSpec; the oracle unrolls all 4 rounds either way)
-    var prevNe = -1L
-    var r = 1
-    while (r <= rounds) {
+    val peel = Fixpoint.iterate(sc, Fixpoint.Round(init), rounds) { edges =>
+      // count the previous round's nodes before its checkpoint is
+      // released; round 1 reads the lazy staged scan, not a round
+      if (edges ne init) nodeCounts += nodeCount(edges)
       val keepC = edges.groupBy($"c").agg(count(lit(1)).as("dc"))
         .where($"dc" >= k).select($"c")
       val keepS = edges.groupBy($"s").agg(count(lit(1)).as("ds"))
         .where($"ds" >= k).select($"s")
-      // the edge count rides the eager checkpoint's own job as an
-      // observe() metric; the node count is one more aggregate over
-      // the just-checkpointed blocks (distinct counts cannot be
-      // observation metrics). Two jobs per round where the round-17
-      // shape paid three (checkpoint, edge count, node distinct-count)
-      // — and the second reads cached rows only.
-      val obs = org.apache.spark.sql.Observation()
-      val next = sc.ckpt(edges.join(keepC, "c").join(keepS, "s")
-        .observe(obs, count(lit(1)).as("ne")))
-      val prev = edges
-      edges = next
-      val ne = obs.get("ne").asInstanceOf[Long]
-      val nn = edges.select($"c".as("n")).union(edges.select($"s".as("n")))
-        .distinct().count()
-      // previous round's edge checkpoint is dead once the new one is
-      // materialized (round 1: `edges` is a lazy staged-parquet scan,
-      // so the release is a no-op there)
-      sc.release(prev)
-      out += ((r, nn, ne))
-      if (earlyExit && ne == prevNe) {
-        // fixed point: replicate the settled counts for the rest
-        while (r < rounds) { r += 1; out += ((r, nn, ne)) }
-      }
-      prevNe = ne
-      r += 1
-    }
-    // the result is driver-side rows — the last edge checkpoint has no
-    // remaining consumer and dies with the scope
-    out.result().toDF("round", "n_nodes", "n_edges").orderBy($"round")
+      edges.join(keepC, "c").join(keepS, "s")
+    }(count(lit(1)).as("ne"))((prev, cur) => earlyExit && prev == cur)
+    nodeCounts += nodeCount(peel.state)
+    // fixed point: replicate the settled counts for the rest
+    val perRound = nodeCounts.result().zip(peel.witnesses.tail.map(_.getLong(0)))
+    (perRound ++ Seq.fill(rounds - perRound.size)(perRound.last)).zipWithIndex
+      .map { case ((nn, ne), i) => (i + 1, nn, ne) }
+      .toDF("round", "n_nodes", "n_edges").orderBy($"round")
   }
 
   /** q175: degree assortativity (Newman 2002) — the Pearson

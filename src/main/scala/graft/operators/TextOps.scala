@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Scope, Tables}
+import graft.{Fixpoint, Scope, Tables}
 import graft.functions.GraftFunctions._
 
 /** Text-analysis operators for training-data pipelines over the
@@ -1249,9 +1249,9 @@ object TextOps {
     * (count desc, then pair asc — deterministic ties) is a ONE-ROW
     * driver collect; the merge applies map-side as a greedy
     * left-to-right fold (`functions.aggregate`, all built-in
-    * expressions), and the vocab localCheckpoints per step so the
-    * plan stays flat instead of nesting k fold expressions (the
-    * rollCheckpoint stance from connected components). The SQL oracle
+    * expressions), and the vocab is checkpointed per step by
+    * [[graft.Fixpoint]] so the plan stays flat instead of nesting k
+    * fold expressions. The SQL oracle
     * unrolls the k merge steps as MATERIALIZED chained CTEs (see
     * [[bpeCtes]]); the spec additionally replays a driver-side
     * reference BPE on the collected vocabulary and pins exact
@@ -1278,15 +1278,15 @@ object TextOps {
   private def bpeTrain(sc: Scope, spark: SparkSession, dir: String, k: Int)
       : (DataFrame, Seq[(Int, String, String, Long)]) = {
     import spark.implicits._
-    var vocab = sc.ckpt(Tables.load(spark, dir, "documents")
+    val init = sc.ckpt(Tables.load(spark, dir, "documents")
       .select(explode(split(lower(trim($"text")), "\\s+")).as("word"))
       .where(length($"word") > 0)
       .groupBy($"word").agg(count(lit(1)).as("freq"))
       .select($"word", expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))")
         .as("syms"), $"freq"))
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (step <- 1 to k) {
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    val vocab = Fixpoint.iterate(sc, Fixpoint.Round(init), k) { vocab =>
       val best = vocab
         // guard single-symbol words: sequence(1, 0) is DESCENDING
         // [1, 0] in Spark, not empty
@@ -1300,24 +1300,20 @@ object TextOps {
         .agg(sum($"freq").as("cnt"))
         .orderBy($"cnt".desc, $"l", $"r").limit(1).collect()(0)
       val (l, r, cnt) = (best.getString(0), best.getString(1), best.getLong(2))
-      merges += ((step, l, r, cnt))
+      merges += ((merges.size + 1, l, r, cnt))
       // greedy left-to-right non-overlap: the merged token (l+r)
       // differs from l, so a fresh occurrence of the pair never
       // re-consumes the symbol just produced
-      val next = sc.ckpt(vocab.select(
+      vocab.select(
         $"word",
         aggregate($"syms", array().cast("array<string>"),
           (acc, s) => when(size(acc) > 0 &&
               element_at(acc, -1) === lit(l) && s === lit(r),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
             .otherwise(concat(acc, array(s)))).as("syms"),
-        $"freq"))
-      // roll: the new checkpoint re-stores the whole vocabulary, so
-      // the previous step's blocks are dead
-      sc.release(vocab)
-      vocab = next
-    }
-    (vocab, merges.result())
+        $"freq")
+    }()((_, _) => false).state
+    (vocab, merges.toSeq)
   }
 
   /** q165: apply the trained BPE merge table to ENCODE the corpus —

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Scope, Tables}
+import graft.{Fixpoint, Scope, Tables}
 import graft.functions.GraftFunctions._
 
 /** Training-data pipeline operators beyond the per-document scans in
@@ -41,24 +41,13 @@ import graft.functions.GraftFunctions._
 object Training {
   import Relational.Q
 
-  /** Iterative-loop discipline (both CC kernels below, and the graph
-    * loops in [[GraphOps]]): each round's table eagerly
-    * `localCheckpoint`s — truncating the lineage so the loop keeps a
-    * flat plan instead of a 2^rounds tree — and the round's
-    * convergence witness rides that SAME materialization job as an
-    * `observe()` metric (CollectMetrics evaluates during the
-    * checkpoint's internal count), so the probe costs no
-    * driver-synchronous job of its own. The round-17 shape paid the
-    * checkpoint job PLUS a separate probe job per round — with
-    * node-sized rounds, that second job's scheduling and planning was
-    * pure overhead (guide §1.2). A persist()-based variant was
-    * measured and REJECTED: SQL-cache materialization runs without
-    * AQE by default (`canChangeCachedPlanOutputPartitioning=false`),
-    * losing runtime broadcast conversion and partition coalescing
-    * inside every round (q134 2.5 → 6.9 s, q91 1.7 → 9.4 s). The
-    * previous round's checkpoint is released once the new one exists;
-    * bounded storage: at most two rounds' block sets live at any
-    * moment.
+  /** Both CC kernels below run their rounds through [[graft.Fixpoint]]
+    * (one checkpoint job per round, the witness observed in it). A
+    * persist()-based variant was measured and REJECTED: SQL-cache
+    * materialization runs without AQE by default
+    * (`canChangeCachedPlanOutputPartitioning=false`), losing runtime
+    * broadcast conversion and partition coalescing inside every round
+    * (q134 2.5 → 6.9 s, q91 1.7 → 9.4 s).
     */
 
   /** Connected components over the MinHash-verified near-duplicate pair
@@ -97,48 +86,25 @@ object Training {
       .union(p.select($"b".as("src"), $"a".as("dst"))))
     // Labels only ever DECREASE under min-propagation, so the label
     // sum is a convergence witness: unchanged sum <=> no label moved.
-    // One map-side-combinable aggregate per round replaces a
-    // join-and-count change detector — and it rides the round's eager
-    // checkpoint as an observe() metric, so the probe costs no job of
-    // its own (the round-17 shape paid the localCheckpoint job PLUS a
-    // separate sum job per round; see the caching-discipline note
-    // above). (decimal(38,0): id sums can exceed long range at corpus
-    // scale; coalesce: an empty graph sums to zero, not null.)
+    // (decimal(38,0): id sums can exceed long range at corpus scale;
+    // coalesce: an empty graph sums to zero, not null.)
     val witness = coalesce(sum($"lbl".cast("decimal(38,0)")),
       lit(java.math.BigDecimal.ZERO)).as("lblsum")
-    def ckptWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = sc.ckpt(df.observe(obs, witness))
-      (out, obs.get("lblsum").asInstanceOf[java.math.BigDecimal])
-    }
-    var (labels, prevSum) = ckptWithSum(
-      edges.select($"src".as("id")).distinct()
-        .select($"id", $"id".as("lbl")))
+    val init = Fixpoint.ckpt(sc, edges.select($"src".as("id")).distinct()
+      .select($"id", $"id".as("lbl")))(witness)
     sc.release(p) // edges is materialized by the eager checkpoint above
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < maxRounds) {
+    val run = Fixpoint.iterate(sc, init, maxRounds) { labels =>
       val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
         .select($"dst".as("id"), $"lbl")
-      val (nl, nextSum) = ckptWithSum(
-        labels.union(prop).groupBy($"id").agg(min($"lbl").as("lbl")))
-      // prior round's checkpoint is dead once the new one exists
-      sc.release(labels)
-      labels = nl
-      changed = nextSum.compareTo(prevSum) != 0
-      prevSum = nextSum
-      rounds += 1
-    }
+      labels.union(prop).groupBy($"id").agg(min($"lbl").as("lbl"))
+    }(witness)(_ == _)
     sc.release(edges)
-    // Hash-min needs graph-diameter rounds; if the cap was hit the
-    // labels are NOT the transitive closure — fail loudly rather than
-    // return wrong components. (Near-dup graphs are shallow cliques,
-    // so hitting this means the input is not the expected pair graph;
+    // Hash-min needs graph-diameter rounds; a capped run is NOT the
+    // transitive closure. (Near-dup graphs are shallow cliques, so
+    // hitting the cap means the input is not the expected pair graph;
     // the two-phase contraction in [[connectedComponentsTwoPhase]]
     // converges in O(log n) rounds for adversarially deep graphs.)
-    require(!changed,
-      s"connectedComponents: not converged after $rounds rounds " +
-        "(graph diameter exceeds the cap)")
+    val labels = run.convergedState("connectedComponents")
     // seal: hand the caller ONE node-sized block set; the final
     // rolling checkpoint dies with the scope
     sc.seal(labels.select($"id", $"lbl".as("component")))
@@ -262,9 +228,7 @@ object Training {
     * only shrinks toward the star fixpoint (per-step monotone
     * potential, the paper's Lemma 4/5), so convergence is detected by
     * an (edge count, edge-set hash sum) signature: one cheap aggregate
-    * per alternation, no join-based diffing — and that aggregate also
-    * materializes the alternation's lazy persist (the caching
-    * discipline above), truncating the iterative plan. At the fixpoint the
+    * per alternation, no join-based diffing. At the fixpoint the
     * graph is a union of stars centered at component minima, and the
     * labeling reads off each node's minimum final neighbor.
     */
@@ -274,25 +238,13 @@ object Training {
     val Array(ca, cb) = pairs.columns.take(2)
 
     // (edge count, edge-set hash sum) signature: one map-side-
-    // combinable aggregate per alternation detects the star fixpoint,
-    // and it rides the alternation's eager checkpoint as an observe()
-    // metric, so the probe costs no job of its own (the round-17 shape
-    // paid the localCheckpoint job PLUS a separate signature job per
-    // alternation; see the loop-discipline note above).
-    def ckptWithSig(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = sc.ckpt(df.observe(obs,
-        count(lit(1)).as("ne"),
-        coalesce(sum(xxhash64($"a", $"b").cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO)).as("hs")))
-      val m = obs.get
-      (out, (m("ne").asInstanceOf[Long],
-        m("hs").asInstanceOf[java.math.BigDecimal]))
-    }
-
-    var (e, cur) = ckptWithSig(pairs
+    // combinable aggregate per alternation detects the star fixpoint
+    val sig = Seq(count(lit(1)).as("ne"),
+      coalesce(sum(xxhash64($"a", $"b").cast("decimal(38,0)")),
+        lit(java.math.BigDecimal.ZERO)).as("hs"))
+    val init = Fixpoint.ckpt(sc, pairs
       .select(least(col(ca), col(cb)).as("a"), greatest(col(ca), col(cb)).as("b"))
-      .where($"a" =!= $"b").distinct())
+      .where($"a" =!= $"b").distinct())(sig: _*)
 
     def largeStar(edges: DataFrame): DataFrame = {
       val sym = edges.select($"a".as("u"), $"b".as("v"))
@@ -318,20 +270,12 @@ object Training {
     // the final labeling join, after the loop has released the initial
     // edges — checkpoint it so the final join never re-derives the
     // whole upstream pair pipeline
-    val nodes = sc.ckpt(e.select($"a".as("id")).union(e.select($"b".as("id")))
-      .distinct())
-    var stable = cur._1 == 0L
-    var iters = 0
-    while (!stable && iters < maxIters) {
-      val (ne, next) = ckptWithSig(smallStar(largeStar(e)))
-      sc.release(e) // prior alternation is dead now
-      e = ne
-      stable = next._1 == cur._1 && next._2.compareTo(cur._2) == 0
-      cur = next
-      iters += 1
-    }
-    require(stable,
-      s"connectedComponentsTwoPhase: not converged after $iters alternations")
+    val nodes = sc.ckpt(init.state.select($"a".as("id"))
+      .union(init.state.select($"b".as("id"))).distinct())
+    // an empty edge set is already the fixpoint
+    val e = Fixpoint.iterate(sc, init, maxIters)(e => smallStar(largeStar(e)))(sig: _*)(
+      (prev, cur) => cur.getLong(0) == 0L || prev == cur)
+      .convergedState("connectedComponentsTwoPhase")
     val symF = e.select($"a".as("id"), $"b".as("nb"))
       .union(e.select($"b".as("id"), $"a".as("nb")))
     val lbl = symF.groupBy($"id").agg(min($"nb").as("mn"))

@@ -82,4 +82,39 @@ class CacheHygieneSpec extends AnyFunSuite {
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"empty-seed bfsHops left persistent RDDs: $leaked")
   }
+
+  test("a Fixpoint step that throws in round 2 leaves no persistent RDD") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var ckptsAtThrow = 0
+    intercept[IllegalStateException] {
+      Scope { s =>
+        val init = Fixpoint.Round(spark.range(100).toDF("id"))
+        Fixpoint.iterate(s, init, maxRounds = 5) { df =>
+          if (!(df eq init.state)) {
+            ckptsAtThrow = (sc.getPersistentRDDs.keySet -- before).size
+            throw new IllegalStateException("step failed in round 2")
+          }
+          df.select(($"id" + 1).as("id"))
+        }()((_, _) => false)
+      }
+    }
+    assert(ckptsAtThrow == 1, "round 1's checkpoint should exist when round 2 throws")
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"failed Fixpoint left persistent RDDs: $leaked")
+  }
+
+  test("connectedComponents past its maxRounds throws not-converged and leaves no persistent RDD") {
+    import spark.implicits._
+    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("a", "b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException] {
+      graft.operators.Training.connectedComponents(chain, maxRounds = 3)
+    }
+    assert(e.getMessage.contains("not converged after 3 rounds"), e.getMessage)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"capped connectedComponents left persistent RDDs: $leaked")
+  }
 }
