@@ -21,6 +21,7 @@ object GraftSession {
     * only where there is none yet.
     */
   def local(cores: Int): SparkSession = {
+    val dir = localDir
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -43,7 +44,13 @@ object GraftSession {
       // timed regions (no GC events). A cluster's NVMe-backed
       // local dirs don't have this failure mode; tmpfs is the
       // local-mode stand-in.
-      .config("spark.local.dir", localDir)
+      .config("spark.local.dir", dir)
+      // Managed tables (the specs' bucketed tables, the IVF and band
+      // indexes) live with this JVM's local dir, not in a
+      // ./spark-warehouse under whatever directory the JVM started
+      // in; the catalog is in-memory, so they are session-scoped anyway.
+      .config("spark.sql.warehouse.dir",
+        new java.io.File(dir, "warehouse").getAbsolutePath)
       // The live status store retains 1000 executions / 1000 jobs /
       // 100k tasks of history even with the UI off; 150 queries into
       // a session that's a steadily growing in-memory KV store every

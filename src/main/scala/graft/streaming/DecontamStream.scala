@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * index by broadcast join; the per-doc report (n_grams, n_hit) lands
   * in `$outDir/batch_<id>`.
   *
-  * Deliberately STATELESS — the simplest of the four streaming gates:
+  * Deliberately STATELESS — the simplest of the streaming gates:
   * the eval set is fixed at stream start (a benchmark suite, not a
   * growing corpus), so there is no store, no SegStore log, no
   * watermark; every operator is a per-row transform or a

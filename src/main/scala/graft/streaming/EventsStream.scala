@@ -294,10 +294,9 @@ object EventsStream {
     * offsets live in the checkpoint, so a kill/restart replays no
     * event into the fold (StreamingSpec kills between halves and pins
     * final store + aggregate against the single-shot batch q152
-    * twin); a crash INSIDE foreachBatch replays the batch against the
-    * committed-segments-only view (kv delta, per-batch agg and the
-    * `aggDir` output all land before the commit marker, and a marker
-    * that exists makes the replay a no-op).
+    * twin); the kv delta, the per-batch agg and the `aggDir` output are
+    * one segment under [[GateBatch.store]]'s protocol, so a crash INSIDE
+    * foreachBatch replays the batch against the committed view.
     */
   def cdcMaterialize(events: DataFrame, storeDir: String, aggDir: String,
       ckptDir: String, compactEvery: Int = 8, buckets: Int = 8): StreamingQuery = {
@@ -306,14 +305,14 @@ object EventsStream {
     cdcCompactStream(events).writeStream
       .outputMode("update")
       .option("checkpointLocation", ckptDir)
-      .foreachBatch(GateBatch.store(ss, storeDir, ckptDir) {
-        (_, updates, batchId, runId, ck) =>
+      .foreachBatch(GateBatch.store(ss, storeDir, ckptDir, compactEvery) { b =>
+          import b.{scope => ck}
           SegStore.ensureBucketed(ss, storeDir, "kv",
             "key BIGINT, deleted BOOLEAN, value DOUBLE, n_ops BIGINT",
             Seq("key"), buckets)
           // one row per touched key; checkpointed so the segment write
           // below cannot re-trigger the stateful computation
-          val up = ck.ckpt(updates.as[CdcUpdate])
+          val up = ck.ckpt(b.frame.as[CdcUpdate])
           val agg0 = readCdcAgg(ss, storeDir)
           // contribution of a store snapshot restricted to some keys —
           // distributed aggregates, four numbers to the driver
@@ -340,8 +339,8 @@ object EventsStream {
             agg0.live_sum - old._2 + neu._2,
             agg0.tomb_keys - old._3 + neu._3,
             agg0.total_ops - old._4 + neu._4)
-          val base = SegStore.active(ss, storeDir).size >= compactEvery
-          val seg = SegStore.segPath(storeDir, batchId, base)
+          val base = b.compactDue
+          val seg = SegStore.segPath(storeDir, b.id, base)
           if (base) {
             // fold: untouched resolved rows + this batch's latest per
             // key (tombstones stay — they are the retraction record);
@@ -351,12 +350,12 @@ object EventsStream {
             val folded = ck.ckpt(readCdcStore(ss, storeDir).toDF()
               .join(broadcast(bKeys), Seq("key"), "left_anti")
               .unionByName(up.toDF()))
-            SegStore.writeBucketed(ss, storeDir, "kv", folded, batchId,
+            SegStore.writeBucketed(ss, storeDir, "kv", folded, b.id,
               base = true)
-          } else SegStore.writeBucketed(ss, storeDir, "kv", up.toDF(), batchId)
+          } else SegStore.writeBucketed(ss, storeDir, "kv", up.toDF(), b.id)
           Seq(agg1).toDS().write.mode("overwrite").parquet(s"$seg/agg")
-          SegStore.writeSnapshot(ss, aggDir, Seq(agg1).toDS().toDF(), batchId)
-          SegStore.commit(ss, storeDir, batchId, base, runId)
+          SegStore.writeSnapshot(ss, aggDir, Seq(agg1).toDS().toDF(), b.id)
+          base
       })
       .trigger(Trigger.AvailableNow())
       .start()

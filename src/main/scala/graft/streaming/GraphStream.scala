@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.Scope
-
 /** Streaming graph maintenance: the q113 base/delta ingest split AS A
   * STREAM. Each micro-batch of arriving customer–supplier pairs is
   * merged into the on-disk pair/degree store DELTA-SIZED, and the
@@ -86,12 +84,9 @@ import graft.Scope
   * against staged-fixture runs on both paths, including a
   * component-merge delta.
   *
-  * Crash safety: every sub-table delta and the snapshot land before
-  * the segment's commit marker; a crash anywhere replays the batch
-  * against the unchanged committed view (the refresh recomputation is
-  * deterministic, so the INSERT OVERWRITEs converge), a marker that
-  * exists makes the replay a no-op, and a marker written under a
-  * DIFFERENT checkpoint identity fails loudly ([[SegStore.isApplied]]).
+  * Crash safety: every sub-table delta and the snapshot are one
+  * segment under [[GateBatch.store]]'s protocol; a replay recomputes
+  * the refresh deterministically, so its INSERT OVERWRITEs converge.
   * The PPR snapshot is published atomically by pointer switch
   * ([[SegStore.writeSnapshot]]); read it back with
   * [[SegStore.readSnapshot]]. Every `compactEvery` batches the log
@@ -108,8 +103,8 @@ object GraphStream {
     * `degree`, `cc`, `ccn`, `prc`, `meta` — see the class doc); the
     * PPR snapshot (node, est, res) is published atomically under
     * `outDir`.
-    */
-  /** `maxComponentMembers`: past this many member nodes the component
+    *
+    * `maxComponentMembers`: past this many member nodes the component
     * path falls back to a full refresh — the member set drives
     * broadcast-semi pruned scans, and a giant merged component (the
     * one-giant-component regime of real graphs) would broadcast a
@@ -122,8 +117,9 @@ object GraphStream {
       maxComponentMembers: Long = 4000000L): StreamingQuery =
     pairs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch(GateBatch.store(pairs.sparkSession, storeDir, ckptDir) {
-        (ss, batch, batchId, runId, ck) =>
+      .foreachBatch(GateBatch.store(pairs.sparkSession, storeDir, ckptDir,
+          compactEvery) { b =>
+          import b.{ss, scope => ck}
           import ss.implicits._
           SegStore.ensureBucketed(ss, storeDir, "pairs",
             "c BIGINT, s BIGINT", Seq("c"), buckets)
@@ -138,7 +134,7 @@ object GraphStream {
             Seq("node"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "meta",
             "k BIGINT, ns BIGINT", Seq("k"), 1)
-          val up = ck.ckpt(batch.select($"c", $"s").distinct())
+          val up = ck.ckpt(b.frame.select($"c", $"s").distinct())
           // delta-sized dedup against the store: the batch's customer
           // keys prune the pairs scan; the semi-join against the batch
           // (broadcast) shrinks the hit set to <= batch size, and THAT
@@ -148,11 +144,9 @@ object GraphStream {
             .join(broadcast(up), Seq("c", "s"), "left_semi")
           val newPairs = ck.ckpt(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
           val newDeg = ck.ckpt(graft.operators.BipartiteGraph.degreesOf(newPairs))
-          val base = SegStore.active(ss, storeDir).size >= compactEvery
           if (newPairs.isEmpty)
             // all-replay: graph, labels and snapshot all unchanged
-            unchangedBatch(ss, storeDir, outDir, batchId, base, runId, ck,
-              newPairs, newDeg)
+            unchangedBatch(b, storeDir, outDir, newPairs, newDeg)
           else {
             // a never-seen node matching the seed pattern changes the
             // global seed mass Total/nS: every component's rows move —
@@ -164,15 +158,13 @@ object GraphStream {
             val newSeed = !newDeg.join(degPrior, Seq("src"), "left_anti")
               .where(graft.operators.BipartiteGraph.isPprSeed($"src")).isEmpty
             val nS0 = readMeta(ss, storeDir)
-            if (newSeed || nS0.isEmpty ||
-                SegStore.active(ss, storeDir).isEmpty)
+            if (newSeed || nS0.isEmpty || b.active.isEmpty)
               phased("ppr-full") {
-                fullRefresh(ss, storeDir, outDir, batchId, base, runId, ck,
-                  newPairs, newDeg)
+                fullRefresh(b, storeDir, outDir, newPairs, newDeg)
               }
             else
-              componentRefresh(ss, storeDir, outDir, batchId, base, runId,
-                ck, newPairs, newDeg, nS0.get, maxComponentMembers)
+              componentRefresh(b, storeDir, outDir, newPairs, newDeg, nS0.get,
+                maxComponentMembers)
           }
       })
       .trigger(Trigger.AvailableNow())
@@ -184,11 +176,10 @@ object GraphStream {
     * record the (empty) segment; on a compaction batch, fold the whole
     * store. Publishes only when no snapshot exists yet (restart edge).
     */
-  private def unchangedBatch(ss: SparkSession, storeDir: String, outDir: String,
-      batchId: Long, base: Boolean, runId: String, ck: Scope,
-      newPairs: DataFrame, newDeg: DataFrame): Unit = {
-    import ss.implicits._
-    if (base) {
+  private def unchangedBatch(b: GateBatch.Batch, storeDir: String,
+      outDir: String, newPairs: DataFrame, newDeg: DataFrame): Boolean = {
+    import b.{ss, scope => ck}
+    if (b.compactDue) {
       // publish BEFORE the base write: publishFallback folds catalog
       // tables, and the base write's escalation re-declares them at the
       // new bucket count while the active partitions are still
@@ -205,41 +196,35 @@ object GraphStream {
       // readSnapshot-isEmpty probe built the whole fold plan just to
       // test emptiness.
       val (hasSnap, overlayTop) = SegStore.snapshotState(ss, outDir)
-      if (!hasSnap || overlayTop)
-        publishFallback(ss, storeDir, outDir, batchId, ck)
+      if (!hasSnap || overlayTop) publishFallback(b, storeDir, outDir)
       // checkpoint every fold: the INSERTs overwrite tables they read
       val folds = foldAll(ss, storeDir, None).map { case (k, v) => k -> ck.ckpt(v) }
-      val subs = foldSubs(ss, folds)
-      SegStore.writeBucketedAll(ss, storeDir, subs, batchId, base = true)
-      SegStore.commit(ss, storeDir, batchId, base = true, runId)
+      b.write(foldSubs(ss, folds), base = true)
     } else {
-      val join = SegStore.writeBucketedAllAsync(ss, storeDir,
-        Seq("pairs" -> newPairs, "degree" -> newDeg), batchId)
-      try {
-        if (!SegStore.snapshotState(ss, outDir)._1)
-          publishFallback(ss, storeDir, outDir, batchId, ck)
-        join()
-      } catch { case e: Throwable => SegStore.quiesce(ss, join); throw e }
-      SegStore.commit(ss, storeDir, batchId, base = false, runId)
+      b.write(Seq("pairs" -> newPairs, "degree" -> newDeg))
+      if (!SegStore.snapshotState(ss, outDir)._1)
+        publishFallback(b, storeDir, outDir)
     }
+    b.compactDue
   }
 
   /** First-publish fallback for an unchanged batch with no snapshot on
     * disk: from the `prc` fold when the store has labels, else (legacy
     * store) a full push over the committed graph.
     */
-  private def publishFallback(ss: SparkSession, storeDir: String,
-      outDir: String, batchId: Long, ck: Scope): Unit = {
+  private def publishFallback(b: GateBatch.Batch, storeDir: String,
+      outDir: String): Unit = {
+    import b.{ss, scope => ck}
     import ss.implicits._
     if (readMeta(ss, storeDir).isDefined) {
       val snap = resolvePrc(ss, storeDir, Nil)
         .where($"touched").select($"node", $"est", $"res")
-      SegStore.writeSnapshot(ss, outDir, snap, batchId)
+      SegStore.writeSnapshot(ss, outDir, snap, b.id)
     } else {
       val (p0, d0) = readGraph(ss, storeDir)
       SegStore.writeSnapshot(ss, outDir,
         ck.adopt(graft.operators.GraphOps.forwardPush(ss, p0, d0,
-          earlyExit = true)), batchId)
+          earlyExit = true)), b.id)
     }
   }
 
@@ -254,11 +239,12 @@ object GraphStream {
     * partitions — skip re-INSERTing them (the overwrite was a harmless
     * idempotent double-write; round-16 ADVICE #3).
     */
-  private def fullRefresh(ss: SparkSession, storeDir: String, outDir: String,
-      batchId: Long, base: Boolean, runId: String, ck: Scope,
-      newPairs: DataFrame, newDeg: DataFrame,
-      graphDeltaWritten: Boolean = false): Unit = {
+  private def fullRefresh(b: GateBatch.Batch, storeDir: String,
+      outDir: String, newPairs: DataFrame, newDeg: DataFrame,
+      graphDeltaWritten: Boolean = false): Boolean = {
+    import b.{ss, scope => ck}
     import ss.implicits._
+    val base = b.compactDue
     val (p0, d0) = readGraph(ss, storeDir)
     val pairsAll = ck.ckpt(p0.union(newPairs))
     val degAll = ck.ckpt(d0.union(newDeg)
@@ -304,17 +290,9 @@ object GraphStream {
         else Seq("pairs" -> newPairs, "degree" -> newDeg)) ++
         Seq("cc" -> cc, "ccn" -> cc.select($"comp", $"node"),
           "prc" -> prcRows, "meta" -> metaRow)
-    // the segment INSERTs land in uncommitted _seg=batchId partitions,
-    // invisible to every committed-store read — overlap them with the
-    // snapshot publish and quiesce before the marker
-    val join = SegStore.writeBucketedAllAsync(ss, storeDir, subs, batchId,
-      base = base)
-    try {
-      SegStore.writeSnapshot(ss, outDir,
-        state.select($"node", $"est", $"res"), batchId)
-      join()
-    } catch { case e: Throwable => SegStore.quiesce(ss, join); throw e }
-    SegStore.commit(ss, storeDir, batchId, base, runId)
+    b.write(subs, base = base)
+    SegStore.writeSnapshot(ss, outDir, state.select($"node", $"est", $"res"), b.id)
+    base
   }
 
   /** Component-exact refresh for a changed, no-new-seed batch: re-push
@@ -322,20 +300,17 @@ object GraphStream {
     * new edges), with the stored global seed count — bit-identical to
     * the full run for those components, everything else untouched.
     */
-  private def componentRefresh(ss: SparkSession, storeDir: String,
-      outDir: String, batchId: Long, base: Boolean, runId: String, ck: Scope,
-      newPairs: DataFrame, newDeg: DataFrame, nS: Long,
-      maxComponentMembers: Long): Unit = {
+  private def componentRefresh(b: GateBatch.Batch, storeDir: String,
+      outDir: String, newPairs: DataFrame, newDeg: DataFrame, nS: Long,
+      maxComponentMembers: Long): Boolean = {
+    import b.{ss, scope => ck}
     import ss.implicits._
+    val base = b.compactDue
     // delta layout: the pair/degree INSERTs depend on nothing below —
-    // start them NOW and overlap the whole refresh (they land in the
-    // uncommitted _seg=batchId partitions, invisible to every
-    // committed-store probe); quiesced before the marker on all paths
+    // start them NOW and overlap the whole refresh
     val join1 =
       if (base) () => ()
-      else SegStore.writeBucketedAllAsync(ss, storeDir,
-        Seq("pairs" -> newPairs, "degree" -> newDeg), batchId)
-    try {
+      else b.write(Seq("pairs" -> newPairs, "degree" -> newDeg))
     // 1. batch endpoints and their committed labels (pruned cc scan,
     //    latest-wins among the delta-bounded pruned rows only)
     val endpoints = ck.ckpt(newPairs.select($"c".as("node"))
@@ -392,21 +367,16 @@ object GraphStream {
           s"maxComponentMembers=$maxComponentMembers nodes - falling " +
           "back to a full refresh for this batch")
       join1()
-      phased("ppr-full") {
-        // the pair/degree deltas just awaited are final — tell the
-        // full path not to re-INSERT them (round-16 ADVICE #3)
-        fullRefresh(ss, storeDir, outDir, batchId, base, runId, ck,
-          newPairs, newDeg, graphDeltaWritten = !base)
+      // the pair/degree deltas just awaited are final — tell the full
+      // path not to re-INSERT them (round-16 ADVICE #3)
+      return phased("ppr-full") {
+        fullRefresh(b, storeDir, outDir, newPairs, newDeg,
+          graphDeltaWritten = !base)
       }
-      return
     }
     // the label INSERTs are ready before the push — overlap them too
-    val join2 =
-      if (base) () => ()
-      else SegStore.writeBucketedAllAsync(ss, storeDir,
-        Seq("cc" -> allMembers, "ccn" -> allMembers.select($"comp", $"node")),
-        batchId)
-    try {
+    if (!base)
+      b.write(Seq("cc" -> allMembers, "ccn" -> allMembers.select($"comp", $"node")))
     phased("ppr-component") {
     // 4. the subgraph: committed pairs/degree partials of the member
     //    set (pruned scans — the corpus is never shuffled to be
@@ -433,60 +403,51 @@ object GraphStream {
       val folds = foldAll(ss, storeDir,
         Some((newPairs, newDeg, allMembers, prcDelta, nS)))
         .map { case (k, v) => k -> ck.ckpt(v) }
-      val subs = foldSubs(ss, folds)
-      SegStore.writeBucketedAll(ss, storeDir, subs, batchId, base = true)
+      SegStore.writeBucketedAll(ss, storeDir, foldSubs(ss, folds), b.id,
+        base = true)
       val snap = folds("prc").where($"touched").select($"node", $"est", $"res")
-      SegStore.writeSnapshot(ss, outDir, snap, batchId)
-      SegStore.commit(ss, storeDir, batchId, base = true, runId)
+      SegStore.writeSnapshot(ss, outDir, snap, b.id)
     } else {
-      val join3 = SegStore.writeBucketedAllAsync(ss, storeDir,
-        Seq("prc" -> prcDelta), batchId)
-      try {
-        // COMPONENT-SIZED publication (round-16 VERDICT #1): the
-        // published snapshot is the last FULL snapshot plus per-batch
-        // overlays; readSnapshot folds the chain, every base batch
-        // publishes full and resets it. The overlay carries rows ONLY
-        // for nodes whose PUBLISHED view changes: the new push rows,
-        // plus tombstones for member nodes the prior view contained
-        // (latest-wins committed `prc` row touched — the published
-        // view's exact membership by the exactness invariant) that
-        // the new push no longer reaches. Never-touched members stay
-        // absent on both sides — publishing prcDelta's fillers for
-        // them would make the overlay MEMBER-set-sized (measured 90%
-        // of the full snapshot on the 8-copy probe fixture, since
-        // push rows are a small fraction of a component's members)
-        // instead of churn-sized. The prc STORE still receives every
-        // member row; the pruned scan below reads committed segments
-        // only, so the overlapped prc INSERT cannot race it.
-        // The rare no-base edge (outDir wiped under a live store, or a
-        // pre-overlay outDir whose last publish predates the feature)
-        // falls back to one full publication from the prc fold.
-        if (SegStore.hasFullSnapshot(ss, outDir, batchId)) {
-          val priorTouched = SegStore.prunedScanTagged(ss, storeDir, "prc",
-            "node", allMembers.select($"node"))
-            .map(_.groupBy($"node").agg(expr("max_by(touched, _seg)").as("t"))
-              .where($"t").select($"node"))
-            .getOrElse(Seq.empty[Long].toDF("node"))
-          val snapDelta = prcDelta.where($"touched")
-            .unionByName(prcDelta.where(!$"touched")
-              .join(priorTouched, Seq("node"), "left_semi"))
-            .select($"node", $"est", $"res", $"touched")
-          SegStore.writeSnapshotDelta(ss, outDir, snapDelta, batchId,
-            Seq("node"), "touched")
-        } else {
-          join3() // the fold below reads the just-written prc partition
-          val snap = resolvePrc(ss, storeDir, Seq(batchId))
-            .where($"touched").select($"node", $"est", $"res")
-          SegStore.writeSnapshot(ss, outDir, snap, batchId)
-        }
-        // every overlapped INSERT must land before the marker
-        join3(); join2(); join1()
-      } catch { case e: Throwable => SegStore.quiesce(ss, join3); throw e }
-      SegStore.commit(ss, storeDir, batchId, base = false, runId)
+      val join3 = b.write(Seq("prc" -> prcDelta))
+      // COMPONENT-SIZED publication (round-16 VERDICT #1): the
+      // published snapshot is the last FULL snapshot plus per-batch
+      // overlays; readSnapshot folds the chain, every base batch
+      // publishes full and resets it. The overlay carries rows ONLY
+      // for nodes whose PUBLISHED view changes: the new push rows,
+      // plus tombstones for member nodes the prior view contained
+      // (latest-wins committed `prc` row touched — the published
+      // view's exact membership by the exactness invariant) that
+      // the new push no longer reaches. Never-touched members stay
+      // absent on both sides — publishing prcDelta's fillers for
+      // them would make the overlay MEMBER-set-sized (measured 90%
+      // of the full snapshot on the 8-copy probe fixture, since
+      // push rows are a small fraction of a component's members)
+      // instead of churn-sized. The prc STORE still receives every
+      // member row.
+      // The rare no-base edge (outDir wiped under a live store, or a
+      // pre-overlay outDir whose last publish predates the feature)
+      // falls back to one full publication from the prc fold.
+      if (SegStore.hasFullSnapshot(ss, outDir, b.id)) {
+        val priorTouched = SegStore.prunedScanTagged(ss, storeDir, "prc",
+          "node", allMembers.select($"node"))
+          .map(_.groupBy($"node").agg(expr("max_by(touched, _seg)").as("t"))
+            .where($"t").select($"node"))
+          .getOrElse(Seq.empty[Long].toDF("node"))
+        val snapDelta = prcDelta.where($"touched")
+          .unionByName(prcDelta.where(!$"touched")
+            .join(priorTouched, Seq("node"), "left_semi"))
+          .select($"node", $"est", $"res", $"touched")
+        SegStore.writeSnapshotDelta(ss, outDir, snapDelta, b.id,
+          Seq("node"), "touched")
+      } else {
+        join3() // the fold below reads the just-written prc partition
+        val snap = resolvePrc(ss, storeDir, Seq(b.id))
+          .where($"touched").select($"node", $"est", $"res")
+        SegStore.writeSnapshot(ss, outDir, snap, b.id)
+      }
     }
     } // phased("ppr-component")
-    } catch { case e: Throwable => SegStore.quiesce(ss, join2); throw e }
-    } catch { case e: Throwable => SegStore.quiesce(ss, join1); throw e }
+    base
   }
 
   // ---- folds and readers -------------------------------------------------

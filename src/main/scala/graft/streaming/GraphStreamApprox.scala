@@ -86,14 +86,14 @@ import graft.operators.{BipartiteGraph, GraphOps}
   * what ScaleAudit measures (changed-batch wall flat across 1× vs 8×
   * accumulated graph).
   *
-  * Crash/replay discipline: identical to the exact gate — replay
-  * absorption by pair-level anti-join against the committed store,
-  * all deltas land before the segment's run-identity commit marker,
-  * compaction folds into a base every `compactEvery` batches. The
-  * readout is [[readPprApprox]] (exchange-free latest-wins fold over
-  * the node-bucketed scan); there is no per-batch full-state snapshot
-  * BY DESIGN — materializing one would reintroduce the O(graph)
-  * per-batch cost this gate exists to avoid.
+  * Crash/replay: replay absorption by pair-level anti-join against the
+  * committed store, the deltas are one segment under
+  * [[GateBatch.store]]'s protocol, and compaction folds into a base
+  * every `compactEvery` batches. The readout is [[readPprApprox]]
+  * (exchange-free latest-wins fold over the node-bucketed scan); there
+  * is no per-batch full-state snapshot BY DESIGN — materializing one
+  * would reintroduce the O(graph) per-batch cost this gate exists to
+  * avoid.
   */
 object GraphStreamApprox {
 
@@ -111,8 +111,9 @@ object GraphStreamApprox {
       maxLocalEdges: Long = 16000000L): StreamingQuery =
     pairs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch(GateBatch.store(pairs.sparkSession, storeDir, ckptDir) {
-        (ss, batch, batchId, runId, ck) =>
+      .foreachBatch(GateBatch.store(pairs.sparkSession, storeDir, ckptDir,
+          compactEvery) { b =>
+          import b.{ss, scope => ck}
           import ss.implicits._
           SegStore.ensureBucketed(ss, storeDir, "pairs",
             "c BIGINT, s BIGINT", Seq("c"), buckets)
@@ -122,21 +123,20 @@ object GraphStreamApprox {
             "src BIGINT, degree BIGINT", Seq("src"), buckets)
           SegStore.ensureBucketed(ss, storeDir, "pr",
             "node BIGINT, est BIGINT, res BIGINT", Seq("node"), buckets)
-          val up = ck.ckpt(batch.select($"c", $"s").distinct())
+          val up = ck.ckpt(b.frame.select($"c", $"s").distinct())
           val bCs = up.select($"c").distinct()
           val present = SegStore.prunedScan(ss, storeDir, "pairs", "c", bCs)
             .join(broadcast(up), Seq("c", "s"), "left_semi")
           val newPairs = ck.ckpt(up.join(broadcast(present), Seq("c", "s"), "left_anti"))
-          val compactDue = SegStore.active(ss, storeDir).size >= compactEvery
           if (newPairs.isEmpty) {
             // all-replay: graph and state unchanged — record the batch
-            SegStore.writeBucketedAll(ss, storeDir, Seq(
+            b.write(Seq(
               "pairs" -> newPairs,
               "edges" -> newPairs.select($"c".as("src"), $"s".as("dst")),
               "degree" -> newPairs.select($"c".as("src"), lit(0L).as("degree")),
               "pr" -> newPairs.select($"c".as("node"), lit(0L).as("est"),
-                lit(0L).as("res"))), batchId)
-            SegStore.commit(ss, storeDir, batchId, base = false, runId)
+                lit(0L).as("res"))))
+            false
           } else {
             val newEdges = ck.ckpt(BipartiteGraph.edgesOf(newPairs))
             val newDeg = ck.ckpt(BipartiteGraph.degreesOf(newPairs))
@@ -150,7 +150,7 @@ object GraphStreamApprox {
             // full converged re-push over the post-batch graph,
             // written as a BASE segment so latest-wins can never
             // resolve a stale row past it
-            def fullPush(): Unit = {
+            def fullPush(): Boolean = {
               val (p0, d0) = GraphStream.readGraph(ss, storeDir)
               val pairsAll = ck.ckpt(p0.union(newPairs))
               val degAll = ck.ckpt(d0.union(newDeg)
@@ -159,63 +159,52 @@ object GraphStreamApprox {
               // (ck.ckpt() would re-checkpoint and orphan the inner blocks)
               val state = ck.adopt(GraphOps.forwardPush(ss, pairsAll, degAll,
                 earlyExit = true, maxRounds = maxPushRounds))
-              SegStore.writeBucketedAll(ss, storeDir, Seq(
+              b.write(Seq(
                 "pairs" -> pairsAll,
                 "edges" -> BipartiteGraph.edgesOf(pairsAll),
-                "degree" -> degAll, "pr" -> state), batchId, base = true)
-              SegStore.commit(ss, storeDir, batchId, base = true, runId)
+                "degree" -> degAll, "pr" -> state), base = true)
+              true
             }
-            if (SegStore.active(ss, storeDir).isEmpty || newSeed) fullPush()
+            if (b.active.isEmpty || newSeed) fullPush()
             else {
-            // the three drain-independent segment INSERTs overlap the
-            // driver drain (they land in uncommitted _seg=batchId
-            // partitions the drain's committed-store probes cannot
-            // see). Delta layout only: a compaction or bail-out batch
-            // OVERWRITES these same partitions, so those paths quiesce
-            // the futures before writing
-            val preJoin =
-              if (compactDue) None
-              else Some(SegStore.writeBucketedAllAsync(ss, storeDir, Seq(
-                "pairs" -> newPairs, "edges" -> newEdges,
-                "degree" -> newDeg), batchId))
-            var j2: () => Unit = () => ()
-            try incrementalRefresh(ss, storeDir, newPairs, newEdges,
-              newDeg, degPrior, maxLocalNodes, maxLocalEdges) match {
-              case None =>
-                // the delta disturbed more state than the local caps
-                // allow — the full push is genuinely the cheaper tool
-                System.err.println(
-                  "WARN graft.GraphStreamApprox: drain working set " +
-                    s"exceeded maxLocalNodes=$maxLocalNodes/" +
-                    s"maxLocalEdges=$maxLocalEdges - falling back to a " +
-                    "full converged push for this batch")
-                preJoin.foreach(_())
-                fullPush()
-              case Some(prDelta0) =>
-                val prDelta = ck.ckpt(prDelta0)
-                if (compactDue) {
-                  val (p0, d0) = GraphStream.readGraph(ss, storeDir)
-                  val pairsAll = ck.ckpt(p0.union(newPairs))
-                  val degAll = ck.ckpt(d0.union(newDeg)
-                    .groupBy($"src").agg(sum($"degree").as("degree")))
-                  val prAll = ck.ckpt(foldPr(ss, storeDir, prDelta))
-                  SegStore.writeBucketedAll(ss, storeDir, Seq(
-                    "pairs" -> pairsAll,
-                    "edges" -> BipartiteGraph.edgesOf(pairsAll),
-                    "degree" -> degAll, "pr" -> prAll), batchId, base = true)
-                  SegStore.commit(ss, storeDir, batchId, base = true, runId)
-                } else {
-                  j2 = SegStore.writeBucketedAllAsync(ss, storeDir,
-                    Seq("pr" -> prDelta), batchId)
-                  preJoin.foreach(_()); j2()
-                  SegStore.commit(ss, storeDir, batchId, base = false, runId)
-                }
-            } catch {
-              case e: Throwable => // never leave orphan INSERTs behind
-                preJoin.foreach(j => SegStore.quiesce(ss, j))
-                SegStore.quiesce(ss, j2)
-                throw e
-            }
+              // the three drain-independent segment INSERTs overlap the
+              // driver drain. Delta layout only: a compaction batch
+              // writes a base instead, and the bail-out's full push
+              // OVERWRITES these same partitions, so it awaits them first
+              val preJoin =
+                if (b.compactDue) None
+                else Some(b.write(Seq("pairs" -> newPairs, "edges" -> newEdges,
+                  "degree" -> newDeg)))
+              incrementalRefresh(ss, storeDir, newPairs, newEdges,
+                newDeg, degPrior, maxLocalNodes, maxLocalEdges) match {
+                case None =>
+                  // the delta disturbed more state than the local caps
+                  // allow — the full push is genuinely the cheaper tool
+                  System.err.println(
+                    "WARN graft.GraphStreamApprox: drain working set " +
+                      s"exceeded maxLocalNodes=$maxLocalNodes/" +
+                      s"maxLocalEdges=$maxLocalEdges - falling back to a " +
+                      "full converged push for this batch")
+                  preJoin.foreach(_())
+                  fullPush()
+                case Some(prDelta0) =>
+                  val prDelta = ck.ckpt(prDelta0)
+                  if (b.compactDue) {
+                    val (p0, d0) = GraphStream.readGraph(ss, storeDir)
+                    val pairsAll = ck.ckpt(p0.union(newPairs))
+                    val degAll = ck.ckpt(d0.union(newDeg)
+                      .groupBy($"src").agg(sum($"degree").as("degree")))
+                    val prAll = ck.ckpt(foldPr(ss, storeDir, prDelta))
+                    b.write(Seq(
+                      "pairs" -> pairsAll,
+                      "edges" -> BipartiteGraph.edgesOf(pairsAll),
+                      "degree" -> degAll, "pr" -> prAll), base = true)
+                    true
+                  } else {
+                    b.write(Seq("pr" -> prDelta))
+                    false
+                  }
+              }
             }
           }
       })

@@ -61,11 +61,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * keyed on seg, `docs`/`docstat` keyed on doc_id), and folds into a
   * base segment every `compactEvery` batches. Re-delivered docs
   * (at-least-once sources) are absorbed by the doc-id probe, so a
-  * replayed doc changes nothing; the readout + deltas land before the
-  * segment's commit marker, so a crash anywhere replays the batch
-  * against the unchanged committed view, an existing marker makes the
-  * replay a no-op, and a marker written under a DIFFERENT checkpoint
-  * identity fails loudly ([[SegStore.isApplied]]). The published
+  * replayed doc changes nothing; the readout and the deltas are one
+  * segment under [[GateBatch.store]]'s protocol. The published
   * snapshot itself is pointer-switched atomically
   * ([[SegStore.writeSnapshot]]) — never an in-place overwrite.
   */
@@ -80,8 +77,9 @@ object SegScrubStream {
       ckptDir: String, compactEvery: Int = 8, buckets: Int = 8): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir) {
-        (ss, batch, batchId, runId, ck) =>
+      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir,
+          compactEvery) { b =>
+          import b.{ss, scope => ck}
           import ss.implicits._
           import GatePhase.phased
           phased("declare") {
@@ -104,20 +102,19 @@ object SegScrubStream {
           // survivors anti-join the <= batch-sized hit set broadcast
           val bOcc = phased("segment") {
             ck.ckpt(graft.operators.Dedup
-              .crossSegOcc(batch.dropDuplicates("doc_id")))
+              .crossSegOcc(b.frame.dropDuplicates("doc_id")))
           }
           // PRIOR per-seg df, probed by the PRE-absorb segment set (a
           // superset of the post-absorb one whose extras the newDf
           // join drops) so the store scan runs CONCURRENT with the
           // absorb probe — same device as the winnow gate's probeOlds
-          val fPrior = SegStore.async(ss) {
+          val fPrior = b.probe {
             phased("dfprior") {
               ck.ckpt(SegStore.prunedScan(ss, storeDir, "sdf", "seg",
                   bOcc.select($"seg").distinct())
                 .groupBy($"seg").agg(sum($"df").as("df_prior")))
             }
           }
-          try {
           val newOcc = phased("absorb") {
             val bDocs = bOcc.select($"doc_id").distinct()
             val seen = SegStore.prunedScan(ss, storeDir, "docs", "doc_id", bDocs)
@@ -129,7 +126,7 @@ object SegScrubStream {
           // after the prune, awaited from the concurrent probe)
           val newDf = newOcc.groupBy($"seg").agg(count(lit(1)).as("df"))
           val post = phased("dfpost") {
-            val prior = SegStore.await(fPrior)
+            val prior = fPrior()
             try ck.ckpt(newDf.join(prior, Seq("seg"), "left_outer")
               .select($"seg", $"df".as("df_delta"),
                 coalesce($"df_prior", lit(0L)).as("df_prior"))
@@ -177,10 +174,9 @@ object SegScrubStream {
           // one) backfills once: full grain of the merged docstat
           // minus whatever srcstat partials exist, delta-sized forever
           // after.
-          val act = SegStore.active(ss, storeDir)
-          val base = act.size >= compactEvery
-          val legacy = act.nonEmpty &&
-            !SegStore.partitionExists(ss, storeDir, "srcstat", act.last.id)
+          val base = b.compactDue
+          val legacy = b.active.nonEmpty &&
+            !SegStore.partitionExists(ss, storeDir, "srcstat", b.active.last.id)
           // computed only on DELTA batches: a compaction batch already
           // materializes the full merged docstat, and
           // srcGrainPartial(merged) IS the total source-grain state —
@@ -241,42 +237,26 @@ object SegScrubStream {
             val srcAll = ck.ckpt(srcGrainPartial(merged))
             SegStore.writeBucketedAll(ss, storeDir,
               Seq("occ" -> occAll, "sdf" -> sdfAll, "docs" -> docsAll,
-                "docstat" -> merged, "srcstat" -> srcAll), batchId,
+                "docstat" -> merged, "srcstat" -> srcAll), b.id,
               base = true)
             SegStore.writeSnapshot(ss, outDir,
-              srcAll.orderBy($"source"), batchId)
+              srcAll.orderBy($"source"), b.id)
           } else {
             // the four sd-independent segment writes start FIRST and
-            // overlap srcDelta's prior-flag probe + the snapshot
-            // publish: every write lands in the uncommitted
-            // _seg=batchId partitions, invisible to the concurrent
-            // committed-store reads; all are quiesced before the
-            // marker (same crash discipline as the serial form)
-            val join1 = SegStore.writeBucketedAllAsync(ss, storeDir,
-              Seq("occ" -> newOcc, "sdf" -> newDf, "docs" -> newDocs,
-                "docstat" -> statDelta), batchId)
-            var join2: () => Unit = () => ()
-            try {
-              val sd = srcDelta()
-              join2 = SegStore.writeBucketedAllAsync(ss, storeDir,
-                Seq("srcstat" -> sd), batchId)
-              // snapshot = committed srcstat partials + this batch's
-              // delta — a |sources|-bounded fold, NOT a docstat scan
-              // (the uncommitted partitions are invisible to the read)
-              phased("snapshot") {
-                SegStore.writeSnapshot(ss, outDir,
-                  snapshotFold(ss, storeDir, sd).orderBy($"source"),
-                  batchId)
-              }
-              phased("write") { join1(); join2() }
-            } catch {
-              case e: Throwable => // never leave orphan INSERTs behind
-                SegStore.quiesce(ss, join1); SegStore.quiesce(ss, join2)
-                throw e
+            // overlap srcDelta's prior-flag probe + the snapshot publish
+            b.write(Seq("occ" -> newOcc, "sdf" -> newDf, "docs" -> newDocs,
+              "docstat" -> statDelta))
+            val sd = srcDelta()
+            b.write(Seq("srcstat" -> sd))
+            // snapshot = committed srcstat partials + this batch's
+            // delta — a |sources|-bounded fold, NOT a docstat scan
+            // (the uncommitted partitions are invisible to the read)
+            phased("snapshot") {
+              SegStore.writeSnapshot(ss, outDir,
+                snapshotFold(ss, storeDir, sd).orderBy($"source"), b.id)
             }
           }
-          SegStore.commit(ss, storeDir, batchId, base, runId)
-          } catch { case e: Throwable => SegStore.awaitQuiet(fPrior); throw e }
+          base
       })
       .trigger(Trigger.AvailableNow())
       .start()
@@ -321,8 +301,9 @@ object SegScrubStream {
 
   /** The q191-shaped source-grain partial of a doc-grain view — the
     * same formulas [[graft.operators.Dedup.crossSegReadout]]'s final
-    * fold applies. Used only for the legacy-store backfill; the live
-    * path maintains these rows incrementally in `srcstat`.
+    * fold applies. Used by the legacy-store backfill and by compaction,
+    * which writes it as the total `srcstat` state; delta batches
+    * maintain these rows incrementally instead.
     */
   private def srcGrainPartial(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._

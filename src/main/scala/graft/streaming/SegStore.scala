@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Crash-safe, DELTA-SIZED parquet segment log — the store layer the
   * streaming gates ([[WinnowStream]], [[SegScrubStream]],
-  * [[GraphStream]], [[EventsStream.cdcMaterialize]]) maintain between
-  * micro-batches.
+  * [[WinnowScrubStream]], [[GraphStream]], [[GraphStreamApprox]],
+  * [[EventsStream.cdcMaterialize]]) maintain between micro-batches,
+  * each batch under [[GateBatch.store]]'s segment-batch protocol.
   *
   * The round-11 gates unioned each batch's delta into the FULL
   * accumulated store and overwrote it — correct, but O(corpus) of
@@ -909,8 +910,8 @@ object SegStore {
 
   /** [[writeBucketedAll]] started immediately but awaited LATER: the
     * returned thunk blocks until every INSERT lands and rethrows the
-    * first failure. Gates use this to overlap the segment write with
-    * the batch's probe/flags work — the writes touch only the
+    * first failure. [[GateBatch]] uses this to overlap the segment
+    * write with the batch's probe/flags work — the writes touch only the
     * uncommitted `_seg=batchId` partitions, which no concurrent read
     * of the committed store can see.
     */
@@ -966,7 +967,7 @@ object SegStore {
     scala.concurrent.duration.Duration(30, java.util.concurrent.TimeUnit.SECONDS)
 
   /** Await an async write handle SWALLOWING its (non-fatal) failure —
-    * for gate error paths only: when work between the async start and
+    * for [[GateBatch]]'s error path only: when work between the async start and
     * the normal join throws, every started INSERT must still be
     * awaited before the original exception propagates (a restarted
     * query could otherwise replay the batch while an orphan INSERT is
@@ -1013,15 +1014,15 @@ object SegStore {
     }
   }
 
-  /** Await an async PROBE, swallowing non-fatal failures — the gates'
-    * error-path cleanup for concurrent read-only probes: once the probe
+  /** Await an async PROBE, swallowing non-fatal failures —
+    * [[GateBatch]]'s error-path cleanup for concurrent read-only probes: once the probe
     * has finished, its checkpoint is registered in the batch
     * [[graft.Scope]], which releases it. Bounded like [[quiesce]]: a
     * wedged probe is abandoned after [[quiesceWait]] (it holds no write
     * hazard — worst case one leaked checkpoint on a wedged-forever
     * probe, vs. the error path hanging). Fatals/interrupts propagate.
     */
-  private[streaming] def awaitQuiet(f: scala.concurrent.Future[DataFrame]): Unit =
+  private[streaming] def awaitQuiet(f: scala.concurrent.Future[_]): Unit =
     try { scala.concurrent.Await.result(f, quiesceWait); () }
     catch {
       case _: java.util.concurrent.TimeoutException => ()

@@ -31,11 +31,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * exchange-free (doc_id-bucketed scan) merged with the delta by a
   * doc-keyed outer join. No store access shuffles the corpus.
   *
-  * Crash/replay discipline: identical to the other gates — all
-  * deltas and the snapshot land before the segment's commit marker
-  * (replay-safe, run-identity-checked), the snapshot is published by
-  * atomic pointer switch, and re-delivered docs are absorbed by the
-  * doc-id probe.
+  * Crash/replay: the deltas and the snapshot are one segment under
+  * [[GateBatch.store]]'s protocol, the snapshot is published by atomic
+  * pointer switch, and re-delivered docs are absorbed by the doc-id
+  * probe.
   */
 object WinnowScrubStream {
 
@@ -48,8 +47,9 @@ object WinnowScrubStream {
       ckptDir: String, compactEvery: Int = 8, buckets: Int = 8): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir) {
-        (ss, batch, batchId, runId, ck) =>
+      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir,
+          compactEvery) { b =>
+          import b.{ss, scope => ck}
           import ss.implicits._
           SegStore.ensureBucketed(ss, storeDir, "sel",
             "fp STRING, doc_id BIGINT, source STRING", Seq("fp"), buckets)
@@ -64,16 +64,15 @@ object WinnowScrubStream {
             "source STRING, n_docs BIGINT, n_fps BIGINT, dup_fps BIGINT, " +
               "dup_docs BIGINT", Seq("source"), buckets)
           val bSel = ck.ckpt(graft.operators.Dedup
-            .winnowSel(batch.dropDuplicates("doc_id")))
+            .winnowSel(b.frame.dropDuplicates("doc_id")))
           // PRIOR per-fp df, probed by the PRE-absorb fingerprint set
           // (superset; extras dropped by the newDf join) so the store
           // scan runs concurrent with the absorb probe
-          val fPrior = SegStore.async(ss) {
+          val fPrior = b.probe {
             ck.ckpt(SegStore.prunedScan(ss, storeDir, "fdf", "fp",
                 bSel.select($"fp").distinct())
               .groupBy($"fp").agg(sum($"df").as("df_prior")))
           }
-          try {
           val bDocs = bSel.select($"doc_id").distinct()
           val seen = SegStore.prunedScan(ss, storeDir, "docs", "doc_id", bDocs)
           val newSel = ck.ckpt(bSel.join(broadcast(seen), Seq("doc_id"), "left_anti")
@@ -81,7 +80,7 @@ object WinnowScrubStream {
           val newDocs = newSel.select($"doc_id").distinct()
           val newDf = newSel.groupBy($"fp").agg(count(lit(1)).as("df"))
           val post = {
-            val prior = SegStore.await(fPrior)
+            val prior = fPrior()
             try ck.ckpt(newDf.join(prior, Seq("fp"), "left_outer")
               .select($"fp", $"df".as("df_delta"),
                 coalesce($"df_prior", lit(0L)).as("df_prior"))
@@ -106,10 +105,9 @@ object WinnowScrubStream {
           // corpus-sized docstat. Flag moves by greatest(prior,
           // delta) - prior, with prior flags from a delta-sized
           // pruned docstat scan; legacy stores backfill once.
-          val act = SegStore.active(ss, storeDir)
-          val base = act.size >= compactEvery
-          val legacy = act.nonEmpty &&
-            !SegStore.partitionExists(ss, storeDir, "srcstat", act.last.id)
+          val base = b.compactDue
+          val legacy = b.active.nonEmpty &&
+            !SegStore.partitionExists(ss, storeDir, "srcstat", b.active.last.id)
           // delta batches only — a compaction batch derives the total
           // source grain from its already-materialized merged docstat
           def srcDelta() = {
@@ -154,33 +152,20 @@ object WinnowScrubStream {
             val srcAll = ck.ckpt(srcGrainPartial(merged))
             SegStore.writeBucketedAll(ss, storeDir,
               Seq("sel" -> selAll, "fdf" -> fdfAll, "docs" -> docsAll,
-                "docstat" -> merged, "srcstat" -> srcAll), batchId,
+                "docstat" -> merged, "srcstat" -> srcAll), b.id,
               base = true)
-            SegStore.writeSnapshot(ss, outDir, readoutOf(srcAll), batchId)
+            SegStore.writeSnapshot(ss, outDir, readoutOf(srcAll), b.id)
           } else {
             // sd-independent segment writes overlap srcDelta's
-            // prior-flag probe and the snapshot publish (uncommitted
-            // _seg partitions are invisible to the concurrent
-            // committed-store reads); quiesced before the marker
-            val join1 = SegStore.writeBucketedAllAsync(ss, storeDir,
-              Seq("sel" -> newSel, "fdf" -> newDf, "docs" -> newDocs,
-                "docstat" -> statDelta), batchId)
-            var join2: () => Unit = () => ()
-            try {
-              val sd = srcDelta()
-              join2 = SegStore.writeBucketedAllAsync(ss, storeDir,
-                Seq("srcstat" -> sd), batchId)
-              SegStore.writeSnapshot(ss, outDir,
-                readoutOf(snapshotFold(ss, storeDir, sd)), batchId)
-              join1(); join2()
-            } catch {
-              case e: Throwable => // never leave orphan INSERTs behind
-                SegStore.quiesce(ss, join1); SegStore.quiesce(ss, join2)
-                throw e
-            }
+            // prior-flag probe and the snapshot publish
+            b.write(Seq("sel" -> newSel, "fdf" -> newDf, "docs" -> newDocs,
+              "docstat" -> statDelta))
+            val sd = srcDelta()
+            b.write(Seq("srcstat" -> sd))
+            SegStore.writeSnapshot(ss, outDir,
+              readoutOf(snapshotFold(ss, storeDir, sd)), b.id)
           }
-          SegStore.commit(ss, storeDir, batchId, base, runId)
-          } catch { case e: Throwable => SegStore.awaitQuiet(fPrior); throw e }
+          base
       })
       .trigger(Trigger.AvailableNow())
       .start()
@@ -216,7 +201,8 @@ object WinnowScrubStream {
   }
 
   /** Source-grain partial of a doc-grain view — the additive rows
-    * `srcstat` stores. Used only for the legacy-store backfill.
+    * `srcstat` stores. Used by the legacy-store backfill and by
+    * compaction, which writes it as the total `srcstat` state.
     */
   private def srcGrainPartial(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._

@@ -57,19 +57,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * fingerprints as boilerplate — the q173 rule, mirrored in its
   * oracle; the cap folds PRE-batch partials only).
   *
-  * Crash safety: a batch's flags, fp/df/docs deltas all land BEFORE
-  * the segment's commit marker, and readers see only committed
-  * segments — so a crash anywhere inside the batch leaves the store
-  * logically unchanged, the replay (same batchId) overwrites the torn
-  * partitions, and a marker that already exists makes the replay a
-  * NO-OP ([[SegStore.isApplied]]): fp, df and docs can never diverge,
-  * and a replayed batch can never double-count df. The marker records
-  * the checkpoint's query id, so driving an existing store with a
-  * WIPED/new checkpoint fails loudly instead of silently skipping
-  * restarted batchIds (round-12 ADVICE #1). Re-delivered docs
-  * (at-least-once sources) are additionally absorbed by the doc-id
-  * probe, so a replayed or re-crawled doc flags nothing and changes
-  * nothing.
+  * Crash safety: the flags and the fp/df/docs deltas are one segment
+  * under [[GateBatch.store]]'s protocol, so fp, df and docs can never
+  * diverge and a replayed batch can never double-count df.
+  * Re-delivered docs (at-least-once sources) are additionally absorbed
+  * by the doc-id probe, so a replayed or re-crawled doc flags nothing
+  * and changes nothing.
   */
 object WinnowStream {
 
@@ -87,8 +80,9 @@ object WinnowStream {
       ckptDir: String, compactEvery: Int = 8, buckets: Int = 8): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir) {
-        (ss, batch, batchId, runId, ck) =>
+      .foreachBatch(GateBatch.store(docs.sparkSession, storeDir, ckptDir,
+          compactEvery) { b =>
+          import b.{ss, scope => ck}
           import ss.implicits._
           phased("declare") {
             SegStore.ensureBucketed(ss, storeDir, "fp",
@@ -100,7 +94,7 @@ object WinnowStream {
           }
           val bfp = phased("fingerprint") {
             ck.ckpt(graft.operators.Dedup
-              .winnowFp(batch.dropDuplicates("doc_id")))
+              .winnowFp(b.frame.dropDuplicates("doc_id")))
           }
           // the probe's two store scans (df cap fold, then the capped
           // fp fetch) are keyed by the PRE-absorb hash set — a
@@ -110,12 +104,11 @@ object WinnowStream {
           // the delta batch's wall collapses from 4 serial driver
           // jobs to max(probe, absorb+write) + the cheap pair join
           // (GateProbe: delta_200 3.4 → ~2.4 s)
-          val fOlds = SegStore.async(ss) {
+          val olds = b.probe {
             phased("probe") {
               ck.ckpt(probeOlds(ss, storeDir, bfp.select($"h").distinct()))
             }
           }
-          try {
           // at-least-once absorption: a doc already in the index is a
           // replay — it must neither re-flag nor double-count df. The
           // seen-before set comes from a PRUNED scan of the docs
@@ -127,13 +120,13 @@ object WinnowStream {
           }
           val newDf = newFp.groupBy($"h").agg(count(lit(1)).as("df"))
           val newDocs = newFp.select($"doc_id").distinct()
-          val base = SegStore.active(ss, storeDir).size >= compactEvery
+          val base = b.compactDue
           def writeFlags(): Unit = {
-            val olds = SegStore.await(fOlds)
+            val o = olds()
             try phased("flags") {
-              pairFlags(newFp, olds)
-                .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-            } finally ck.release(olds)
+              pairFlags(newFp, o)
+                .write.mode("overwrite").parquet(s"$outDir/batch_${b.id}")
+            } finally ck.release(o)
           }
           if (base) {
             writeFlags()
@@ -146,28 +139,13 @@ object WinnowStream {
                 ck.ckpt(df0.union(newDf).groupBy($"h").agg(sum($"df").as("df"))),
                 ck.ckpt(docs0.union(newDocs)))
             }
-            phased("write") {
-              SegStore.writeBucketedAll(ss, storeDir,
-                Seq("fp" -> fpAll, "df" -> dfAll, "docs" -> docsAll), batchId,
-                base = true)
-            }
+            b.write(Seq("fp" -> fpAll, "df" -> dfAll, "docs" -> docsAll),
+              base = true)
           } else {
-            // delta path: the segment write only touches the
-            // uncommitted _seg=batchId partitions — start it, overlap
-            // the flags probe/join, then quiesce before the marker
-            // (on a flags failure too: an orphan INSERT must never
-            // outlive the batch attempt)
-            val join = SegStore.writeBucketedAllAsync(ss, storeDir,
-              Seq("fp" -> newFp, "df" -> newDf, "docs" -> newDocs), batchId)
-            try {
-              writeFlags()
-              phased("write") { join() }
-            } catch { case e: Throwable => SegStore.quiesce(ss, join); throw e }
+            b.write(Seq("fp" -> newFp, "df" -> newDf, "docs" -> newDocs))
+            writeFlags()
           }
-          phased("commit") {
-            SegStore.commit(ss, storeDir, batchId, base, runId)
-          }
-          } catch { case e: Throwable => SegStore.awaitQuiet(fOlds); throw e }
+          base
       })
       .trigger(Trigger.AvailableNow())
       .start()
