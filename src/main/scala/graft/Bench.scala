@@ -16,8 +16,24 @@ import org.apache.spark.sql.SparkSession
   * JSON (query ids truncated to their `qNNN` prefix, times rounded)
   * guaranteed to fit that window; the full-name full-precision JSON is
   * printed first AND written to BENCH_FULL.json in the working dir.
+  *
+  * BENCH_FULL.json policy: the file holds the last FULL run at one key,
+  * the canonical scale-factor path and the core count (`sf`, `cpus`):
+  * that run's per-query walls and totals, plus `min_with_prior`, the
+  * per-query minimum over that run and the file it replaced (a window
+  * of one previous run, never best-ever). A full run refreshes it when
+  * the file is absent or was written at the same key; a file that
+  * records no `cpus` (written before the key had one) is refreshed
+  * without the merge, as its core count is unknown. A full run at
+  * another scale factor or core count, and every subset run, diverts
+  * to its own file ([[artifactName]]) and leaves BENCH_FULL.json as it
+  * is. Minima over several sweeps are not kept in it: a round records
+  * them with its own BENCH_rNN / OPTIMIZATION_rNN artifacts.
   */
 object Bench {
+  /** The core count a run uses when SPARK_GRAFT_CPUS is unset. */
+  private[graft] val defaultCpus = 4
+
   /** Min-of-N with the session RESET BETWEEN RUNS. Round 10 ran the
     * two timings back-to-back and only cleaned up afterwards, so run
     * 2 — the one min-of-2 usually reports — executed under run 1's
@@ -84,30 +100,56 @@ object Bench {
     catch { case _: java.io.IOException => s }
 
   /** The file a run writes its full-precision line to. Only a full run
-    * at the canonical artifact's own scale factor writes
-    * BENCH_FULL.json. A diverted artifact is keyed by the CANONICAL
-    * path, not just the basename — two different dirs sharing a
-    * basename must not collide on one suffixed file (round-15 ADVICE
-    * #2). A SUBSET run (named-query args, the iteration aid) diverts
-    * too, keyed the same way: it would otherwise overwrite the
-    * canonical artifact with a map holding only the selected queries
-    * (caught round 18 — a 3-query subset draw left BENCH_FULL.json
-    * with 3 queries), and subset runs at two scale factors must not
-    * share one file either.
+    * at the canonical artifact's own key writes BENCH_FULL.json
+    * (`sameSf`: the artifact was written at this run's scale factor
+    * AND core count, see [[priorOf]]). A diverted artifact is keyed by
+    * the CANONICAL path, not just the basename — two different dirs
+    * sharing a basename must not collide on one suffixed file
+    * (round-15 ADVICE #2) — and by `cpus`, so full runs at two core
+    * counts do not share one file. A SUBSET run (named-query args, the
+    * iteration aid) diverts too, keyed the same way: it would
+    * otherwise overwrite the canonical artifact with a map holding
+    * only the selected queries (caught round 18 — a 3-query subset
+    * draw left BENCH_FULL.json with 3 queries), and subset runs at two
+    * scale factors must not share one file either.
     */
   private[graft] def artifactName(sfDir: String, subset: Boolean,
-      sameSf: Boolean): String =
+      sameSf: Boolean, cpus: Int = defaultCpus): String =
     if (sameSf && !subset) "BENCH_FULL.json"
     else {
       val c = canonSf(sfDir)
       val tag = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(c))
       val kind = if (subset) "subset_" else ""
-      s"BENCH_FULL_$kind${new java.io.File(c).getName}_$tag.json"
+      s"BENCH_FULL_$kind${new java.io.File(c).getName}_c${cpus}_$tag.json"
     }
+
+  /** The prior BENCH_FULL.json text's official per-query walls if it
+    * was written at this run's key, None if it belongs to another
+    * scale factor or core count (the run diverts). The sf comparison
+    * is canonical (round-15 ADVICE #2: the same scale factor spelled
+    * differently must not read as a different sf). A prior that
+    * records no core count is this key's with no walls to merge. Only
+    * the top-level `queries` block is read (not its own min block), so
+    * the merge window is one run.
+    */
+  private[graft] def priorOf(txt: String, sfDir: String,
+      cpus: Int): Option[Map[String, Double]] = {
+    val priorSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
+    val priorCpus = """"cpus":([0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
+    if (!priorSf.map(canonSf).contains(canonSf(sfDir)) ||
+        priorCpus.exists(_ != cpus)) None
+    else if (priorCpus.isEmpty) Some(Map.empty)
+    else Some(txt.split("\"queries\":\\{", 2).lift(1).map(_.takeWhile(_ != '}'))
+      .map { block =>
+        """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(block)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }.getOrElse(Map.empty))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(defaultCpus)
+    val spark = GraftSession.local(cpus)
     // Dev-only A/B hook: semicolon-separated `key=value` runtime SQL
     // confs (e.g. SPARK_GRAFT_CONF="spark.sql.join.preferSortMergeJoin=false")
     // so config experiments run under the EXACT bench protocol
@@ -146,53 +188,36 @@ object Bench {
     // of {this run, the previous BENCH_FULL's official values} — a
     // burst of CPU steal can inflate one run's draw but never deflate
     // the min, so a min_with_prior value that RISES round-over-round
-    // is a real regression, not weather. Only the prior top-level
-    // queries block is read (not its own min block), so the merge
-    // window is one run, not best-ever-forever.
-    // The merge is only meaningful between runs at the SAME scale
-    // factor: a local sf0.001 smoke (e.g. the verify recipe) would
-    // otherwise seed the minima with 100x-smaller times and poison
-    // every later sf0.1 merge (caught round 15 — min_total read 64 s).
-    // A mismatched-sf run neither merges with nor overwrites the
-    // canonical artifact; it writes BENCH_FULL_<sfbase>.json instead.
-    // Canonicalize before comparing (round-15 ADVICE #2): the artifact
-    // records the raw sfDir string, so the same scale factor spelled
-    // differently (relative vs absolute, trailing slash) must not read
-    // as a different sf — that would silently stop updating the
-    // canonical artifact forever.
-    val (priorQ: Map[String, Double], sameSf: Boolean) = try {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (!java.nio.file.Files.exists(p)) (Map.empty[String, Double], true)
-      else {
-        val txt = java.nio.file.Files.readString(p)
-        val priorSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-        if (!priorSf.map(canonSf).contains(canonSf(sfDir)))
-          (Map.empty[String, Double], false)
-        else (txt.split("\"queries\":\\{", 2).lift(1).map(_.takeWhile(_ != '}'))
-          .map { block =>
-            """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r.findAllMatchIn(block)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }.getOrElse(Map.empty[String, Double]), true)
-      }
-    } catch {
+    // is a real regression, not weather.
+    // The merge is only meaningful between runs at the SAME key: a
+    // local sf0.001 smoke (e.g. the verify recipe) would otherwise seed
+    // the minima with 100x-smaller times and poison every later sf0.1
+    // merge (caught round 15 — min_total read 64 s), and an 8-core
+    // draw would set the minima of a 32-core artifact. A run at
+    // another key neither merges with nor overwrites the canonical
+    // artifact (see the object doc).
+    val p = java.nio.file.Paths.get("BENCH_FULL.json")
+    val prior: Option[Map[String, Double]] =
+      if (!java.nio.file.Files.exists(p)) Some(Map.empty)
       // fail CLOSED: if the prior artifact exists but can't be read,
-      // assume a different sf — overwriting it on a guess is exactly
+      // assume a different key — overwriting it on a guess is exactly
       // the poisoning this guard exists to prevent
-      case _: Throwable => (Map.empty[String, Double],
-        !java.nio.file.Files.exists(java.nio.file.Paths.get("BENCH_FULL.json")))
-    }
+      else try priorOf(java.nio.file.Files.readString(p), sfDir, cpus)
+      catch { case _: Throwable => None }
+    val priorQ = prior.getOrElse(Map.empty)
     val minMerged = results.map { case (k, v) =>
-      val prior = priorQ.get(k).filter(_ >= 0)
-      k -> (if (v < 0) prior.getOrElse(-1.0)
-            else prior.map(math.min(_, v)).getOrElse(v))
+      val pv = priorQ.get(k).filter(_ >= 0)
+      k -> (if (v < 0) pv.getOrElse(-1.0)
+            else pv.map(math.min(_, v)).getOrElse(v))
     }
     val minTotal = minMerged.map(_._2).filter(_ >= 0).sum
     def jmap(xs: Seq[(String, Double)]) =
       xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":${
-        jmap(results)},"min_with_prior":${jmap(minMerged)},"min_total":$minTotal,"sf":"$sfDir"}"""
-    val artifact = artifactName(sfDir, subset = args.nonEmpty, sameSf = sameSf)
+        jmap(results)},"min_with_prior":${jmap(minMerged)},"min_total":$minTotal,"sf":"$sfDir","cpus":$cpus}"""
+    val artifact = artifactName(sfDir, subset = args.nonEmpty,
+      sameSf = prior.isDefined, cpus = cpus)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), full)
     println(full)
     // Compact form last: `q131_audio_energy` -> `q131`; shrink decimal

@@ -758,10 +758,8 @@ object Dedup {
     * (AQE-splittable boilerplate keys, never a window), then doc- and
     * source-grain folds. All-integer output.
     */
-  val q191_cross_segment_scrub: Q = (spark, dir) => Scope { sc =>
-    // checkpointed: feeds df AND the join-back fold
-    sc.seal(crossSegReadout(sc.ckpt(crossSegOcc(Tables.load(spark, dir, "documents")))))
-  }
+  val q191_cross_segment_scrub: Q = (spark, dir) =>
+    Scope(crossSegFamily.batch(Tables.load(spark, dir, "documents"), _))
 
   /** q191's per-(segment, doc) occurrence table over both grids — ONE
     * corpus scan, one lambda building both grids' (grid, start) pairs
@@ -797,31 +795,23 @@ object Dedup {
         sum(when($"g" === 1, 1L).otherwise(0L)).as("occ1"))
   }
 
-  /** q191's readout over an occurrence table: df re-aggregated from it
-    * (rows already per-(seg, doc) distinct), segment-keyed equi-join
-    * back (AQE-splittable boilerplate keys, never a window), then doc-
-    * and source-grain folds. All-integer output. Shared by the batch
-    * query and the streaming twin's per-batch snapshot.
+  /** The q191 scrub family: both grids' (segment, doc) occurrence
+    * counts weigh a segment row, and a doc is flagged per grid —
+    * counted as flagged by the offset-0 grid, by any grid, and by the
+    * offset grid ALONE (the straddle catch).
     */
-  private[graft] def crossSegReadout(occ: DataFrame): DataFrame = {
-    import occ.sparkSession.implicits._
-    val dfq = occ.groupBy($"seg").agg(count(lit(1)).as("df"))
-    val docs = occ.join(dfq, "seg")
-      .groupBy($"doc_id", $"source")
-      .agg(sum($"occ0" + $"occ1").as("segs"),
-        sum(when($"df" >= 3, $"occ0" + $"occ1").otherwise(0L)).as("dup_segs"),
-        max(when($"df" >= 3 && $"occ0" > 0, 1L).otherwise(0L)).as("f0"),
-        max(when($"df" >= 3 && $"occ1" > 0, 1L).otherwise(0L)).as("f1"))
-    docs.groupBy($"source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum($"segs").as("n_segs"),
-        sum($"dup_segs").as("dup_segs"),
-        sum($"f0").as("dup_docs_g0"),
-        sum(greatest($"f0", $"f1")).as("dup_docs_any"),
-        sum(when($"f1" === 1 && $"f0" === 0, 1L).otherwise(0L))
-          .as("straddle_docs"))
-      .orderBy($"source")
-  }
+  private[graft] val crossSegFamily: Scrub = Scrub(crossSegOcc, key = "seg",
+    unitsSub = "occ", dfSub = "sdf", weightCols = Seq("occ0", "occ1"),
+    grids = Seq(("f0", col("occ0")), ("f1", col("occ1"))), units = "segs",
+    indicators = Seq(
+      ("dup_docs_g0", f => f("f0")),
+      ("dup_docs_any", f => greatest(f("f0"), f("f1"))),
+      ("straddle_docs", f => when(f("f1") === 1 && f("f0") === 0, 1L).otherwise(0L))),
+    readoutCols = Nil)
+
+  /** q191's readout over an occurrence table (the batch fold). */
+  private[graft] def crossSegReadout(occ: DataFrame): DataFrame =
+    crossSegFamily.fold(occ)
 
   /** q192: ALIGNMENT-INDEPENDENT boilerplate scrub — the suffix-array
     * blind spot of the fixed-grid family (q185/q191) closed with
@@ -861,32 +851,11 @@ object Dedup {
   /** Under [[Scope.Lazy]]: the plain plan for the spec's shape pin. */
   private[graft] def winnowScrub(spark: org.apache.spark.sql.SparkSession,
       dir: String, sc: Scope): DataFrame =
-    winnowReadout(winnowSel(Tables.load(spark, dir, "documents")), sc)
+    winnowFamily.batch(Tables.load(spark, dir, "documents"), sc)
 
-  /** q192's readout over a selected-rows table: df re-aggregated from
-    * it (rows per-(fp, doc) distinct), fingerprint-keyed equi-join
-    * back, doc- and source-grain folds. All-integer output. Shared by
-    * the batch query and the streaming twin's spec pins.
-    */
-  private[graft] def winnowReadout(selLazy: DataFrame, sc: Scope): DataFrame = {
-    import selLazy.sparkSession.implicits._
-    // checkpointed: feeds df AND the join-back fold
-    val sel = sc.ckpt(selLazy)
-    val dfq = sel.groupBy($"fp").agg(count(lit(1)).as("df"))
-    val docs = sel.join(dfq, "fp")
-      .groupBy($"doc_id", $"source")
-      .agg(count(lit(1)).as("fps"),
-        sum(when($"df" >= 3, 1L).otherwise(0L)).as("dup_fps"),
-        max(when($"df" >= 3, 1L).otherwise(0L)).as("flag"))
-    val out = docs.groupBy($"source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum($"fps").as("n_fps"),
-        sum($"dup_fps").as("dup_fps"),
-        sum($"flag").as("dup_docs"),
-        expr("CAST(sum(dup_fps) * 1000 DIV sum(fps) AS BIGINT)").as("dup_x1000"))
-      .orderBy($"source")
-    sc.seal(out)
-  }
+  /** q192's readout over a selected-rows table (the batch fold). */
+  private[graft] def winnowReadout(selLazy: DataFrame, sc: Scope): DataFrame =
+    sc.seal(winnowFamily.fold(sc.ckpt(selLazy)))
 
   /** q192's word-level winnowing selection — the distinct selected
     * (doc_id, source, fp) rows (k = w = 8: any duplicated run of
@@ -920,6 +889,16 @@ object Dedup {
       .where($"cnt" === w)
       .select($"doc_id", $"source", $"fp").distinct()
   }
+
+  /** The q192 scrub family: every selected (fingerprint, doc) row
+    * weighs 1, one flag per doc, and the readout adds the boilerplate
+    * share of selected fingerprints (sum-level integer DIV).
+    */
+  private[graft] val winnowFamily: Scrub = Scrub(winnowSel, key = "fp",
+    unitsSub = "sel", dfSub = "fdf", weightCols = Nil,
+    grids = Seq(("flag", lit(1L))), units = "fps",
+    indicators = Seq(("dup_docs", f => f("flag"))),
+    readoutCols = Seq(expr("CAST(dup_fps * 1000 DIV n_fps AS BIGINT)").as("dup_x1000")))
 
   /** q197: EXACT duplicated-run extents — the Lee et al. ACL'22 §3.1
     * exact-substring ground truth (at word granularity, K = 15) that

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   * phase hook that this tool installs, then drives actual streaming
   * batches (a 200-doc delta and an all-replay batch) against a
   * corpus-sized store. A Spark listener counts driver-coordinated
-  * jobs per batch; the gap between the query wall and the sum of
-  * body phases is the streaming machinery itself (query start/stop,
-  * source listing, checkpoint/offset-log writes).
+  * jobs per batch; the gap between the query wall and the time
+  * covered by body phases (concurrent phases counted once) is the
+  * streaming machinery itself (query start/stop, source listing,
+  * checkpoint/offset-log writes).
   *
   * Usage: runMain graft.tools.GateProbe [sfDir] [workDir] [sections] [cores]
   */
@@ -26,7 +27,7 @@ object GateProbe {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val work = if (args.length > 1) args(1) else "/tmp/graft_gate_probe"
     // optional args(2): comma-separated section names (winnow, xover,
-    // scrub) — default all
+    // scrub, wscrub) — default all
     val sections =
       if (args.length > 2) args(2).split(",").filter(_.nonEmpty).toSet
       else Set("winnow", "xover", "scrub", "wscrub")
@@ -46,9 +47,11 @@ object GateProbe {
         jobs.incrementAndGet(); ()
       }
     })
-    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    graft.streaming.GatePhase.hook = (n, t) => phases.synchronized {
-      phases += ((n, t)); ()
+    // (name, wall, end): a phase ends when its hook is called
+    val phases = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
+    graft.streaming.GatePhase.hook = (n, t) => {
+      val end = System.nanoTime()
+      phases.synchronized { phases += ((n, t, end)); () }
     }
 
     def time[T](f: => T): (Double, T) = {
@@ -77,8 +80,15 @@ object GateProbe {
     def report(label: String, wall: Double): Unit = {
       GraftCoreBridge.drainListenerBus(spark.sparkContext)
       val ph = phases.synchronized { val v = phases.toVector; phases.clear(); v }
-      val body = ph.map(_._2).sum
-      val lines = ph.map { case (n, t) => f"$n=$t%.2f" }.mkString(" ")
+      // the union of the [end - wall, end] intervals: a probe phase
+      // runs concurrently with the body's next phases, and its seconds
+      // count once
+      val body = ph.map { case (_, t, end) => (end - (t * 1e9).toLong, end) }
+        .sortBy(_._1)
+        .foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
+          (sum + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
+        }._1 / 1e9
+      val lines = ph.map { case (n, t, _) => f"$n=$t%.2f" }.mkString(" ")
       val (nc, tc) = codegen()
       println(f"[gate-probe] $label: wall=$wall%.2f s body=$body%.2f s " +
         f"machinery=${wall - body}%.2f s jobs=${jobs.getAndSet(0)} " +
@@ -148,8 +158,8 @@ object GateProbe {
       report("scrub_replay_200", runScrub())
     }
 
-    // ---- the winnowing scrub gate: same protocol (it shares the
-    // srcstat design with the segment scrub, one level simpler)
+    // ---- the winnowing scrub gate: same protocol, the same
+    // ScrubGate over the winnow family
     if (sections("wscrub")) {
       def runWScrub(): Double = time {
         graft.streaming.WinnowScrubStream.winnowScrubStream(
@@ -171,6 +181,9 @@ object GateProbe {
       wdelta.write.mode("append").parquet(s"$work/win")
       mark()
       report("wscrub_delta_200", runWScrub())
+      wdelta.write.mode("append").parquet(s"$work/win")
+      mark()
+      report("wscrub_replay_200", runWScrub())
     }
 
     // ---- the IN-vs-broadcast crossover, isolated -----------------------

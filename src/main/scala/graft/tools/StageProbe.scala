@@ -1,15 +1,17 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** Stage-level wall attribution for q139 (round-13 verdict task #5):
-  * q139 is the slowest honest query (5.7 s judge-isolated at sf0.1)
-  * with candidate filters and verify both already optimal on paper —
-  * before touching anything, MEASURE where the 5.7 s goes. Each stage
-  * is timed cumulatively from a cold cache (stage N's action runs the
-  * full lineage up to N), so stage cost = t(N) - t(N-1) modulo the
-  * persisted toks reuse the query itself gets.
+/** Stage-level wall attribution for q139, q133 and q178, plus the
+  * full q31. Each stage is timed cumulatively from a cold cache (stage
+  * N's action runs the full lineage up to N), so stage cost =
+  * t(N) - t(N-1) modulo the persisted reuse the query itself gets.
+  * The stages start from the operator's own stage functions
+  * (`Dedup.setsimStreams`, `Analytics.knnTriangleStages`,
+  * `Analytics.curationStages`; q178's curated and card stages add the
+  * query's gopher semi-join and `Curation.cardOf` on top), so the tool
+  * times the plan the query runs — a stage rebuilt by hand from a
+  * query's code drifts from it.
   *
   * Usage: runMain graft.tools.StageProbe [sfDir]
   */
@@ -47,22 +49,6 @@ object StageProbe {
     }
     probe("prefix") {
       q139Streams { case (_, _, _, prefix) => prefix.count() }
-    }
-    probe("arrs") {
-      q139Streams { case (_, _, dt, _) => dt.groupBy($"doc_id")
-        .agg(sort_array(collect_list($"trank")).as("toks"), count(lit(1)).as("n"))
-        .count()
-      }
-    }
-    probe("cands") {
-      q139Streams { case (_, _, _, prefix) => prefix.as("a").join(prefix.as("b"),
-          $"a.trank" === $"b.trank" && $"a.doc_id" < $"b.doc_id" &&
-            least($"a.t", $"b.t") * 10 >= greatest($"a.t", $"b.t") * 9 &&
-            (lit(1) + least($"a.t" - $"a.rn", $"b.t" - $"b.rn")) * 19 >=
-              ($"a.t" + $"b.t") * 9)
-        .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-        .distinct().count()
-      }
     }
     probe("full") {
       graft.SparkEntry.queries("q139_setsim_join")(spark, dir).count()
@@ -122,50 +108,9 @@ object StageProbe {
       graft.SparkEntry.queries("q178_curate_card_diff")(spark, dir).count()
     }
 
-    // ---- q31 (round-17): split the wall between the gram_set scan,
-    // the block-join candidate volume (pre-kernel — count() prunes the
-    // later select, so the verify kernel does not run here), and the
-    // full query. Stages rebuilt line-for-line from Dedup.q31_dedup_ngram.
+    // ---- q31: the full query only (its stage split is recorded in
+    // OPTIMIZATION_r18.md and PLANS.md)
     println("[stage] ==== q31_dedup_ngram ====")
-    import graft.functions.GraftFunctions.gram_set
-    val docs31 = graft.Tables.load(spark, dir, "documents")
-      .select($"doc_id", gram_set($"text", 3).as("grams"), $"source",
-        $"n_chars", floor(log2(greatest($"n_chars", lit(1)))).as("bkt"))
-      .persist()
-    probe("docs31") { docs31.count() }
-    val a31 = docs31.select($"doc_id".as("id_a"), $"grams".as("grams_a"),
-      $"source", $"n_chars".as("len_a"), $"bkt".as("bkt_a"))
-    val b31 = docs31.select($"doc_id".as("id_b"), $"grams".as("grams_b"),
-      $"source", $"n_chars".as("len_b"), $"bkt".as("bkt_b"))
-      .withColumn("bkt_a", explode(array($"bkt_b", $"bkt_b" + 1)))
-    probe("cands31") {
-      a31.join(b31, Seq("source", "bkt_a"))
-        .where(($"bkt_a" === $"bkt_b" && $"id_a" < $"id_b") ||
-          $"bkt_a" === $"bkt_b" + 1)
-        .where(greatest($"len_a", $"len_b") <= least($"len_a", $"len_b") * 2)
-        .count()
-    }
-    probe("kernel31") {
-      // candidate stream + verify kernel + threshold filter, NO
-      // presentation sort: count() prunes the jac projection, so this
-      // times ONE kernel pass over the candidates — the gap to full31
-      // is the orderBy's range-sampling re-execution of this lineage
-      // plus any expression duplication
-      a31.join(b31, Seq("source", "bkt_a"))
-        .where(($"bkt_a" === $"bkt_b" && $"id_a" < $"id_b") ||
-          $"bkt_a" === $"bkt_b" + 1)
-        .where(greatest($"len_a", $"len_b") <= least($"len_a", $"len_b") * 2)
-        .select(least($"id_a", $"id_b").as("doc_a"),
-          greatest($"id_a", $"id_b").as("doc_b"),
-          graft.functions.GraftFunctions.sorted_inter_atleast(
-            $"grams_a", $"grams_b",
-            expr("CAST(GREATEST((3 * (size(grams_a) + size(grams_b)) + 12) DIV 13, 1) AS INT)"))
-            .as("inter"),
-          size($"grams_a").as("na"), size($"grams_b").as("nb"))
-        .where($"inter" >= 0)
-        .count()
-    }
-    docs31.unpersist(blocking = true)
     probe("full31") {
       graft.SparkEntry.queries("q31_dedup_ngram")(spark, dir).count()
     }

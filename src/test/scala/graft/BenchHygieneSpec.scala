@@ -94,4 +94,29 @@ class BenchHygieneSpec extends AnyFunSuite {
     val divert = Bench.artifactName("/root/testdata/sf0.001", subset = false, sameSf = false)
     assert(full == "BENCH_FULL.json" && Set(a, b, full, divert).size == 4)
   }
+
+  test("BENCH_FULL.json is keyed on (sf, cpus): another core count diverts") {
+    val sf01 = "/data/sf0.1"
+    def artifact(sf: String, cpus: Option[Int]) =
+      s"""{"metric":"total","value":9.0,"unit":"sec","queries":{"q01_x":1.5,"q02_y":-1.0},""" +
+        s""""min_with_prior":{"q01_x":1.0},"min_total":1.0,"sf":"$sf"""" +
+        cpus.map(c => s""","cpus":$c""").getOrElse("") + "}"
+    // same canonical sf and cpus: the top-level walls are the merge window
+    assert(Bench.priorOf(artifact(sf01, Some(8)), "/data/./sf0.1/", 8) ==
+      Some(Map("q01_x" -> 1.5, "q02_y" -> -1.0)))
+    // same sf, other core count: no merge, and the run diverts
+    assert(Bench.priorOf(artifact(sf01, Some(8)), sf01, 32).isEmpty)
+    // other sf: diverts whatever the core count
+    assert(Bench.priorOf(artifact("/data/sf0.01", Some(8)), sf01, 8).isEmpty)
+    // an artifact from before the key had cpus: refreshed, nothing merged
+    assert(Bench.priorOf(artifact(sf01, None), sf01, 8) == Some(Map.empty))
+    // diverted full runs at two core counts write two files, neither
+    // of them the canonical artifact
+    val c8 = Bench.artifactName(sf01, subset = false, sameSf = false, cpus = 8)
+    val c32 = Bench.artifactName(sf01, subset = false, sameSf = false, cpus = 32)
+    assert(c8 != c32 && !Set(c8, c32).contains("BENCH_FULL.json"), s"$c8 / $c32")
+    assert(c32.startsWith("BENCH_FULL_sf0.1_c32_"), c32)
+    assert(Bench.artifactName(sf01, subset = false, sameSf = true, cpus = 32) ==
+      "BENCH_FULL.json")
+  }
 }
