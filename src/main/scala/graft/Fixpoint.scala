@@ -7,8 +7,8 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 
 /** The round protocol of every checkpointed iterative operator (CC,
-  * two-phase CC, BFS, label propagation, k-core, BPE training), in
-  * one place. Each round is ONE driver-synchronous job:
+  * two-phase CC, BFS, label propagation, k-core, BPE training,
+  * forward-push PPR), in one place. Each round is ONE driver-synchronous job:
   *
   *  1. `step(prev)` builds the round's lazy frame, which is eagerly
   *     checkpointed through the loop's [[Scope]] — the lineage stays

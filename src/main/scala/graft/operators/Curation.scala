@@ -997,9 +997,7 @@ object Curation {
     // over the curated lineage each path would re-run the funnel tail
     // and the gopher dominance rule (StageProbe: 4.1 s vs 0.6 s for
     // the same card over raw docs). Materialize once.
-    val curated = sc.ckpt(clean.join(
-      TextOps.gopherRules(clean).where($"keep" === 1).select($"doc_id"),
-      Seq("doc_id"), "left_semi"))
+    val curated = sc.ckpt(gopherKept(clean))
     val before = cardOf(Tables.load(spark, dir, "documents"), exact)
     val after = cardOf(curated, exact)
       .select($"source", $"n_docs".as("n_docs_after"),
@@ -1019,6 +1017,13 @@ object Curation {
         $"p50_chars", $"p50_after", $"p90_chars", $"p90_after")
       .orderBy($"source"))
   }
+
+  /** q178's final curation stage: the docs of `clean` that q141's
+    * Gopher rules keep.
+    */
+  private[graft] def gopherKept(clean: DataFrame): DataFrame =
+    clean.join(TextOps.gopherRules(clean).where(col("keep") === 1).select("doc_id"),
+      Seq("doc_id"), "left_semi")
 
   /** 2-D skyline (Pareto frontier, Börzsönyi et al. ICDE'01) over the
     * curation dimensions (word count, stopword count): keep every

@@ -273,26 +273,25 @@ object GraphOps {
     * it is accepting (est + res column sums bracket the seed mass).
     *
     * Scale shape: per round ONE edge⋈frontier join keyed on src plus
-    * ONE node-sized residual aggregate; the frontier is the pushed
-    * set only. The ESTIMATE table is write-only inside the loop (no
-    * round reads it), so its per-round contributions are accumulated
-    * as a lazy union of checkpoint-rooted frontier streams and folded
-    * by ONE `groupBy(node).sum` after the loop — the round-8 version
-    * paid 6 shuffles + 6 eager materializations of a monotonically
-    * growing table for nothing. Rounds whose push set is EMPTY leave
-    * both tables unchanged (the spread join and the estimate
-    * contribution are both empty, and `hold` re-aggregates to the
-    * same residual values), so the loop exits early at that fixed
-    * point — identical output to running all 6 rounds, which is what
-    * the unrolled 6-round oracle computes. ONE driver-synchronous
-    * action per round: an `observe()` metric on the (residual ⋈
-    * degree) table counts the pushing rows DURING the table's eager
-    * checkpoint job, so the fixed-point probe costs no job of its own
-    * (the round-17 shape paid a second job per round for a separate
-    * isEmpty probe over the just-checkpointed frame), and the next
-    * residual stays lazy on top of the checkpoint (the q77/q91
-    * flat-plan discipline at half the job count); query-local caches
-    * dropped before return.
+    * ONE node-sized aggregate of (res, est); the frontier is the
+    * pushed set only. The rounds run through [[graft.Fixpoint]]: the
+    * estimate rides the round state beside the residual, so a round's
+    * checkpoint (node, res, est, degree, pushes) is all the next round
+    * and the output read, and the previous round is released as soon
+    * as the next is materialized — a push holds at most two rounds,
+    * and the output is one projection of the last. Every estimate is a
+    * BIGINT sum of integer DIV terms, so the order in which the rounds
+    * fold it changes no bit. Rounds whose push set is
+    * EMPTY leave the state unchanged (no spread, no estimate
+    * contribution, and every row re-aggregates to its own values), so
+    * the loop exits early at that fixed point — identical output to
+    * running all 6 rounds, which is what the unrolled 6-round oracle
+    * computes. ONE driver-synchronous action per round: the `npush`
+    * witness counts the rows the next round pushes DURING the round's
+    * own checkpoint job, so the fixed-point probe costs no job of its
+    * own, and round 0 is a lazy projection of the seeds cache, so a
+    * push that stops after k pushing rounds runs k checkpoint jobs;
+    * query-local caches dropped before return.
     */
   /** The integer walk-mass scale and push threshold shared by the
     * batch push, both streaming gates, and the approximate gate's
@@ -328,7 +327,7 @@ object GraphOps {
     * the push/hold threshold is node-local, so the subgraph run's state
     * after round k equals the full run's restriction to it, and a
     * subgraph whose push set empties is frozen in the full run too
-    * (the fixed-point note below) — bit-identical output, including
+    * (q163's fixed-point note) — bit-identical output, including
     * under earlyExit. An empty LOCAL seed set under an override is a
     * legitimate seedless component (empty output, no warning), not the
     * damaged-graph condition the nS == 0 branch guards.
@@ -340,15 +339,14 @@ object GraphOps {
       nSOverride: Option[Long] = None): org.apache.spark.sql.DataFrame = Scope { sc =>
     import spark.implicits._
     val Total = PprTotal
-    val Eps = PprEps // push while res > degree x 1e6, i.e. 1e-6 of the walk mass
+    val Eps = PprEps // a row pushes when res > degree x 1e6, i.e. 1e-6 of the walk mass
     // the pushing node's degree rides ON the frontier row (node-sized),
     // so the big edge list needs no degree join at all — round 8
     // persisted edges⋈deg and paid that join's materialization
     val edges = sc.persist(BipartiteGraph
       .fanOut(spark, BipartiteGraph.edgesOf(cs)))
     val degN = deg.select($"src".as("node"), $"degree")
-    val seeds = sc.persist(deg.select($"src".as("node"))
-      .where(BipartiteGraph.isPprSeed($"node")))
+    val seeds = sc.persist(degN.where(BipartiteGraph.isPprSeed($"node")))
     val nS = nSOverride.getOrElse(seeds.count())
     if (nS == 0) {
       // Batch q163 passes strictSeeds = true: there an empty seed set
@@ -371,59 +369,29 @@ object GraphOps {
       spark.range(0)
         .select($"id".as("node"), $"id".as("est"), $"id".as("res"))
     } else {
-      // r0 is a cheap projection over the seeds cache — no materialization
-      // of its own; round 1's checkpoint job builds both
-      var r = seeds.select($"node", lit(Total / nS).as("res"))
-      // the per-round rd checkpoints are read by the estimate fold, so
-      // they live until the output seals and the scope closes
-      val contribs = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.DataFrame]
-      var round = 0
-      var fixedPoint = false
-      while (round < maxRounds && !fixedPoint) {
-        round += 1
-        // node-sized; checkpointed ONCE so the push/hold split, the
-        // estimate contribution, and the spread join all read the same
-        // cached rows instead of re-running the degree join per consumer.
-        // ONE action per round: the observe() metric rides the eager
-        // checkpoint's own materialization job, so the push-count probe
-        // costs no job of its own — the round-17 shape paid a second
-        // driver-synchronous job per round for a separate isEmpty probe
-        // over the just-checkpointed frame (guide §1.2: with node-sized
-        // rounds, the loop's JOB STRUCTURE is the cost; JobCount measured
-        // 45 jobs for the 6-round push, half of them probes).
-        val obs = org.apache.spark.sql.Observation()
-        val rd = sc.ckpt(r.join(degN, "node")
-          .withColumn("pushes", $"res" > $"degree" * Eps)
-          .observe(obs, count(when($"pushes", lit(1))).as("npush")))
-        val nPush = obs.get("npush").asInstanceOf[Long]
-        val push = rd.where($"pushes").select($"node", $"res", $"degree")
-        if (earlyExit && nPush == 0L) fixedPoint = true
-        else {
-          contribs += push.select($"node", expr("(15 * res) DIV 100").as("est"))
-          val hold = rd.where(!$"pushes").select($"node", $"res")
-          val spread = edges
-            .join(push.withColumnRenamed("node", "src"), "src")
-            .select($"dst".as("node"),
-              expr("(85 * res) DIV (100 * degree)").as("res"))
-          // LAZY: the next round's rd checkpoint (or the final fold)
-          // materializes this aggregate — checkpointing r here too would
-          // pay a second eager job per round for a lineage the rd
-          // checkpoint already flattens
-          r = hold.unionByName(spread)
-            .groupBy($"node").agg(sum($"res").as("res"))
-        }
-      }
-      val pF =
-        if (contribs.isEmpty)
-          spark.range(0).select($"id".as("node"), $"id".as("est"))
-        else contribs.reduce(_ unionByName _)
-          .groupBy($"node").agg(sum($"est").as("est"))
-      sc.seal(pF.select($"node", $"est", lit(0L).as("res"))
-        .unionByName(r.select($"node", lit(0L).as("est"), $"res"))
-        .groupBy($"node")
-        .agg(sum($"est").as("est"), sum($"res").as("res")))
-        .orderBy($"node")
+      def withPushes(s: org.apache.spark.sql.DataFrame) =
+        s.withColumn("pushes", $"res" > $"degree" * Eps)
+      // round 0: the seeds' uniform mass, a lazy projection of the
+      // seeds cache that round 1's checkpoint job reads
+      val init = Fixpoint.Round(withPushes(seeds.select($"node",
+        lit(Total / nS).as("res"), lit(0L).as("est"), $"degree")))
+      // a pushing row settles 15% of its residual into its estimate and
+      // spreads the rest along its edges; every other row holds. The
+      // witness counts the rows the NEXT round pushes.
+      val last = Fixpoint.iterate(sc, init, maxRounds) { prev =>
+        val spread = edges
+          .join(prev.where($"pushes").select($"node".as("src"), $"res", $"degree"), "src")
+          .select($"dst".as("node"),
+            expr("(85 * res) DIV (100 * degree)").as("res"), lit(0L).as("est"))
+        withPushes(prev
+          .select($"node", when($"pushes", lit(0L)).otherwise($"res").as("res"),
+            when($"pushes", expr("est + (15 * res) DIV 100")).otherwise($"est").as("est"))
+          .unionByName(spread)
+          .groupBy($"node").agg(sum($"res").as("res"), sum($"est").as("est"))
+          .join(degN, "node"))
+      }(count(when($"pushes", lit(1))).as("npush"))(
+        (_, w) => earlyExit && w.getLong(0) == 0L).state
+      sc.seal(last.select($"node", $"est", $"res")).orderBy($"node")
     }
   }
 

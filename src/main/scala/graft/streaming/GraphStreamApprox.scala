@@ -239,11 +239,7 @@ object GraphStreamApprox {
     import ss.implicits._
     // prior state of a key set (latest-wins among the pruned rows)
     def stateOf(nodes: DataFrame): DataFrame =
-      SegStore.prunedScanTagged(ss, storeDir, "pr", "node", nodes)
-        .map(_.groupBy($"node").agg(
-          expr("max_by(est, _seg)").as("est"),
-          expr("max_by(res, _seg)").as("res")))
-        .getOrElse(Seq.empty[(Long, Long, Long)].toDF("node", "est", "res"))
+      latestPr(ss, SegStore.prunedScanTagged(ss, storeDir, "pr", "node", nodes))
     // endp feeds partnerSum AND the corrected rows; released once the
     // seed rows are on the driver
     val seedRows = Scope { sc =>
@@ -372,27 +368,25 @@ object GraphStreamApprox {
     * live batch's delta (delta wins).
     */
   private def foldPr(ss: SparkSession, storeDir: String,
-      prDelta: DataFrame): DataFrame = {
-    import ss.implicits._
-    val store = SegStore.readBucketedTagged(ss, storeDir, "pr")
-      .map(_.groupBy($"node").agg(
-        expr("max_by(est, _seg)").as("est"),
-        expr("max_by(res, _seg)").as("res")))
-      .getOrElse(Seq.empty[(Long, Long, Long)].toDF("node", "est", "res"))
-    store.join(prDelta.select($"node"), Seq("node"), "left_anti")
+      prDelta: DataFrame): DataFrame =
+    readPprApprox(ss, storeDir).join(prDelta.select("node"), Seq("node"), "left_anti")
       .unionByName(prDelta)
-  }
 
   /** The gate's readout: per-node (est, res), resolved latest-wins
     * over the node-bucketed store scan (exchange-free). Empty frame
     * when nothing has committed yet.
     */
-  def readPprApprox(ss: SparkSession, storeDir: String): DataFrame = {
+  def readPprApprox(ss: SparkSession, storeDir: String): DataFrame =
+    latestPr(ss, SegStore.readBucketedTagged(ss, storeDir, "pr"))
+
+  /** The `pr` rows of a `_seg`-tagged scan resolved latest-wins per
+    * node; empty when the scan found nothing.
+    */
+  private def latestPr(ss: SparkSession, tagged: Option[DataFrame]): DataFrame = {
     import ss.implicits._
-    SegStore.readBucketedTagged(ss, storeDir, "pr")
-      .map(_.groupBy($"node").agg(
-        expr("max_by(est, _seg)").as("est"),
-        expr("max_by(res, _seg)").as("res")))
+    tagged.map(_.groupBy($"node").agg(
+      expr("max_by(est, _seg)").as("est"),
+      expr("max_by(res, _seg)").as("res")))
       .getOrElse(Seq.empty[(Long, Long, Long)].toDF("node", "est", "res"))
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.DataFrame
   * t(N) - t(N-1) modulo the persisted reuse the query itself gets.
   * The stages start from the operator's own stage functions
   * (`Dedup.setsimStreams`, `Analytics.knnTriangleStages`,
-  * `Analytics.curationStages`; q178's curated and card stages add the
-  * query's gopher semi-join and `Curation.cardOf` on top), so the tool
+  * `Analytics.curationStages`; q178's curated and card stages add
+  * `Curation.gopherKept` and `Curation.cardOf` on top), so the tool
   * times the plan the query runs — a stage rebuilt by hand from a
   * query's code drifts from it.
   *
@@ -19,7 +19,6 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val spark = graft.GraftSession.local(32)
-    import spark.implicits._
 
     def reset(): Unit = graft.GraftSession.reset(spark)
     def time[T](f: => T): (Double, T) = {
@@ -84,25 +83,15 @@ object StageProbe {
       f(graft.operators.Analytics.curationStages(sc, spark, dir).last._2))
     probe("funnel") { clean(_.count()) }
     probe("curated") {
-      clean { c =>
-        c.join(
-          graft.operators.TextOps.gopherRules(c)
-            .where($"keep" === 1).select($"doc_id"),
-          Seq("doc_id"), "left_semi").count()
-      }
+      clean(c => graft.operators.Curation.gopherKept(c).count())
     }
     probe("card_before") {
       graft.operators.Curation.cardOf(
         graft.Tables.load(spark, dir, "documents"), exact = true).count()
     }
     probe("card_after") {
-      clean { c =>
-        val curated = c.join(
-          graft.operators.TextOps.gopherRules(c)
-            .where($"keep" === 1).select($"doc_id"),
-          Seq("doc_id"), "left_semi")
-        graft.operators.Curation.cardOf(curated, exact = true).count()
-      }
+      clean(c => graft.operators.Curation.cardOf(
+        graft.operators.Curation.gopherKept(c), exact = true).count())
     }
     probe("full178") {
       graft.SparkEntry.queries("q178_curate_card_diff")(spark, dir).count()

@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftCoreBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -120,5 +124,47 @@ class FixpointSpec extends AnyFunSuite {
     assert(held.head == 1, held)
     assert(held.tail.nonEmpty && held.tail.forall(_ == 2), held)
     assert((sctx.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("forward-push releases every round but the last before its seal job starts") {
+    import spark.implicits._
+    val sctx = spark.sparkContext
+    // path 0-1-...-6: node 0 is the one seed, and its mass keeps
+    // pushing along the path for all 5 rounds
+    val cs = (0L until 6L).map(i => (i, i + 1)).toDF("c", "s")
+    val before = sctx.getPersistentRDDs.keySet
+    // bus order of job starts (with the persisted RDD a checkpoint job
+    // computes, else -1) and RDD unpersists
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val result = j.stageInfos.maxBy(_.stageId).rddInfos.head
+        events.add("job" -> (if (result.storageLevel.isValid) result.id else -1))
+      }
+      override def onUnpersistRDD(u: SparkListenerUnpersistRDD): Unit =
+        events.add("unpersist" -> u.rddId)
+    }
+    GraftCoreBridge.drainListenerBus(sctx)
+    sctx.addSparkListener(listener)
+    val out = try {
+      val out = graft.operators.GraphOps.forwardPush(spark, cs,
+        graft.operators.BipartiteGraph.degreesOf(cs), earlyExit = true, maxRounds = 5)
+      GraftCoreBridge.drainListenerBus(sctx)
+      out
+    } finally sctx.removeSparkListener(listener)
+    val ev = events.asScala.toVector
+    val sealAt = ev.lastIndexWhere(_._1 == "job")
+    val computed = ev.take(sealAt).collect { case ("job", id) if id >= 0 => id }.toSet
+    val freed = ev.take(sealAt).collect { case ("unpersist", id) if computed(id) => id }.toSet
+    // rounds 1-4 are released before the seal; still held are the last
+    // round and the push's edge and seed caches (which AQE may build
+    // in jobs of their own)
+    assert(freed.size >= 4 && (computed -- freed).size <= 3,
+      s"round checkpoints still held at the seal: $ev")
+    val mass = out.agg(sum($"est" + $"res")).head.getLong(0)
+    assert(mass > 0L && mass <= graft.operators.GraphOps.PprTotal)
+    sctx.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!before.contains(id)) rdd.unpersist(blocking = false)
+    }
   }
 }
